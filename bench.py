@@ -400,6 +400,7 @@ def main() -> None:
         )
         with open(hist_path, "w") as f:
             json.dump(hist[-60:], f, indent=1)
+            f.write("\n")
     except Exception as exc:
         print(f"  probe history skipped: {exc}", file=sys.stderr)
     # Per-query walls on stdout so the driver's PERF comparator can

@@ -18,6 +18,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -83,6 +84,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # NativeMethodAccessorImpl' job per probe).  Unexecuted plans only,
 # same appId keying/pruning as _TABLE_MEMO.
 _PATH_MEMO: dict[tuple[str, str], DataFrame] = {}
+# Schemas writers declared for paths they just wrote (realpath →
+# StructType).  A session-independent fact about the files, so it
+# outlives the plan memo: a re-load after an append or fold reads with
+# this schema — a driver-side directory listing, no inference job.
+_PATH_SCHEMA: dict[str, StructType] = {}
 
 
 def load_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -91,20 +97,26 @@ def load_parquet(spark: SparkSession, path: str) -> DataFrame:
     that rewrite files under ``path`` in place MUST call
     :func:`invalidate` first — the memo pins the file listing at first
     load (the enforced path ADVICE r12 asked for, instead of a
-    comment-level contract)."""
+    comment-level contract).  A schema handed to :func:`invalidate` by
+    the writer is used instead of inferring one: data columns in file
+    order, then partition columns, typed as written (``__batch_id``
+    stays BIGINT where inference would narrow it to INT)."""
     app = spark.sparkContext.applicationId
-    key = (app, os.path.realpath(path))
+    rp = os.path.realpath(path)
+    key = (app, rp)
     memo = _PATH_MEMO.get(key)
     if memo is not None:
         return memo
     for k in [k for k in _PATH_MEMO if k[0] != app]:
         del _PATH_MEMO[k]  # frames of stopped sessions are invalid
-    df = spark.read.parquet(path)
+    schema = _PATH_SCHEMA.get(rp)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     _PATH_MEMO[key] = df
     return df
 
 
-def invalidate(path: str) -> None:
+def invalidate(path: str, schema: StructType | None = None) -> None:
     """Drop every memoized plan related to ``path`` (any session): the
     enforced invalidation hook for writers that replace parquet files
     in place before re-reading them.
@@ -115,7 +127,12 @@ def invalidate(path: str) -> None:
     directory's pinned listing too — while ``/idx`` never matches the
     sibling ``/idx_v2``.  Table memos key on (sf_dir, name); they are
     matched via the table's actual file path, so
-    ``invalidate('/sf/documents.parquet')`` works as documented."""
+    ``invalidate('/sf/documents.parquet')`` works as documented.
+
+    ``schema`` is the schema the writer just wrote at ``path`` (its
+    partition columns included); the next :func:`load_parquet` reads
+    with it.  Without one, known schemas of related paths are dropped
+    too — the writer may have changed them."""
     rp = os.path.realpath(path)
 
     def _related(a: str, b: str) -> bool:
@@ -129,6 +146,10 @@ def invalidate(path: str) -> None:
         if _related(rp, os.path.join(k[1], f"{k[2]}.parquet"))
     ]:
         del _TABLE_MEMO[k]
+    for k in [k for k in _PATH_SCHEMA if _related(rp, k)]:
+        del _PATH_SCHEMA[k]
+    if schema is not None:
+        _PATH_SCHEMA[rp] = schema
 
 
 def register_tables(

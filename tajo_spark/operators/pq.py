@@ -52,8 +52,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tajo_spark.operators.similarity import (
+    SERVING_BATCH_MAX_ROWS,
     _as_double,
     _index_frame,
+    bounded_collect,
     cosine,
     dot,
     l2_normalize,
@@ -425,11 +427,13 @@ def ann_join_pq_persisted(
     # broadcast builds re-reading the checkpoint (jobs 3-4).  The
     # collect is bounded by n_queries × nprobe rows — the serving
     # REQUEST batch (each row carries its M×KSUB-double LUT, still
-    # metadata-sized) — and the rebuilt local frame makes every
-    # downstream broadcast a driver-local LocalTableScan.  Doubles
-    # round-trip bit-exactly through collect / createDataFrame, so
-    # results are unchanged.
-    qrows = qplan.collect()
+    # metadata-sized) — and every downstream broadcast reads a small
+    # ``Scan ExistingRDD`` of the rebuilt rows instead of re-running the
+    # query-side subtree.  Doubles round-trip bit-exactly through
+    # collect / createDataFrame, so results are unchanged.
+    qrows = bounded_collect(
+        qplan, SERVING_BATCH_MAX_ROWS, "ann_join_pq_persisted query probes"
+    )
     q = spark.createDataFrame(qrows, qplan.schema)
     probed = sorted({int(r.centroid_id) for r in qrows})
     qside = q.select("q_id", "centroid_id", "luts", "qc")

@@ -44,6 +44,44 @@ def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
+def _vec_lit(values) -> Column:
+    """A driver-side query vector as a plan literal ARRAY<DOUBLE>.
+
+    A one-row ``createDataFrame`` broadcast side plans as ``Scan
+    ExistingRDD`` and re-runs a Python worker plus a broadcast build on
+    every execution (~0.35-0.5 s for one row); a literal costs no job
+    and carries the identical doubles.  Built from a float64 array: one
+    py4j call (9 ms) where a Python list costs one per element (30 ms
+    at dim 64)."""
+    import numpy as np
+
+    return F.lit(np.asarray(values, dtype="float64")).cast("array<double>")
+
+
+# Driver-read ceiling for request-sized frames (query batches exploded
+# to their probe targets): well past any serving batch, far below what
+# endangers the driver heap.
+SERVING_BATCH_MAX_ROWS = 100_000
+
+
+def bounded_collect(df: DataFrame, max_rows: int, what: str) -> list:
+    """``df.collect()`` for frames that must stay request-sized: raise
+    instead of returning more than ``max_rows`` rows, naming ``what``.
+
+    The bound is checked on the collected rows, so the frame runs as
+    the same single job a plain ``collect`` would (a ``limit`` guard
+    would plan a CollectLimit that scans partitions incrementally, in
+    several jobs); the driver's ``spark.driver.maxResultSize`` still
+    bounds the bytes in flight."""
+    rows = df.collect()
+    if len(rows) > max_rows:
+        raise ValueError(
+            f"{what}: {len(rows)} rows reached the driver, over the "
+            f"{max_rows}-row bound; split the request into smaller batches"
+        )
+    return rows
+
+
 def _nonempty_or_raise(arr: str, msg: str) -> Column:
     """In-plan guard for the collected seed/centroid arrays: pass the
     array through when non-empty, raise inside the job otherwise.
@@ -275,23 +313,19 @@ def ivf_topk(emb: DataFrame, query_vec_id: int, k: int = 10,
     centers = model.clusterCenters()
     order = np.argsort([float(np.linalg.norm(c - qn)) for c in centers])
     probe = [int(i) for i in order[:nprobe]]
-    # broadcast side built from the already-collected query row — a
+    # query side is a literal of the already-collected query row — a
     # filter on emb here would re-scan the table once per probe
-    q = emb.sparkSession.createDataFrame(
-        [([float(x) for x in qrow.embedding],)], "qv ARRAY<DOUBLE>"
-    )
     return (
         assigned.filter(
             F.col("centroid_id").isin(probe)
             & (F.col("vec_id") != query_vec_id)
         )
-        .join(F.broadcast(q))
         .select(
             "vec_id",
             "centroid_id",
-            F.round(cosine(F.col("embedding"), F.col("qv")), round_to).alias(
-                "cos_sim"
-            ),
+            F.round(
+                cosine(F.col("embedding"), _vec_lit(qrow.embedding)), round_to
+            ).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(k)
@@ -344,19 +378,15 @@ def ivf_probe_persisted(
     centers = model.clusterCenters()
     order = np.argsort([float(np.linalg.norm(c - qn)) for c in centers])
     probe = [int(i) for i in order[:nprobe]]
-    q = spark.createDataFrame(
-        [([float(x) for x in query_vec],)], "qv ARRAY<DOUBLE>"
-    )
     return (
         _index_frame(spark, path)
         .filter(F.col("centroid_id").isin(probe))
-        .join(F.broadcast(q))
         .select(
             "vec_id",
             "centroid_id",
-            F.round(cosine(F.col("embedding"), F.col("qv")), round_to).alias(
-                "cos_sim"
-            ),
+            F.round(
+                cosine(F.col("embedding"), _vec_lit(query_vec)), round_to
+            ).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(k)
@@ -1125,12 +1155,12 @@ def ivf_q8_shortlist(
     acc = 0.0
     for x in qq8:
         acc += x * x
-    qn8 = float(acc) ** 0.5
-    qdf = spark.createDataFrame([(qq8, qn8)], "qq8 ARRAY<DOUBLE>, qn8 DOUBLE")
+    qn8 = F.lit(float(acc) ** 0.5)
     # norm-hoisted scoring (the semantic_dedup lesson, measured in the
     # --pq ladder): cast + candidate norm are computed ONCE per index
-    # row before the join — cosine() inline would re-fold both norms
-    # per (candidate, query) pair, tripling the per-pair work.
+    # row — cosine() inline would re-fold both norms per candidate,
+    # tripling the per-row work; the query side is all literals, so the
+    # probe is a single scan job.
     idx = (
         (index_df if index_df is not None else _index_frame(spark, path))
         .filter(F.col("centroid_id").isin(probe))
@@ -1138,13 +1168,11 @@ def ivf_q8_shortlist(
         .withColumn("__cn", F.sqrt(dot(F.col("__cv"), F.col("__cv"))))
     )
     return (
-        idx.join(F.broadcast(qdf))
-        .select(
+        idx.select(
             "vec_id",
             F.when(
-                F.col("__cn") * F.col("qn8") != 0,
-                dot(F.col("__cv"), F.col("qq8"))
-                / (F.col("__cn") * F.col("qn8")),
+                F.col("__cn") * qn8 != 0,
+                dot(F.col("__cv"), _vec_lit(qq8)) / (F.col("__cn") * qn8),
             ).alias("__q8_cos"),
         )
         .orderBy(F.desc("__q8_cos"), "vec_id")
@@ -1282,11 +1310,14 @@ def ann_join_q8_persisted(
     # builds re-reading the checkpoint (jobs 3-4).  The collect is
     # bounded by n_queries × nprobe rows — the serving REQUEST batch,
     # not the corpus — and the rebuilt local frame makes every
-    # downstream broadcast a driver-local LocalTableScan.  Values
-    # round-trip bit-exactly (IEEE doubles through collect /
+    # downstream broadcast read a small ``Scan ExistingRDD`` of the
+    # rebuilt rows instead of re-running the query-side subtree.
+    # Values round-trip bit-exactly (IEEE doubles through collect /
     # createDataFrame), and the quantization below still runs through
     # the same Spark expressions, so results are unchanged.
-    qrows = qplan.collect()
+    qrows = bounded_collect(
+        qplan, SERVING_BATCH_MAX_ROWS, "ann_join_q8_persisted query probes"
+    )
     q = spark.createDataFrame(qrows, qplan.schema)
     probed = sorted({int(r.centroid_id) for r in qrows})
     # norm-hoisted quantized scoring (measured in the --pq ladder:
@@ -1393,16 +1424,12 @@ def ivf_probe_persisted_q8(
         index_df=index_df,
     )
     ids = [int(r.vec_id) for r in shortlist.collect()]  # metadata-sized
-    qfull = spark.createDataFrame(
-        [([float(x) for x in query_vec],)], "qv ARRAY<DOUBLE>"
-    )
     return (
         emb.filter(F.col("vec_id").isin(ids))
-        .join(F.broadcast(qfull))
         .select(
             "vec_id",
             F.round(
-                cosine(F.col("embedding"), F.col("qv")), round_to
+                cosine(F.col("embedding"), _vec_lit(query_vec)), round_to
             ).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), "vec_id")

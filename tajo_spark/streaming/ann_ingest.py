@@ -13,27 +13,32 @@ the ANN index:
   vectors are only *assigned*, never re-fitted — re-fitting would
   invalidate every existing posting list);
 * each micro-batch assigns map-only against the frozen centroids
-  (model metadata broadcast by Spark ML, no shuffle), int8-quantizes,
-  and writes ``partitionBy(centroid_id, __batch_id)`` with dynamic
-  partition overwrite — a replayed batch rewrites exactly its own
-  ``(centroid, batch)`` directories, so crash/replay is idempotent
-  (same contract as the sharded-export and dedup-survivor streams);
+  (model metadata broadcast by Spark ML), int8-quantizes — both at the
+  source's parallelism — and writes through `_write_index`: a
+  ``rebalance`` on ``centroid_id`` (the one shuffle) then
+  ``partitionBy(centroid_id, __batch_id)`` with dynamic partition
+  overwrite, so each touched centroid gets one file per batch and a
+  replayed batch rewrites exactly its own ``(centroid, batch)``
+  directories — crash/replay is idempotent (same contract as the
+  sharded-export and dedup-survivor streams);
 * probes keep directory-level pruning: ``centroid_id`` stays the
   top-level partition key, so `ivf_q8_shortlist` scans only the
   ``nprobe`` probed centroid directories regardless of how many
   ingest batches have accumulated.  Small-file buildup from many
   micro-batches (one file per (centroid, batch)) is rolled up by
   `compact_index_batches`, which folds committed batches into the base
-  generation with one file per centroid (dedup-fold on ``vec_id`` so a
-  crash anywhere in the delete phase is repaired by re-running) — the
-  sustained-ingest rung in SCALE.md measures the probe-latency decay
-  across 100 batches and its restoration by one fold.
+  generation through the same writer, one file per centroid
+  (dedup-fold on ``vec_id`` so a crash anywhere in the delete phase is
+  repaired by re-running) — the sustained-ingest rung in SCALE.md
+  measures the probe-latency decay across 100 batches and its
+  restoration by one fold.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tajo_spark import catalog
 from tajo_spark.operators.similarity import (
@@ -74,19 +79,55 @@ def ivf_append_batch(
     ``(centroid_id, __batch_id)`` directories this batch produces, so
     a replay of the same ``batch_id`` rewrites rather than duplicates.
 
-    ``coalesce`` bounds the batch's write parallelism WITHOUT a shuffle
-    (file count per append = write partitions x centroids touched; the
-    ingest rung measured a 200-row batch inheriting 32 source
-    partitions and writing ~174 files). Pass ``coalesce=1`` for
-    micro-batches; leave None for bulk loads where parallel writers
-    matter more than file count — `compact_index_batches` folds the
-    residue either way."""
+    The file count per append is one per touched centroid, set by the
+    ``rebalance`` in `_write_index` whatever the source's partitioning.
+    ``coalesce`` only caps the rebalance's partition count, i.e. the
+    number of write tasks; the scan, assignment and quantization keep
+    the source's parallelism either way."""
     _write_q8_batch(
         assign_with_frozen_centroids(batch, model),
         index_path,
         batch_id,
         coalesce=coalesce,
     )
+
+
+def _write_index(
+    df: DataFrame,
+    index_path: str,
+    batch_id: int,
+    max_partitions: int | None = None,
+) -> StructType:
+    """The one writer of every ingestable index layout (int8 and PQ
+    appends, bootstraps and the compaction fold): tag the rows with
+    ``__batch_id``, ``rebalance`` on ``centroid_id``, then
+    ``partitionBy(centroid_id, __batch_id)`` with dynamic partition
+    overwrite.  Returns the written schema.
+
+    The rebalance hash-places each centroid's rows in one shuffle
+    partition and AQE coalesces the small ones, so the write leaves one
+    file per (centroid, batch) directory — a partition past the
+    advisory size is split, bounding file size at scale.  Unlike a
+    ``coalesce`` it is a stage boundary: everything upstream (source
+    scan, assignment, quantization or PQ encode) runs at the source's
+    parallelism instead of in the write task.  ``max_partitions`` caps
+    the rebalance's partition count."""
+    df = df.withColumn("__batch_id", F.lit(batch_id).cast("long"))
+    hint = ("centroid_id",) if max_partitions is None else (
+        max_partitions, "centroid_id"
+    )
+    (
+        df.hint("rebalance", *hint)
+        .write.partitionBy("centroid_id", "__batch_id")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(index_path)
+    )
+    # the probe-side plan memo pins the file listing at first load; an
+    # append adds directories a memoized plan would never see.  The
+    # written schema lets the re-load skip schema inference.
+    catalog.invalidate(index_path, schema=df.schema)
+    return df.schema
 
 
 def _write_q8_batch(
@@ -99,24 +140,16 @@ def _write_q8_batch(
     frame — shared by `ivf_append_batch` and `ivf_ingest_init` (which
     reuses `ivf_assign`'s materialized assignment instead of running a
     second full-corpus model.transform pass — r11 review)."""
-    if coalesce is not None:
-        assigned = assigned.coalesce(coalesce)
-    (
-        assigned
-        .select(
+    _write_index(
+        assigned.select(
             "vec_id",
             quantize_int8(F.col("embedding")).alias("q8"),
             "centroid_id",
-        )
-        .withColumn("__batch_id", F.lit(batch_id).cast("long"))
-        .write.partitionBy("centroid_id", "__batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(index_path)
+        ),
+        index_path,
+        batch_id,
+        max_partitions=coalesce,
     )
-    # the probe-side plan memo pins the file listing at first load; an
-    # append adds directories a memoized plan would never see
-    catalog.invalidate(index_path)
 
 
 def ivf_ingest_init(
@@ -429,10 +462,8 @@ def pq_append_batch(
     the Arrow-vectorized residual encode (operators/pq.py), written
     ``partitionBy(centroid_id, __batch_id)`` with dynamic overwrite —
     replayed batch ids rewrite exactly their own directories.
-    ``coalesce`` bounds write parallelism exactly like
-    `ivf_append_batch` (pass 1 for micro-batches — r11 review: the PQ
-    path was missing the file-count knob its docstring sibling
-    prescribes)."""
+    ``coalesce`` caps the write tasks exactly like `ivf_append_batch`;
+    one file per touched centroid either way."""
     _write_pq_batch(
         assign_with_frozen_centroids(batch, model),
         model, codebooks, index_path, batch_id, coalesce=coalesce,
@@ -452,18 +483,12 @@ def _write_pq_batch(
     from tajo_spark.operators.pq import pq_encode_codes
 
     centers = [list(c) for c in model.clusterCenters()]
-    if coalesce is not None:
-        assigned = assigned.coalesce(coalesce)
-    (
-        pq_encode_codes(assigned, centers, codebooks)
-        .withColumn("__batch_id", F.lit(batch_id).cast("long"))
-        .write.partitionBy("centroid_id", "__batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(index_path)
+    _write_index(
+        pq_encode_codes(assigned, centers, codebooks),
+        index_path,
+        batch_id,
+        max_partitions=coalesce,
     )
-    # same listing-staleness contract as _write_q8_batch
-    catalog.invalidate(index_path)
 
 
 def pq_ingest_init(
@@ -581,24 +606,18 @@ def compact_index_batches(
         full
         .filter(F.col("__batch_id") <= upto_batch_id)
         .dropDuplicates(["vec_id"])
-        .withColumn("__batch_id", F.lit(-1).cast("long"))
+        .drop("__batch_id")
     )
     # the two verification counts are full scans of the folded row set
     # — useful for the maintenance CLI / tests, pure overhead inside
     # the auto-compaction hot path (maybe_compact passes False)
     before = df.count() if verify_counts else -1
-    (
-        # repartition(centroid_id) so the fold leaves ONE file per
-        # centroid directory (r10 sustained-ingest rung: probe latency
-        # tracks FILE count, 882→5185 ms across 100 micro-batches at
-        # near-constant rows; without this the fold inherits the read
-        # parallelism and writes files-per-centroid x tasks)
-        df.repartition("centroid_id")
-        .write.partitionBy("centroid_id", "__batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(index_path)
-    )
+    # the shared writer's rebalance leaves ONE file per centroid
+    # directory (r10 sustained-ingest rung: probe latency tracks FILE
+    # count, 882→5185 ms across 100 micro-batches at near-constant
+    # rows; without it the fold inherits the read parallelism and
+    # writes files-per-centroid x tasks)
+    schema = _write_index(df, index_path, batch_id=-1)
     # delete phase via pyarrow.fs so the same code runs against an
     # object store (every sink here writes through Spark's
     # scheme-dispatched writers; the maintenance pass must match —
@@ -639,7 +658,7 @@ def compact_index_batches(
     # the fold rewrote the base and deleted batch directories: any
     # memoized probe plan now points at vanished files
     # (FAILED_READ_FILE.FILE_NOT_EXIST on the next probe) — drop it
-    catalog.invalidate(index_path)
+    catalog.invalidate(index_path, schema=schema)
     after = (
         spark.read.parquet(index_path)
         .filter(F.col("__batch_id") <= upto_batch_id)

@@ -118,6 +118,162 @@ def test_probe_prunes_and_finds_streamed_vector(spark, tmp_path):
     assert "centroid_id" in pf, plan  # pruning survives the batch layout
 
 
+def _jobs_of(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (result, the task
+    count of every stage of every job it submitted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+    return out, [
+        [i.numTasks for i in map(st.getStageInfo, job.stageIds) if i]
+        for job in jobs
+        if job
+    ]
+
+
+def _broadcast_join_shortlist(spark, index, model, qv, k, nprobe, expand):
+    """The shortlist as it was formulated before the query side became
+    plan literals: a one-row createDataFrame broadcast-joined to a
+    fresh read of the index.  Reference for bit-identity."""
+    import math
+
+    import numpy as np
+
+    qv = np.asarray(qv, dtype="float64")
+    qn = qv / max(float(np.linalg.norm(qv)), 1e-12)
+    order = np.argsort(
+        [float(np.linalg.norm(c - qn)) for c in model.clusterCenters()]
+    )
+    probe = [int(i) for i in order[:nprobe]]
+    scale = max(float(np.max(np.abs(qv))), 1e-300) / 127.0
+    qq8 = [
+        float(math.floor(abs(x / scale) + 0.5)) * (1.0 if x >= 0 else -1.0)
+        for x in qv
+    ]
+    acc = 0.0
+    for x in qq8:
+        acc += x * x
+    qdf = spark.createDataFrame(
+        [(qq8, float(acc) ** 0.5)], "qq8 ARRAY<DOUBLE>, qn8 DOUBLE"
+    )
+    cv, cn = F.col("__cv"), F.col("__cn")
+    return (
+        spark.read.parquet(index)
+        .filter(F.col("centroid_id").isin(probe))
+        .select("vec_id", sim._as_double(F.col("q8")).alias("__cv"))
+        .withColumn("__cn", F.sqrt(sim.dot(cv, cv)))
+        .join(F.broadcast(qdf))
+        .select(
+            "vec_id",
+            F.when(
+                cn * F.col("qn8") != 0,
+                sim.dot(cv, F.col("qq8")) / (cn * F.col("qn8")),
+            ).alias("__q8_cos"),
+        )
+        .orderBy(F.desc("__q8_cos"), "vec_id")
+        .limit(k * expand)
+    )
+
+
+def test_probe_right_after_append_runs_one_job(spark, tmp_path):
+    # the append hands the index memo its schema (no inference job on
+    # re-load) and the query vector is a plan literal (no Python-worker
+    # broadcast build): the whole probe is one scan job
+    emb = _corpus(spark)
+    index = str(tmp_path / "index")
+    model = AI.ivf_ingest_init(
+        emb.filter(F.col("vec_id") < 300), index, n_centroids=4
+    )
+    AI.ivf_append_batch(
+        emb.filter(F.col("vec_id") >= 300), model, index, batch_id=0,
+        coalesce=1,
+    )
+    qv = list(emb.filter(F.col("vec_id") == 450).first().embedding)
+    rows, jobs = _jobs_of(spark, "probe_after_append", lambda: sim.ivf_q8_shortlist(
+        spark, index, model, qv, k=5, nprobe=2
+    ).collect())
+    assert 450 in [r.vec_id for r in rows]
+    assert len(jobs) == 1, jobs
+
+
+def test_append_from_many_partitions_writes_one_file_per_centroid(
+    spark, tmp_path
+):
+    # a 3-partition source: assignment + quantization run 3 tasks wide
+    # (coalesce only caps the write tasks behind the rebalance), and
+    # every touched centroid still gets exactly one file for the batch
+    import glob
+
+    emb = _corpus(spark)
+    index = str(tmp_path / "index")
+    model = AI.ivf_ingest_init(
+        emb.filter(F.col("vec_id") < 200), index, n_centroids=4
+    )
+    late = emb.filter(F.col("vec_id") >= 200).repartition(3)
+    for b, cap in ((0, 1), (1, None)):
+        _, jobs = _jobs_of(spark, f"append_{b}", lambda: AI.ivf_append_batch(
+            late, model, index, batch_id=b, coalesce=cap
+        ))
+        assert 3 in [n for stages in jobs for n in stages], jobs
+        leaves = glob.glob(os.path.join(index, "centroid_id=*", f"__batch_id={b}"))
+        assert len(leaves) > 1
+        for leaf in leaves:
+            assert len(glob.glob(os.path.join(leaf, "*.parquet"))) == 1, leaf
+    # the bootstrap goes through the same writer
+    for leaf in glob.glob(os.path.join(index, "centroid_id=*", "__batch_id=-1")):
+        assert len(glob.glob(os.path.join(leaf, "*.parquet"))) == 1, leaf
+    assert spark.read.parquet(index).count() == 200 + 2 * 300
+
+
+def test_literal_probe_equals_broadcast_join_before_and_after_fold(
+    spark, tmp_path
+):
+    import numpy as np
+
+    emb = _corpus(spark)
+    index = str(tmp_path / "index")
+    model = AI.ivf_ingest_init(
+        emb.filter(F.col("vec_id") < 200), index, n_centroids=4
+    )
+    for b in (0, 1):
+        AI.ivf_append_batch(
+            emb.filter(F.col("vec_id").between(200 + 150 * b, 349 + 150 * b)),
+            model, index, batch_id=b, coalesce=1,
+        )
+    rng = np.random.default_rng(7)
+    queries = [rng.standard_normal(64).tolist() for _ in range(4)]
+    queries.append(list(emb.filter(F.col("vec_id") == 321).first().embedding))
+
+    def both():
+        got = [
+            [tuple(r) for r in sim.ivf_q8_shortlist(
+                spark, index, model, qv, k=5, nprobe=2, expand=3
+            ).collect()]
+            for qv in queries
+        ]
+        want = [
+            [tuple(r) for r in _broadcast_join_shortlist(
+                spark, index, model, qv, k=5, nprobe=2, expand=3
+            ).collect()]
+            for qv in queries
+        ]
+        return got, want
+
+    before, want_before = both()
+    assert before == want_before
+    assert AI.compact_index_batches(spark, index, upto_batch_id=1)[
+        "batch_dirs_removed"
+    ] > 0
+    after, want_after = both()
+    assert after == want_after
+    assert after == before
+
+
 def test_pq_stream_ingest_equals_frozen_batch_encode(spark, tmp_path):
     # streamed PQ appends under frozen (centroids, codebooks) must
     # produce byte-identical codes to a one-shot encode of the full

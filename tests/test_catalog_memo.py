@@ -14,13 +14,17 @@ from tajo_spark import catalog
 def _clean_memos():
     saved_t = dict(catalog._TABLE_MEMO)
     saved_p = dict(catalog._PATH_MEMO)
+    saved_s = dict(catalog._PATH_SCHEMA)
     catalog._TABLE_MEMO.clear()
     catalog._PATH_MEMO.clear()
+    catalog._PATH_SCHEMA.clear()
     yield
     catalog._TABLE_MEMO.clear()
     catalog._TABLE_MEMO.update(saved_t)
     catalog._PATH_MEMO.clear()
     catalog._PATH_MEMO.update(saved_p)
+    catalog._PATH_SCHEMA.clear()
+    catalog._PATH_SCHEMA.update(saved_s)
 
 
 def test_invalidate_table_file_path_drops_the_table_entry():
@@ -56,3 +60,16 @@ def test_invalidate_file_inside_memoized_dir_drops_the_dir_listing():
     catalog._PATH_MEMO[("app", "/data/idx")] = object()
     catalog.invalidate("/data/idx/part-0.parquet")
     assert catalog._PATH_MEMO == {}
+
+
+def test_invalidate_with_schema_records_it_and_without_drops_it():
+    # a writer hands over the schema it wrote; the plan memo is still
+    # dropped.  A later schema-less invalidation of a related path
+    # (an unknown writer) forgets it, siblings untouched.
+    catalog._PATH_MEMO[("app", "/data/idx")] = object()
+    catalog.invalidate("/data/idx", schema="S1")
+    assert catalog._PATH_MEMO == {}
+    assert catalog._PATH_SCHEMA == {"/data/idx": "S1"}
+    catalog.invalidate("/data/idx_v2", schema="S2")
+    catalog.invalidate("/data/idx/centroid_id=0")
+    assert catalog._PATH_SCHEMA == {"/data/idx_v2": "S2"}

@@ -192,3 +192,25 @@ def test_cents_memo_bounds_same_session_models(spark):
     finally:
         P._PQ_CENTS_MEMO.clear()
         P._PQ_CENTS_MEMO.update(saved)
+
+
+def test_bounded_collect_raises_past_the_serving_bound(spark, pq_index, monkeypatch):
+    # the query-side driver read is request-sized by contract; past the
+    # bound it must fail loudly and name the call site, not pull rows
+    from tajo_spark.operators.similarity import bounded_collect
+
+    path, model, codebooks, emb = pq_index
+    small = emb.select("vec_id").limit(5)
+    assert len(bounded_collect(small, 5, "five rows")) == 5
+    with pytest.raises(ValueError, match="five rows: 5 rows .* 4-row bound"):
+        bounded_collect(small, 4, "five rows")
+    # the serving path routes its read through the bound: 7 queries x
+    # nprobe 2 = 14 probe rows
+    q = _queries(emb).limit(7)
+    monkeypatch.setattr(P, "SERVING_BATCH_MAX_ROWS", 13)
+    with pytest.raises(ValueError, match="ann_join_pq_persisted query probes"):
+        P.ann_join_pq_persisted(spark, path, model, codebooks, q, emb, nprobe=2)
+    monkeypatch.setattr(P, "SERVING_BATCH_MAX_ROWS", 14)
+    assert P.ann_join_pq_persisted(
+        spark, path, model, codebooks, q, emb, k=1, nprobe=2
+    ).count() == 7

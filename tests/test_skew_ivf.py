@@ -611,6 +611,19 @@ def test_ann_q8_persisted_full_probe_equals_exact(spark, ann_queries, tmp_path):
     assert got == exact
 
 
+def test_ann_q8_persisted_bounds_the_query_read(spark, ann_queries, tmp_path,
+                                                monkeypatch):
+    emb = load_table(spark, SF_DIR, "embeddings")
+    path = str(tmp_path / "idx")
+    model = sim.ivf_persist_index_q8(emb, path, n_centroids=8)
+    # 3 queries x nprobe 2 = 6 probe rows reach the driver
+    monkeypatch.setattr(sim, "SERVING_BATCH_MAX_ROWS", 5)
+    with pytest.raises(ValueError, match="ann_join_q8_persisted query probes"):
+        sim.ann_join_q8_persisted(
+            spark, path, model, ann_queries.limit(3), emb, k=5, nprobe=2
+        )
+
+
 def test_ann_q8_persisted_prunes_index_partitions(spark, ann_queries, tmp_path):
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "idx")
