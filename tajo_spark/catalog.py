@@ -2,10 +2,12 @@
 
 Mirrors Tajo's catalog-managed external tables
 (tajo-catalog/.../CatalogService.java, TableDesc.java): a table is a
-(name, format, path, schema) tuple resolved at scan time. Here the
-format is parquet and Spark resolves schemas from footers — the same
-self-describing path Tajo special-cases in
-tajo-plan/.../rewrite/SelfDescSchemaBuildPhase.java:52.
+(name, format, path, schema) tuple, and binding one never touches
+data. Here the format is parquet and the schema is the file's own — the
+same self-describing path Tajo special-cases in
+tajo-plan/.../rewrite/SelfDescSchemaBuildPhase.java:52 — read from its
+footer on the driver (:func:`parquet_schema`) instead of by Spark's
+schema-inference job, so registering the ten tables submits no job.
 
 Scale note: views over parquet paths keep Catalyst in charge of
 predicate pushdown, column pruning and partition pruning; nothing is
@@ -14,6 +16,7 @@ materialized at registration time.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,71 +39,91 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# Plan memo: (applicationId, realpath(sf_dir), table) → DataFrame.
-# A DataFrame is an UNEXECUTED logical plan — caching it caches
-# metadata (schema probe + parquet footer/file-listing round trips,
-# measured 96 ms per spark.read.parquet call), never data or results:
-# every action on the memoized frame still scans parquet.  A
-# 100+-query bench process re-derived the identical plan hundreds of
-# times (~10s of seconds of pure py4j/listing overhead per pass).
+# Plan memo: (applicationId, realpath) → DataFrame, for tables and
+# persisted indexes alike.  A DataFrame is an UNEXECUTED logical plan —
+# caching it caches metadata (file listing, partition discovery, the
+# schema), never data or results: every action on the memoized frame
+# still scans parquet.  A 100+-query bench process re-derived the
+# identical plan hundreds of times, and each derivation inferred the
+# schema in a Spark job: the 96 ms per ``spark.read.parquet`` call
+# measured in r12 was mostly that job, and r13 saw it as a dedicated
+# 'parquet at NativeMethodAccessorImpl' job on every index probe.
+# Schemas now come from footers on the driver (:func:`parquet_schema`),
+# so a miss costs a listing and a footer read, not a job.
 # Keyed by applicationId so frames from a stopped session are never
-# served; entries from older sessions are pruned on first miss.
-# Caveat (static test data holds this by construction): the cached
-# frame pins its file listing at creation — call sites that rewrite a
-# table's files in place must bypass the memo via spark.read directly.
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    key = (app, os.path.realpath(sf_dir), name)
-    memo = _TABLE_MEMO.get(key)
-    if memo is not None:
-        return memo
-    for k in [k for k in _TABLE_MEMO if k[0] != app]:
-        del _TABLE_MEMO[k]  # frames of stopped sessions are invalid
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    # events.ts is parquet TIMESTAMP(NANOS); with nanosAsLong (session.py)
-    # it arrives as a long of epoch-nanos — rebuild the µs timestamp
-    # (floor division matches DuckDB's ns→µs truncation).
-    ts_type = dict(df.dtypes).get("ts")
-    if name == "events" and ts_type == "bigint":
-        # integer DIV — double division loses precision on epoch-nanos
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif name == "events" and ts_type == "timestamp_ntz":
-        # parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) arrives as
-        # TIMESTAMP_NTZ, which functions like unix_millis reject; with
-        # the session timezone pinned to UTC (session.py) the cast to
-        # session-TZ timestamp is value-identical.
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _TABLE_MEMO[key] = df
-    return df
-
-
-# Same plan-metadata memo for non-table parquet paths (persisted ANN
-# indexes): the probe functions re-derived the identical index plan —
-# one directory listing + partition-schema inference JOB — on every
-# probe call (r13; visible as a dedicated 'parquet at
-# NativeMethodAccessorImpl' job per probe).  Unexecuted plans only,
-# same appId keying/pruning as _TABLE_MEMO.
+# served; entries from older sessions are pruned on first miss.  The
+# frame pins its file listing at creation: writers that replace files
+# under a memoized path call :func:`invalidate` first.
 _PATH_MEMO: dict[tuple[str, str], DataFrame] = {}
 # Schemas writers declared for paths they just wrote (realpath →
 # StructType).  A session-independent fact about the files, so it
 # outlives the plan memo: a re-load after an append or fold reads with
-# this schema — a driver-side directory listing, no inference job.
+# this schema instead of one read from a footer.
 _PATH_SCHEMA: dict[str, StructType] = {}
 
 
-def load_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Memoized ``spark.read.parquet(path)`` for paths whose files are
-    immutable once written (built-once persisted indexes).  Call sites
-    that rewrite files under ``path`` in place MUST call
-    :func:`invalidate` first — the memo pins the file listing at first
-    load (the enforced path ADVICE r12 asked for, instead of a
-    comment-level contract).  A schema handed to :func:`invalidate` by
-    the writer is used instead of inferring one: data columns in file
-    order, then partition columns, typed as written (``__batch_id``
-    stays BIGINT where inference would narrow it to INT)."""
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, read from one
+    footer on the driver — no Spark job.
+
+    Spark's non-merging inference (``ParquetUtils.inferSchema``) runs a
+    one-task job that reads a single footer: the file itself for a file
+    path; for a directory a ``_common_metadata`` or ``_metadata``
+    summary if one exists, else the first data file by path.  This
+    reads that same footer with Spark's own reader and converter
+    (``ParquetFileFormat.readSchema``), so the session conf applies as
+    it does in the job (``nanosAsLong``, ``inferTimestampNTZ``, the
+    Spark row-metadata key).  A directory's files and partition columns
+    come from Spark's own file index, built under an empty schema so it
+    lists and discovers partitions but infers nothing; partition
+    columns are merged in as ``HadoopFsRelation`` does.  A footer that
+    cannot be read raises, as the inference job does."""
+    jvm, jss = spark._jvm, spark._jsparkSession
+    conf = jss.sessionState().newHadoopConf()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    status = root.getFileSystem(conf).getFileStatus(root)
+    seqs = jvm.scala.jdk.javaapi.CollectionConverters
+    if status.isDirectory():
+        relation = (
+            spark.read.schema(StructType()).parquet(path)
+            ._jdf.logicalPlan().relation()
+        )
+        files = sorted(
+            seqs.asJava(relation.location().allFiles()),
+            key=lambda f: f.getPath().toString(),
+        )
+        named = {n: [f for f in files if f.getPath().getName() == n]
+                 for n in ("_common_metadata", "_metadata")}
+        touch = (
+            named["_common_metadata"] or named["_metadata"]
+            or [f for f in files if f.getPath().getName() not in named]
+        )
+        if not touch:
+            raise FileNotFoundError(f"no parquet files under {path}")
+        partitions = relation.partitionSchema()
+    else:
+        touch = [status]
+        partitions = jvm.org.apache.spark.sql.types.StructType()
+    parquet = getattr(
+        getattr(
+            jvm.org.apache.spark.sql.execution.datasources.parquet,
+            "ParquetFileFormat$",
+        ),
+        "MODULE$",
+    )
+    footers = parquet.readParquetFootersInParallel(
+        conf, seqs.asScala(touch[:1]).toSeq(), False
+    )
+    data_schema = parquet.readSchema(footers, jss).get().asNullable()
+    full = jvm.org.apache.spark.sql.execution.datasources.PartitioningUtils \
+        .mergeDataAndPartitionSchema(
+            data_schema, partitions,
+            jss.sessionState().conf().caseSensitiveAnalysis(),
+        )._1()
+    return StructType.fromJson(json.loads(full.json()))
+
+
+def _load(spark: SparkSession, path: str, events: bool = False) -> DataFrame:
     app = spark.sparkContext.applicationId
     rp = os.path.realpath(path)
     key = (app, rp)
@@ -110,10 +133,47 @@ def load_parquet(spark: SparkSession, path: str) -> DataFrame:
     for k in [k for k in _PATH_MEMO if k[0] != app]:
         del _PATH_MEMO[k]  # frames of stopped sessions are invalid
     schema = _PATH_SCHEMA.get(rp)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    df = reader.parquet(path)
+    if schema is None:
+        schema = parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    ts_type = events and dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        # events.ts is parquet TIMESTAMP(NANOS); with nanosAsLong
+        # (session.py) it arrives as a long of epoch-nanos — rebuild the
+        # µs timestamp (floor division matches DuckDB's ns→µs
+        # truncation; integer DIV — double division loses precision on
+        # epoch-nanos).
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif ts_type == "timestamp_ntz":
+        # parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) arrives as
+        # TIMESTAMP_NTZ, which functions like unix_millis reject; with
+        # the session timezone pinned to UTC (session.py) the cast to
+        # session-TZ timestamp is value-identical.
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     _PATH_MEMO[key] = df
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Memoized read of table ``name`` under ``sf_dir`` (see
+    :func:`_load`); ``events.ts`` is normalized to a session-TZ
+    timestamp whatever its parquet physical type."""
+    return _load(
+        spark, os.path.join(sf_dir, f"{name}.parquet"), name == "events"
+    )
+
+
+def load_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Memoized ``spark.read.parquet(path)`` for paths whose files are
+    immutable once written (built-once persisted indexes).  Call sites
+    that rewrite files under ``path`` in place MUST call
+    :func:`invalidate` first — the memo pins the file listing at first
+    load (the enforced path ADVICE r12 asked for, instead of a
+    comment-level contract).  A schema handed to :func:`invalidate` by
+    the writer is used instead of the footer's: data columns in file
+    order, then partition columns, typed as written (``__batch_id``
+    stays BIGINT where discovery would narrow it to INT)."""
+    return _load(spark, path)
 
 
 def invalidate(path: str, schema: StructType | None = None) -> None:
@@ -122,12 +182,10 @@ def invalidate(path: str, schema: StructType | None = None) -> None:
     in place before re-reading them.
 
     "Related" is path-separator-aware containment in EITHER direction:
-    invalidating a directory drops memos of everything inside it, and
-    invalidating one file inside a memoized directory drops that
-    directory's pinned listing too — while ``/idx`` never matches the
-    sibling ``/idx_v2``.  Table memos key on (sf_dir, name); they are
-    matched via the table's actual file path, so
-    ``invalidate('/sf/documents.parquet')`` works as documented.
+    invalidating a directory drops memos of everything inside it (a
+    table's sf dir drops each of its tables), and invalidating one file
+    inside a memoized directory drops that directory's pinned listing
+    too — while ``/idx`` never matches the sibling ``/idx_v2``.
 
     ``schema`` is the schema the writer just wrote at ``path`` (its
     partition columns included); the next :func:`load_parquet` reads
@@ -140,12 +198,6 @@ def invalidate(path: str, schema: StructType | None = None) -> None:
 
     for k in [k for k in _PATH_MEMO if _related(rp, k[1])]:
         del _PATH_MEMO[k]
-    for k in [
-        k
-        for k in _TABLE_MEMO
-        if _related(rp, os.path.join(k[1], f"{k[2]}.parquet"))
-    ]:
-        del _TABLE_MEMO[k]
     for k in [k for k in _PATH_SCHEMA if _related(rp, k)]:
         del _PATH_SCHEMA[k]
     if schema is not None:

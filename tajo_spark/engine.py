@@ -650,6 +650,7 @@ class Engine:
                 # columns (__pd_sum(x)) and widen integral aggregates
                 # to double; restore names and types positionally
                 orig = df.schema
+                agg_fallback.register_twins(self.spark)
                 df = self.spark.sql(
                     agg_fallback.rewrite_uniform_pandas(translated)
                 )

@@ -67,6 +67,11 @@ _TWINS: dict[str, tuple[str, object]] = {
 
 
 def register_twins(spark: SparkSession) -> None:
+    """Register the twins on ``spark`` unless they are there already.
+    Called when the fallback first fires on a session, so sessions that
+    never mix aggregates never pay for the nine registrations."""
+    if spark.catalog.functionExists(next(iter(_TWINS))):
+        return
     for name, (ret, fn) in _TWINS.items():
         def make(f):
             # Series → scalar hint marks this as a grouped-agg UDF;

@@ -181,7 +181,9 @@ def register_all(spark: SparkSession) -> list[str]:
     ``to_char(ts, fmt)`` and ``div(a, b)`` need no registration: Spark 4
     ships both natively (to_char takes Java datetime patterns — the
     dialect shim translates PostgreSQL codes in SQL literals;
-    ToCharTimestamp.java parity lives in plans/dialect.py).
+    ToCharTimestamp.java parity lives in plans/dialect.py).  The pandas
+    aggregate twins are registered by the mixed-UDAF fallback itself,
+    on the first statement that needs them (agg_fallback.register_twins).
     """
     names = []
     for name, (sig, ret, body) in SQL_FUNCTIONS.items():
@@ -190,7 +192,4 @@ def register_all(spark: SparkSession) -> list[str]:
             f"RETURNS {ret} RETURN {body}"
         )
         names.append(name)
-    from tajo_spark.functions.agg_fallback import register_twins
-
-    register_twins(spark)
     return names

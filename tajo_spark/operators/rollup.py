@@ -12,13 +12,21 @@ replaces exactly the partitions present in the written frame and leaves
 every other partition's files untouched (pinned in
 tests/test_rollup.py by file-identity). Cost per batch is
 O(|affected partitions|), independent of table history; the affected
-date set ships as a broadcast semi-join so the source scan can prune.
+date set ships as an ``isin`` literal list so the source scan can prune.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from tajo_spark.operators.similarity import bounded_collect
+
+# Most distinct dates one batch may refresh — the same default cap Hive
+# puts on the partitions one dynamic-partition insert may create
+# (hive.exec.max.dynamic.partitions).  Beyond it the date keys are no
+# longer metadata-sized and the isin list no longer a cheap predicate.
+MAX_BATCH_DATES = 1000
 
 
 def rollup_events(events: DataFrame) -> DataFrame:
@@ -52,7 +60,8 @@ def maintain_rollup(
     operation idempotent and late-data-safe.
 
     The affected DATE KEYS (not data) are collected to the driver: the
-    set is bounded by partitions-per-batch, and an `isin` literal list
+    set is bounded by partitions-per-batch (enforced: more than
+    ``MAX_BATCH_DATES`` raises), and an `isin` literal list
     is the only predicate shape that pushes down to prune a
     date-partitioned source (a semi-join on `to_date(ts)` cannot).
     NULL event times refresh the null-date partition via an explicit
@@ -60,9 +69,11 @@ def maintain_rollup(
     """
     dates = [
         r.event_date
-        for r in batch.select(F.to_date("ts").alias("event_date"))
-        .distinct()
-        .collect()
+        for r in bounded_collect(
+            batch.select(F.to_date("ts").alias("event_date")).distinct(),
+            MAX_BATCH_DATES,
+            "maintain_rollup affected dates",
+        )
     ]
     if not dates:
         return 0

@@ -42,6 +42,7 @@ from pyspark.sql.types import StructType
 
 from tajo_spark import catalog
 from tajo_spark.operators.similarity import (
+    bounded_collect,
     ivf_assign,
     l2_normalize,
     quantize_int8,
@@ -296,8 +297,12 @@ def neardup_gate_batch(
     probes = q.join(q8, "vec_id").localCheckpoint()  # reused 3x below
     probed = [
         int(r.centroid_id)
-        for r in probes.select("centroid_id").distinct().collect()
-    ]  # metadata-sized: bounded by n_centroids
+        for r in bounded_collect(
+            probes.select("centroid_id").distinct(),
+            len(centers),
+            "neardup_gate_batch probed centroids",
+        )
+    ]  # metadata-sized: at most the model's k
     cos8 = lambda cv, cn, qv, qn: F.when(  # noqa: E731
         cn * qn != 0, dot(cv, qv) / (cn * qn)
     ).otherwise(F.lit(0.0))

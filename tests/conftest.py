@@ -23,6 +23,20 @@ def spark():
     yield spark
 
 
+@pytest.fixture()
+def clean_catalog_memos():
+    """Run a test on empty catalog memos, restoring them afterwards."""
+    from tajo_spark import catalog
+
+    saved = [(m, dict(m)) for m in (catalog._PATH_MEMO, catalog._PATH_SCHEMA)]
+    for memo, _ in saved:
+        memo.clear()
+    yield
+    for memo, entries in saved:
+        memo.clear()
+        memo.update(entries)
+
+
 @pytest.fixture(scope="session")
 def ddb():
     con = duckdb.connect()

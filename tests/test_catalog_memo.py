@@ -1,48 +1,49 @@
 """Plan-memo invalidation semantics (catalog.invalidate, r13 review).
 
-Pure-dict tests: invalidate() operates on the module-level memos, so
-these seed fake entries and assert exactly which keys survive — no
-Spark session needed.
+Mostly pure-dict tests: invalidate() operates on the module-level
+memos, so these seed fake entries and assert exactly which keys
+survive — no Spark session needed.
 """
+
+import os
 
 import pytest
 
 from tajo_spark import catalog
+from tests.conftest import SF_DIR
 
-
-@pytest.fixture(autouse=True)
-def _clean_memos():
-    saved_t = dict(catalog._TABLE_MEMO)
-    saved_p = dict(catalog._PATH_MEMO)
-    saved_s = dict(catalog._PATH_SCHEMA)
-    catalog._TABLE_MEMO.clear()
-    catalog._PATH_MEMO.clear()
-    catalog._PATH_SCHEMA.clear()
-    yield
-    catalog._TABLE_MEMO.clear()
-    catalog._TABLE_MEMO.update(saved_t)
-    catalog._PATH_MEMO.clear()
-    catalog._PATH_MEMO.update(saved_p)
-    catalog._PATH_SCHEMA.clear()
-    catalog._PATH_SCHEMA.update(saved_s)
+pytestmark = pytest.mark.usefixtures("clean_catalog_memos")
 
 
 def test_invalidate_table_file_path_drops_the_table_entry():
-    # table memos key on (app, sf_dir, name); the documented contract
-    # is that invalidating the table's FILE path works
-    catalog._TABLE_MEMO[("app", "/data/sf", "documents")] = object()
-    catalog._TABLE_MEMO[("app", "/data/sf", "events")] = object()
+    # tables and indexes share one memo keyed on the realpath read, so
+    # invalidating a table's FILE path drops exactly that table
+    catalog._PATH_MEMO[("app", "/data/sf/documents.parquet")] = object()
+    catalog._PATH_MEMO[("app", "/data/sf/events.parquet")] = object()
     catalog.invalidate("/data/sf/documents.parquet")
-    assert ("app", "/data/sf", "documents") not in catalog._TABLE_MEMO
-    assert ("app", "/data/sf", "events") in catalog._TABLE_MEMO
+    assert ("app", "/data/sf/documents.parquet") not in catalog._PATH_MEMO
+    assert ("app", "/data/sf/events.parquet") in catalog._PATH_MEMO
 
 
 def test_invalidate_sf_dir_drops_every_table_under_it():
-    catalog._TABLE_MEMO[("app", "/data/sf", "documents")] = object()
-    catalog._TABLE_MEMO[("app", "/data/sf", "events")] = object()
-    catalog._TABLE_MEMO[("app", "/data/other", "events")] = object()
+    catalog._PATH_MEMO[("app", "/data/sf/documents.parquet")] = object()
+    catalog._PATH_MEMO[("app", "/data/sf/events.parquet")] = object()
+    catalog._PATH_MEMO[("app", "/data/other/events.parquet")] = object()
     catalog.invalidate("/data/sf")
-    assert list(catalog._TABLE_MEMO) == [("app", "/data/other", "events")]
+    assert list(catalog._PATH_MEMO) == [("app", "/data/other/events.parquet")]
+
+
+def test_load_table_keys_the_memo_on_the_table_file(spark):
+    # load_table and load_parquet are one memo: the table's entry is
+    # its file's realpath, so the path rule above applies to tables
+    df = catalog.load_table(spark, SF_DIR, "nation")
+    path = os.path.realpath(os.path.join(SF_DIR, "nation.parquet"))
+    app = spark.sparkContext.applicationId
+    assert list(catalog._PATH_MEMO) == [(app, path)]
+    assert catalog._PATH_MEMO[(app, path)] is df
+    assert catalog.load_table(spark, SF_DIR, "nation") is df
+    catalog.invalidate(SF_DIR)
+    assert catalog._PATH_MEMO == {}
 
 
 def test_invalidate_is_path_separator_aware_on_siblings():

@@ -107,6 +107,31 @@ def test_mixed_udaf_fallback_matches_jvm_results(spark, code_dir):
         assert (a, c, float(sd)) == (ja, jc, float(jsd))
 
 
+def test_mixed_udaf_fallback_registers_twins_on_first_use(spark, code_dir):
+    """Engine construction registers no pandas twins; the fallback
+    registers them on a session the first time it fires there."""
+    from tajo_spark.engine import Engine
+    from tajo_spark.functions import agg_fallback
+
+    fresh = spark.newSession()  # own temp-function registry
+    twin = next(iter(agg_fallback._TWINS))
+    load_python_udfs(fresh, code_dir)
+    eng = Engine(fresh)
+    assert not fresh.catalog.functionExists(twin)
+    fresh.createDataFrame(
+        [(i % 2, float(i)) for i in range(10)], "g INT, v DOUBLE"
+    ).createOrReplaceTempView("fb_fresh")
+    got = {
+        r.g: (r.a, r.c)
+        for r in eng.execute_sql(
+            "SELECT g, p90(v) AS p, avg(v) AS a, count(*) AS c "
+            "FROM fb_fresh GROUP BY g"
+        ).collect()
+    }
+    assert got == {0: (4.0, 5), 1: (5.0, 5)}
+    assert all(fresh.catalog.functionExists(n) for n in agg_fallback._TWINS)
+
+
 def test_zero_arg_udaf_bridge(spark, code_dir):
     """countpy()-style zero-arg UDAF calls (reference controller.py
     feeds whole rows) run via constant injection, mixed or not."""

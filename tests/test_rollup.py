@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tajo_spark.operators import rollup
@@ -97,6 +98,21 @@ def test_maintain_refreshes_null_ts_partition(spark, tmp_path):
     assert n == 1
     got = spark.read.parquet(path).filter(F.col("event_date").isNull()).collect()
     assert len(got) == 1 and got[0].n == 2  # both null-ts rows counted
+
+
+def test_maintain_bounds_the_affected_dates_read(spark, tmp_path,
+                                                monkeypatch):
+    # the affected date keys are collected to the driver; past
+    # MAX_BATCH_DATES the refresh raises instead of pulling them
+    path = str(tmp_path / "rollup4")
+    rows = _rows(1, 3) + _rows(2, 3, start_id=100)
+    src = _events(spark, rows)
+    rollup.build_rollup(src, path)
+    monkeypatch.setattr(rollup, "MAX_BATCH_DATES", 1)
+    with pytest.raises(ValueError, match="maintain_rollup affected dates"):
+        rollup.maintain_rollup(spark, src, src, path)
+    monkeypatch.setattr(rollup, "MAX_BATCH_DATES", 2)
+    assert rollup.maintain_rollup(spark, src, src, path) == 2
 
 
 def test_corpus_drift_report_detects_shift_and_nulls(spark):

@@ -986,6 +986,31 @@ def test_gated_ingest_replay_is_idempotent_and_gates_same(spark, tmp_path):
     assert "centroid_id" in pf and "__batch_id" in pf, plan
 
 
+def test_neardup_gate_bounds_the_probed_centroid_read(spark, tmp_path,
+                                                     monkeypatch):
+    # the probed centroid ids are the gate's one driver read; it goes
+    # through bounded_collect with the model's k as the bound
+    from tajo_spark.streaming import ann_ingest as AI
+
+    boot, b0, _ = _gate_corpus(spark)
+    index = str(tmp_path / "index")
+    model = AI.ivf_ingest_init(boot, index, n_centroids=8)
+    calls = []
+    real = AI.bounded_collect
+
+    def spy(df, max_rows, what):
+        rows = real(df, max_rows, what)
+        calls.append((max_rows, what, len(rows)))
+        return rows
+
+    monkeypatch.setattr(AI, "bounded_collect", spy)
+    AI.neardup_gate_batch(b0, model, index, batch_id=0).count()
+    assert [c[:2] for c in calls] == [
+        (8, "neardup_gate_batch probed centroids")
+    ]
+    assert 1 <= calls[0][2] <= 8
+
+
 def test_compact_index_batches_single_file_per_centroid(spark, tmp_path):
     """Sustained-ingest maintenance (r09 VERDICT task 6): many
     micro-batch appends accrete one file per (centroid, batch);
