@@ -3,7 +3,8 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 
-Mirrors the reference's harness shape (BenchmarkSet.perform,
+Every warm-up and measured run goes through tajo_spark/profile.py,
+which mirrors the reference's harness shape (BenchmarkSet.perform,
 tajo-core/.../benchmark/BenchmarkSet.java:115-129: wall-clock around
 executeQuery) but executes through the noop sink so timing covers the
 full distributed plan without driver-side result transfer.
@@ -16,7 +17,9 @@ import os
 import re
 import sys
 import time
+from functools import partial
 
+from tajo_spark import profile
 from tajo_spark.queries.registry import all_queries
 from tajo_spark.session import build_spark
 
@@ -201,6 +204,16 @@ def _host_speed_probe(spark) -> float:
     return round(best, 3)
 
 
+def host_factor(probe_sec: float, ref, max_factor: float = 3.0) -> float:
+    """The host-speed factor: clamp(probe_sec / ref, 1, max_factor),
+    rounded to the millisecond. ``ref`` is the probe's reference time
+    (``_probe_reference_sec``); without a positive one the host is
+    uncalibrated and the factor is 1."""
+    if not isinstance(ref, (int, float)) or ref <= 0:
+        return 1.0
+    return round(min(max_factor, max(1.0, probe_sec / ref)), 3)
+
+
 def budget_breaches(
     budgets: dict,
     timings: dict[str, float],
@@ -208,7 +221,7 @@ def budget_breaches(
     max_factor: float = 3.0,
 ) -> tuple[list[str], float]:
     """(breach names, applied host factor) under the host-normalized
-    budget rule: factor = clamp(probe / _probe_reference_sec, 1,
+    budget rule: factor = host_factor(probe, _probe_reference_sec,
     max_factor), breach when timing > budget * factor. Keys starting
     with '_' are metadata, never budgets. Pure so tests can pin the
     semantics. ``max_factor`` drops to 1.5 when the caller finds no
@@ -216,20 +229,17 @@ def budget_breaches(
     ENGINE regression slows the probe and the queries alike, and an
     uncapped stretch would mask exactly the scheduler/shuffle
     regressions the normalization exists to distinguish)."""
-    host_factor = 1.0
-    probe_ref = budgets.get("_probe_reference_sec")
-    if isinstance(probe_ref, (int, float)) and probe_ref > 0:
-        host_factor = round(
-            min(max_factor, max(1.0, probe_sec / probe_ref)), 3
-        )
+    factor = host_factor(
+        probe_sec, budgets.get("_probe_reference_sec"), max_factor
+    )
     names = [
         name
         for name, limit in budgets.items()
         if not name.startswith("_")
         and isinstance(limit, (int, float))
-        and timings.get(name, 0.0) > limit * host_factor
+        and timings.get(name, 0.0) > limit * factor
     ]
-    return names, host_factor
+    return names, factor
 
 
 def _load_ratio() -> float:
@@ -268,44 +278,22 @@ def main() -> None:
     )
 
     # Then compile each headline query's own generated classes at the
-    # smallest SF (whole-stage-codegen source is a function of the plan,
-    # not the data, so the Janino/JIT class cache carries over while the
-    # measured SF's data stays untouched — cold-compile was 2-3 s/query
-    # for the wide pipelines, pure single-run artifact: at production
-    # scale a query compiles once and runs for minutes). noop sink, so
-    # nothing is cached but code.
+    # smallest SF (profile.warm: two passes, then gc and settle) —
+    # cold-compile was 2-3 s/query for the wide pipelines, a pure
+    # single-run artifact: at production scale a query compiles once
+    # and runs for minutes.
     # The session pins spark.sql.codegen.cache.maxEntries=2000 (default
-    # 100): with the default cache, this 40-query warmup evicts each
-    # query's generated classes before its measured run and every
-    # measurement re-pays Janino compilation (~3-10 s for the wide
-    # pipelines — dedup_minhash_pairs measured 12.2 s evicted vs ~2 s
-    # cached). Warming everything first, then measuring, also lets the
-    # C2 JIT settle so compilation threads don't steal cycles from the
-    # measured runs.
+    # 100): with the default cache, this warmup evicts each query's
+    # generated classes before its measured run and every measurement
+    # re-pays Janino compilation (~3-10 s for the wide pipelines —
+    # dedup_minhash_pairs measured 12.2 s evicted vs ~2 s cached).
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
     if os.path.isdir(warm_dir) and os.path.realpath(warm_dir) != os.path.realpath(
         sf_dir
     ):
-        # Two passes: the first compiles every codegen unit, the second
-        # runs against a hot cache and gives the C2 JIT a profile to
-        # finish tiering; without it the first measured queries absorb
-        # the async-compilation backlog (tpch_q2 measured 7.4 s right
-        # after a single pass vs ~1.6 s settled).
-        for _ in range(2):
-            for name in HEADLINE:
-                try:
-                    registry[name].spark(spark, warm_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                except Exception as exc:  # warmup must never fail the bench
-                    print(f"  warmup {name} skipped: {exc}", file=sys.stderr)
-        # drain background JIT/GC before the first timing: the 2×42
-        # warmup executions queue hundreds of C2 compilation tasks whose
-        # threads otherwise steal cycles from whichever queries get
-        # measured first (dedup_simhash measured 5.0 s mid-bench vs
-        # 1.2 s with only its own warmup in the session)
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(8)
+        builds = {n: partial(registry[n].spark, spark, warm_dir) for n in HEADLINE}
+        for name, exc in profile.warm(spark, builds).items():
+            print(f"  warmup {name} skipped: {exc}", file=sys.stderr)
     # no tiny SF available → skip per-query warmup rather than scanning
     # the measured SF untimed (which would pre-warm the page cache and
     # make timings incomparable across hosts)
@@ -322,18 +310,10 @@ def main() -> None:
     timings: dict[str, float] = {}
     for _pass in range(2):
         for name in HEADLINE:
-            spec = registry[name]
-            t0 = time.perf_counter()
-            df = spec.spark(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            t = round(time.perf_counter() - t0, 3)
+            build = partial(registry[name].spark, spark, sf_dir)
+            t = round(profile.run(spark, build).wall_s, 3)
             timings[name] = min(timings.get(name, t), t)
             print(f"  pass{_pass} {name}: {t:.3f}s", file=sys.stderr)
-            # drop localCheckpoint blocks the iterative/staged queries
-            # leave behind — 53 queries x 2 passes otherwise accumulate
-            # storage memory and later queries pay the GC bill
-            for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-                rdd.unpersist()
 
     total = round(sum(timings.values()), 3)
     full = {

@@ -18,6 +18,7 @@ shuffle-partition count self-tuning at 100 TB.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -143,6 +144,30 @@ def build_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def released_checkpoints(spark: SparkSession):
+    """Scope the lifetime of the blocks a piece of work persists: on
+    exit, normal or by exception, unpersist every RDD persisted on
+    ``spark`` since the scope was entered (the ``localCheckpoint``
+    stages of a query or of one micro-batch). An exception still
+    propagates.
+
+    Relies on nothing else persisting on this session while the scope
+    is open: what another thread persists in that window is released
+    too. The bench, the measurement tools and each stream's
+    micro-batch handler run one piece of work at a time, so they meet
+    it."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    try:
+        yield
+    finally:
+        persisted = jsc.getPersistentRDDs()
+        for rid in list(persisted.keySet()):
+            if rid not in before:
+                persisted.get(rid).unpersist()
 
 
 def cluster_conf(

@@ -31,6 +31,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tajo_spark.operators.similarity import bounded_collect
+
 _META = "_regions.json"
 
 
@@ -59,11 +61,12 @@ def write_table(
     ranged.write.partitionBy("__region").mode("overwrite").parquet(path)
     # region bounds from a key-column-only scan of what was written
     # (column-pruned; metadata-sized result: one row per region)
-    bounds = (
+    bounds = bounded_collect(
         df.sparkSession.read.parquet(path)
         .groupBy("__region")
-        .agg(F.min(key_col).alias("min_key"), F.max(key_col).alias("max_key"))
-        .collect()
+        .agg(F.min(key_col).alias("min_key"), F.max(key_col).alias("max_key")),
+        regions,
+        "region bounds",
     )
     meta = sorted(
         (

@@ -47,6 +47,7 @@ from tajo_spark.operators.similarity import (
     l2_normalize,
     quantize_int8,
 )
+from tajo_spark.streaming.pipeline import foreach_batch
 
 
 def assign_with_frozen_centroids(batch: DataFrame, model) -> DataFrame:
@@ -204,11 +205,7 @@ def ivf_ingest_stream(
             return
         ivf_append_batch(batch, model, index_path, batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch(stream_df, process_batch, checkpoint)
 
 
 # ---------------------------------------------------------------------------
@@ -415,12 +412,8 @@ def gated_ingest_stream(
     unaffected (pinned in tests/test_ann_ingest.py)."""
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        persisted_before = set(
-            spark.sparkContext._jsc.getPersistentRDDs().keySet()
-        )
         maybe_compact(  # before the empty return — see ivf_ingest_stream
-            spark, index_path, batch_id,
+            batch.sparkSession, index_path, batch_id,
             compact_every=compact_every, max_batch_dirs=max_batch_dirs,
         )
         if batch.isEmpty():
@@ -429,21 +422,8 @@ def gated_ingest_stream(
             batch, model, index_path, batch_id, tau=tau, nprobe=nprobe,
             coalesce=coalesce,
         )
-        # drop this batch's localCheckpoint blocks (gate probes +
-        # survivors): an always-on stream would otherwise accumulate
-        # storage memory per micro-batch until the executors GC-thrash
-        # — same cleanup contract as incremental_dedup_stream
-        # (streaming/pipeline.py; r11 review)
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet()):
-            if rid not in persisted_before:
-                jmap.get(rid).unpersist()
 
-    return (
-        stream_df.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch(stream_df, process_batch, checkpoint)
 
 
 # ---------------------------------------------------------------------------
@@ -549,11 +529,7 @@ def pq_ingest_stream(
             return
         pq_append_batch(batch, model, codebooks, index_path, batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch(stream_df, process_batch, checkpoint)
 
 
 def compact_index_batches(

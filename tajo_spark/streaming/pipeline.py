@@ -24,6 +24,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tajo_spark.session import released_checkpoints
+
 SESSION_GAP = "30 minutes"
 DEFAULT_WATERMARK = "1 hour"
 
@@ -175,6 +177,27 @@ def run_to_memory(sdf: DataFrame, name: str,
     q.stop()
     q.awaitTermination(30)
     return sdf.sparkSession.table(name)
+
+
+def foreach_batch(stream_df: DataFrame, process, checkpoint: str):
+    """The unstarted ``availableNow`` writer every micro-batch sink
+    here returns (the caller ``.start()``s it): ``process(batch_df,
+    batch_id)`` runs inside ``released_checkpoints``, so whatever a
+    batch persists (its ``localCheckpoint`` stages) is released when
+    the batch ends, by early return or by exception too — an always-on
+    stream would otherwise accumulate storage memory per micro-batch
+    until the executors GC-thrash. The checkpoint tracks source
+    progress, so the writer is restartable."""
+
+    def scoped(batch_df: DataFrame, batch_id: int) -> None:
+        with released_checkpoints(batch_df.sparkSession):
+            process(batch_df, batch_id)
+
+    return (
+        stream_df.writeStream.foreachBatch(scoped)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+    )
 
 
 # --------------------------------------------------------------------------
@@ -444,9 +467,6 @@ def incremental_dedup_stream(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        persisted_before = set(
-            spark.sparkContext._jsc.getPersistentRDDs().keySet()
-        )
         if any(
             f.base_name.endswith(".parquet")
             or f.base_name.startswith("band_id=")
@@ -477,19 +497,8 @@ def incremental_dedup_stream(
             survivors.select("doc_id"), "doc_id", "left_semi"
         )
         _dedup.write_banded_signatures(surv_sigs, store_path)
-        # drop this batch's localCheckpoint blocks (batch signatures +
-        # survivors): an always-on stream would otherwise accumulate
-        # storage memory per micro-batch until the executors GC-thrash
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet()):
-            if rid not in persisted_before:
-                jmap.get(rid).unpersist()
 
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch(docs_stream, process_batch, checkpoint_path)
 
 
 def shard_export_stream(
@@ -536,9 +545,6 @@ def shard_export_stream(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        persisted_before = set(
-            spark.sparkContext._jsc.getPersistentRDDs().keySet()
-        )
         state_path = f"{export_path}/_state"
         base = 0
         prior = None
@@ -576,18 +582,8 @@ def shard_export_stream(
                 [(batch_id, base, after)],
                 "batch_id LONG, base_bytes LONG, total_bytes_after LONG",
             ).write.mode("append").parquet(state_path)
-        # free this batch's localCheckpoint blocks (an always-on stream
-        # would otherwise accumulate storage memory per micro-batch)
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet()):
-            if rid not in persisted_before:
-                jmap.get(rid).unpersist()
 
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch(docs_stream, process_batch, checkpoint_path)
 
 
 def _list_state_dir(path: str):
@@ -636,9 +632,9 @@ def _versioned_commit(merged: DataFrame, path: str, batch_id: int,
     keeps ``v=batch_id-1`` for handlers whose replay re-merges from
     the version strictly below the batch (cms/hist/centroid); the
     Bloom gate reads the highest version including its own, so it
-    keeps only ``v=batch_id``.  Centralized after two handlers drifted
+    keeps only ``v=batch_id``.  Centralized after a handler drifted
     from the copy-pasted block (r11 review: bloom missed the orphan
-    prune, centroid missed the unpersist cleanup)."""
+    prune)."""
     import os as _os
 
     merged.write.mode("overwrite").parquet(
@@ -736,9 +732,6 @@ def bloom_gate_stream(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        persisted_before = set(
-            spark.sparkContext._jsc.getPersistentRDDs().keySet()
-        )
         versions = _committed_versions(filter_path)
         if versions:
             # tiny (m/32 rows) — checkpoint so nothing later re-reads
@@ -814,16 +807,8 @@ def bloom_gate_stream(
         # v=batch_id survives — a leftover orphan staying versions[-1]
         # was a filter missing every admitted bit (r11 review)
         _versioned_commit(merged, filter_path, batch_id, keep_prev=False)
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet()):
-            if rid not in persisted_before:
-                jmap.get(rid).unpersist()
 
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch(docs_stream, process_batch, checkpoint_path)
 
 
 def compact_gate_store(spark, fps_path: str, upto_batch_id: int) -> dict:
@@ -914,9 +899,6 @@ def cms_ingest_stream(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        persisted_before = set(
-            spark.sparkContext._jsc.getPersistentRDDs().keySet()
-        )
         terms = batch_df.filter(F.col(text_col).isNotNull()).select(
             F.explode(_text.tokens(F.col(text_col))).alias("term")
         ).filter(F.col("term") != "")
@@ -930,20 +912,8 @@ def cms_ingest_stream(
         else:
             merged = batch_sketch
         _versioned_commit(merged, sketch_path, batch_id)
-        # drop this batch's localCheckpoint blocks (the prior-version
-        # read): an always-on stream otherwise accumulates one
-        # checkpointed RDD per micro-batch in executor storage — the
-        # same cleanup every foreachBatch handler in this file does
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet()):
-            if rid not in persisted_before:
-                jmap.get(rid).unpersist()
 
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch(docs_stream, process_batch, checkpoint_path)
 
 
 def hist_ingest_stream(
@@ -976,9 +946,6 @@ def hist_ingest_stream(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        persisted_before = set(
-            spark.sparkContext._jsc.getPersistentRDDs().keySet()
-        )
         batch_hist = _sketch.hist_build(
             batch_df, value_col, lo=lo, hi=hi, bins=bins
         )
@@ -991,16 +958,8 @@ def hist_ingest_stream(
         else:
             merged = batch_hist
         _versioned_commit(merged, hist_path, batch_id)
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet()):
-            if rid not in persisted_before:
-                jmap.get(rid).unpersist()
 
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch(docs_stream, process_batch, checkpoint_path)
 
 
 def centroid_ingest_stream(
@@ -1033,9 +992,6 @@ def centroid_ingest_stream(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        persisted_before = set(
-            spark.sparkContext._jsc.getPersistentRDDs().keySet()
-        )
         batch_sums = centroid_component_sums(
             batch_df, label_col, vec_col
         )
@@ -1052,20 +1008,8 @@ def centroid_ingest_stream(
         else:
             merged = batch_sums
         _versioned_commit(merged, sums_path, batch_id)
-        # drop this batch's localCheckpoint blocks (the prior-version
-        # read) — the only handler in the file that was missing the
-        # cleanup every sibling carries (r11 review): an always-on
-        # stream leaked one |labels| x dims RDD per micro-batch
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet()):
-            if rid not in persisted_before:
-                jmap.get(rid).unpersist()
 
-    return (
-        emb_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch(emb_stream, process_batch, checkpoint_path)
 
 
 def attrition_stream(
@@ -1130,11 +1074,7 @@ def attrition_stream(
             .parquet(ledger_path)
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch(stream_df, process_batch, checkpoint)
 
 
 def compact_ledger_batches(

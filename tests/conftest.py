@@ -23,6 +23,13 @@ def spark():
     yield spark
 
 
+def persisted_rdd_ids(spark) -> set:
+    """Ids of the session's persisted RDDs. Tests compare them as
+    "nothing new survives", not for equality: the context cleaner may
+    unpersist an earlier test's garbage at any time."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 @pytest.fixture()
 def clean_catalog_memos():
     """Run a test on empty catalog memos, restoring them afterwards."""

@@ -84,3 +84,11 @@ def test_real_budget_file_has_reference_and_only_numeric_budgets():
     bad = [k for k, v in budgets.items()
            if not k.startswith("_") and not isinstance(v, (int, float))]
     assert bad == []
+
+
+def test_host_factor_clamps_the_probe_ratio():
+    assert bench.host_factor(2.4, 1.6) == 1.5
+    assert bench.host_factor(0.4, 1.6) == 1.0  # never below face value
+    assert bench.host_factor(9.0, 1.0) == 3.0
+    assert bench.host_factor(9.0, 1.0, max_factor=1.5) == 1.5
+    assert bench.host_factor(2.4, None) == 1.0  # uncalibrated host

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from tajo_spark.catalog import load_table
 from tajo_spark.streaming import pipeline as P
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, persisted_rdd_ids
 
 
 @pytest.fixture(scope="module")
@@ -1359,3 +1359,77 @@ def test_compact_folds_and_deletes_legacy_negative_generations(
     rows = spark.read.parquet(index).select("vec_id").collect()
     ids = sorted(r.vec_id for r in rows)
     assert len(ids) == len(set(ids)) == 70  # folded once, no dupes
+
+
+def _file_stream(spark, src, frames, schema):
+    """One single-file micro-batch per frame, in order."""
+    import os
+
+    os.makedirs(src)
+    for df in frames:
+        df.coalesce(1).write.mode("append").parquet(src)
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+
+
+def test_stream_handlers_release_their_checkpoints(spark, tmp_path):
+    # every micro-batch runs in a released_checkpoints scope: what its
+    # handler persisted is gone when the batch ends — also after the
+    # early return of an empty cadence batch
+    from tajo_spark.streaming import ann_ingest as AI
+    from tajo_spark.streaming.pipeline import bloom_gate_stream
+
+    schema = "doc_id LONG, text STRING"
+    stream = _file_stream(spark, str(tmp_path / "docs"), [
+        spark.createDataFrame(rows, schema)
+        for rows in ([(0, "a b"), (1, "a b")], [(2, "c d")], [(3, "a b")])
+    ], schema)
+    paths = [str(tmp_path / p) for p in ("filter", "fps", "admitted", "ckpt")]
+    before = persisted_rdd_ids(spark)
+    q = bloom_gate_stream(stream, *paths).start()
+    q.processAllAvailable()
+    q.stop()
+    assert spark.read.parquet(paths[2]).count() == 2  # three batches ran
+    assert persisted_rdd_ids(spark) - before == set()
+
+    boot, b0, b1 = _gate_corpus(spark)
+    index = str(tmp_path / "index")
+    model = AI.ivf_ingest_init(boot, index, n_centroids=8)
+    schema = "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+    empty = spark.createDataFrame([], schema)
+    stream = _file_stream(spark, str(tmp_path / "vecs"), [b0, b1, empty],
+                          schema)
+    before = persisted_rdd_ids(spark)
+    q = AI.gated_ingest_stream(
+        stream, model, index, str(tmp_path / "ckpt2"), compact_every=2
+    ).start()
+    q.processAllAvailable()
+    q.stop()
+    # batch 2 was empty and still fired the fold
+    assert {r[0] for r in spark.read.parquet(index)
+            .select("__batch_id").distinct().collect()} == {-1}
+    assert persisted_rdd_ids(spark) - before == set()
+
+
+def test_raising_handler_releases_its_checkpoints(spark, tmp_path,
+                                                  monkeypatch):
+    # the bloom gate checkpoints its probe and admitted sets before the
+    # filter commit; a commit that raises must not strand those blocks
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("commit failed")
+
+    monkeypatch.setattr(P, "_versioned_commit", boom)
+    schema = "doc_id LONG, text STRING"
+    stream = _file_stream(spark, str(tmp_path / "docs"), [
+        spark.createDataFrame([(0, "a b"), (1, "c d")], schema)
+    ], schema)
+    paths = [str(tmp_path / p) for p in ("filter", "fps", "admitted", "ckpt")]
+    before = persisted_rdd_ids(spark)
+    q = P.bloom_gate_stream(stream, *paths).start()
+    with pytest.raises(Exception, match="commit failed"):
+        q.processAllAvailable()
+    q.stop()
+    assert persisted_rdd_ids(spark) - before == set()

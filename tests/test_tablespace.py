@@ -101,6 +101,29 @@ def test_hbase_sim_sorted_regions_and_range_pruning(spark, tmp_path):
     assert [r.v for r in hit.collect()] == [777]
 
 
+def test_hbase_sim_bounds_the_region_bounds_read(spark, tmp_path,
+                                                monkeypatch):
+    # the region bounds are write_table's one driver read; it goes
+    # through bounded_collect with the region count as the bound
+    from tajo_spark.sources import hbase_sim
+
+    calls = []
+    real = hbase_sim.bounded_collect
+
+    def spy(df, max_rows, what):
+        rows = real(df, max_rows, what)
+        calls.append((max_rows, what, len(rows)))
+        return rows
+
+    monkeypatch.setattr(hbase_sim, "bounded_collect", spy)
+    df = spark.range(100).selectExpr(
+        "lpad(CAST(id AS STRING), 4, '0') AS row_key", "id AS v"
+    )
+    meta = hbase_sim.write_table(df, str(tmp_path / "kv"), regions=4)
+    assert calls == [(4, "region bounds", 4)]
+    assert len(meta) == 4
+
+
 def test_hbase_sim_registers_through_tablespace_api(spark, tmp_path):
     from tajo_spark.sources import hbase_sim
 

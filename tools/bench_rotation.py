@@ -7,9 +7,9 @@ hash-gated for correctness but never measured, so a perf regression in
 one of them was invisible until it hit a driver round.
 
 This tool measures ALL of them with the driver bench's own protocol
-(sf0.001 two-pass codegen warmup, then min-of-2 noop-sink walls at the
-measured SF) and merges the walls into ``bench_rotation.json``
-(tracked), stamping each entry with the in-progress round number
+and kernel (tajo_spark/profile.py: sf0.001 two-pass codegen warmup,
+then min-of-2 noop-sink walls at the measured SF) and merges the
+walls into ``bench_rotation.json`` (tracked), stamping each entry with the in-progress round number
 (max BENCH_r*.json + 1). tools/audit_coverage.py rule 5 fails CI when
 any registry query's most recent wall row — driver bench or rotation —
 is more than 2 rounds stale, so "bench the long tail" can't silently
@@ -28,6 +28,7 @@ import os
 import re
 import sys
 import time
+from functools import partial
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -64,6 +65,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
+    from tajo_spark import profile
     from tajo_spark.queries.registry import all_queries
     from tajo_spark.session import build_spark
 
@@ -77,36 +79,21 @@ def main() -> None:
     )
     errors: dict[str, str] = {}
     if os.path.isdir(warm_dir):
-        for _ in range(2):
-            for name in names:
-                try:
-                    registry[name].spark(spark, warm_dir).write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                except Exception as exc:
-                    errors[name] = str(exc)[:200]
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(8)
+        builds = {n: partial(registry[n].spark, spark, warm_dir) for n in names}
+        errors = {n: e[:200] for n, e in profile.warm(spark, builds).items()}
 
     timings: dict[str, float] = {}
     for _pass in range(2):
         for name in names:
             if name in errors:
                 continue
-            t0 = time.perf_counter()
+            build = partial(registry[name].spark, spark, args.sf_dir)
             try:
-                registry[name].spark(spark, args.sf_dir).write.format(
-                    "noop"
-                ).mode("overwrite").save()
+                t = round(profile.run(spark, build).wall_s, 3)
             except Exception as exc:
                 errors[name] = str(exc)[:200]
                 continue
-            t = round(time.perf_counter() - t0, 3)
             timings[name] = min(timings.get(name, t), t)
-            for rdd in list(
-                spark.sparkContext._jsc.getPersistentRDDs().values()
-            ):
-                rdd.unpersist()
 
     try:
         with open(ROTATION_FILE) as f:

@@ -31,6 +31,7 @@ import shutil
 import sys
 import tempfile
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(
@@ -63,6 +64,7 @@ def main() -> None:
 
     import scaling_ladder as SL
     from __spark_entry__ import queries
+    from tajo_spark import profile
     from tajo_spark.session import build_spark
 
     # GCLocker retry budget (r09 rung finding): the vectorized parquet
@@ -149,13 +151,13 @@ def main() -> None:
                 return _bpe_dist
             return qs[label.split("@")[0]]
 
-        for q, _ in plan:
-            try:
-                qfn(q)(spark, "/root/testdata/sf0.001").write.format(
-                    "noop"
-                ).mode("overwrite").save()
-            except Exception:
-                pass
+        def warm(labels):
+            profile.warm(spark, {
+                q: partial(qfn(q), spark, SL.WARM_DIR)
+                for q in labels
+            }, passes=1)
+
+        warm([q for q, _ in plan])
         spark.sparkContext.setLogLevel("INFO")
         results = []
         swapped = False
@@ -185,43 +187,30 @@ def main() -> None:
                         "spark.driver.extraJavaOptions": gclocker,
                     },
                 )
-                for wq, _ in plan:
-                    if wq.endswith("@64x"):
-                        try:
-                            qfn(wq)(spark, "/root/testdata/sf0.001").write.format(
-                                "noop"
-                            ).mode("overwrite").save()
-                        except Exception:
-                            pass
+                warm([wq for wq, _ in plan if wq.endswith("@64x")])
                 spark.sparkContext.setLogLevel("INFO")
                 swapped = True
             # per-query isolation inside the capped JVM: drop cached
-            # blocks and prior broadcasts so query N+1 is not failed
+            # tables and prior broadcasts so query N+1 is not failed
             # by query N's residue (a broadcast HashedRelation stays
             # referenced until the ContextCleaner runs — at 2 GiB that
             # lag alone flipped dedup_weighted_containment to FAIL
-            # while the same query passed in a fresh JVM)
+            # while the same query passed in a fresh JVM); each run
+            # releases its own checkpoint blocks
             spark.catalog.clearCache()
-            for rdd in list(
-                spark.sparkContext._jsc.getPersistentRDDs().values()
-            ):
-                rdd.unpersist()
             spark.sparkContext._jvm.System.gc()
             time.sleep(2)
             spark.conf.set("spark.sql.shuffle.partitions", part_for[q])
             os.write(2, f"\n===RUNG-BEGIN {q}===\n".encode())
-            t0 = time.time()
+            wall = None
             status = "OK"
             try:
-                qfn(q)(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                wall = profile.run(spark, partial(qfn(q), spark, sf_dir)).wall_s
             except Exception as exc:
                 status = (
                     "OOM" if OOM_RE.search(str(exc)) else
                     f"FAIL({str(exc).splitlines()[0][:60]})"
                 )
-            wall = time.time() - t0
             os.write(2, f"\n===RUNG-END {q}===\n".encode())
             results.append((q, wall, status))
         spark.sparkContext.setLogLevel("WARN")
@@ -254,7 +243,8 @@ def main() -> None:
             status if status != "OK"
             else ("OK(spilled)" if n else "OK(fit)")
         )
-        print(f"| `{q}` | {wall:.1f} s | {n} | {verdict} |")
+        wall_s = f"{wall:.1f} s" if wall is not None else "—"
+        print(f"| `{q}` | {wall_s} | {n} | {verdict} |")
 
 
 if __name__ == "__main__":

@@ -27,10 +27,14 @@ import shutil
 import sys
 import tempfile
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tajo_spark import profile  # noqa: E402
+
 BASE_SF = "/root/testdata/sf0.1"
+WARM_DIR = os.path.join(os.path.dirname(BASE_SF), "sf0.001")
 QUERIES = [
     # scan-bound projection (classifier): should be ~linear
     "text_quality_classifier",
@@ -205,31 +209,24 @@ def main() -> None:
     root = tempfile.mkdtemp(prefix="tajo_spark_ladder_")
     results: dict[str, dict[int, float]] = {q: {} for q in QUERIES}
     try:
+        profile.warm(
+            spark, {q: partial(qs[q], spark, WARM_DIR) for q in QUERIES},
+            passes=1,
+        )
         for mult in mults:
             sf_dir = stage(mult, root)
             for q in QUERIES:
-                fn = qs[q]
-                # noop sink, NOT collect(): collect adds driver-side
-                # result transfer proportional to output size (row-heavy
-                # ops like dedup_paragraphs would measure the transfer,
-                # not the plan) and count() lets Catalyst elide work —
-                # same methodology as bench.py and the other ladders.
-                fn(spark, "/root/testdata/sf0.001").write.format(
-                    "noop"
-                ).mode("overwrite").save()  # warm
-                times = []
-                for _ in range(2):
-                    t0 = time.time()
-                    fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    times.append(time.time() - t0)
-                for rdd in list(
-                    spark.sparkContext._jsc.getPersistentRDDs().values()
-                ):
-                    rdd.unpersist()
-                results[q][mult] = min(times)
-                print(f"x{mult:<3} {q:28s} {min(times):6.2f}s", flush=True)
+                # profile.run writes to the noop sink, NOT collect():
+                # collect adds driver-side result transfer proportional
+                # to output size (row-heavy ops like dedup_paragraphs
+                # would measure the transfer, not the plan) and count()
+                # lets Catalyst elide work.
+                best = min(
+                    profile.run(spark, partial(qs[q], spark, sf_dir)).wall_s
+                    for _ in range(2)
+                )
+                results[q][mult] = best
+                print(f"x{mult:<3} {q:28s} {best:6.2f}s", flush=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)
         spark.stop()
@@ -293,20 +290,16 @@ def emb_ladder(mults: list[int]) -> None:
             sf_dir = stage_emb(mult, root)
             emb = load_table(spark, sf_dir, "embeddings")
             n_seeds = 16 * mult  # constant target cluster size
-            times = []
-            for _ in range(2):
-                t0 = time.time()
-                # noop write, NOT count(): Catalyst eliminates the
-                # cardinality-preserving verdict join (and the whole
-                # pair scan feeding it) under count() — measured
-                # 0.24 s counted vs 4.05 s executed at 4x
-                semantic_dedup(emb, n_seeds=n_seeds).write.format(
-                    "noop").mode("overwrite").save()
-                times.append(time.time() - t0)
-            rows.append((mult, n_seeds, min(times)))
+            # noop write, NOT count(): Catalyst eliminates the
+            # cardinality-preserving verdict join (and the whole pair
+            # scan feeding it) under count() — measured 0.24 s counted
+            # vs 4.05 s executed at 4x
+            build = partial(semantic_dedup, emb, n_seeds=n_seeds)
+            best = min(profile.run(spark, build).wall_s for _ in range(2))
+            rows.append((mult, n_seeds, best))
             print(
                 f"x{mult:<3} semantic_dedup seeds={n_seeds:<5}"
-                f" {min(times):6.2f}s",
+                f" {best:6.2f}s",
                 flush=True,
             )
     finally:
@@ -352,18 +345,14 @@ def ann_ladder(mults: list[int]) -> None:
                 # replica keeps original ids at every rung
                 .select(F.col("vec_id").alias("q_id"), "embedding")
             )
-            walls = {}
-            for name, fn in (
-                ("exact", lambda: ann_join(q, emb, k=10)),
-                ("ivf", lambda: ann_join_ivf(
-                    q, emb, k=10, n_centroids=64, nprobe=8)),
-            ):
-                times = []
-                for _ in range(2):
-                    t0 = time.time()
-                    fn().write.format("noop").mode("overwrite").save()
-                    times.append(time.time() - t0)
-                walls[name] = min(times)
+            walls = {
+                name: min(profile.run(spark, build).wall_s for _ in range(2))
+                for name, build in (
+                    ("exact", partial(ann_join, q, emb, k=10)),
+                    ("ivf", partial(ann_join_ivf, q, emb, k=10,
+                                    n_centroids=64, nprobe=8)),
+                )
+            }
             rows.append((mult, walls["exact"], walls["ivf"]))
             print(
                 f"x{mult:<3} ann exact {walls['exact']:6.2f}s   "
@@ -435,18 +424,19 @@ def tpch_ladder(mults: list[int]) -> None:
     root = tempfile.mkdtemp(prefix="tajo_spark_ladder_tpch_")
     results: dict[str, dict[int, float]] = {q: {} for q in TPCH_LADDER}
     try:
+        profile.warm(
+            spark, {q: partial(qs[q], spark, WARM_DIR) for q in TPCH_LADDER},
+            passes=1,
+        )
         for mult in mults:
             sf_dir = stage_tpch(mult, root)
             for q in TPCH_LADDER:
-                fn = qs[q]
-                fn(spark, "/root/testdata/sf0.001").collect()  # warm
-                times = []
-                for _ in range(2):
-                    t0 = time.time()
-                    fn(spark, sf_dir).collect()
-                    times.append(time.time() - t0)
-                results[q][mult] = min(times)
-                print(f"x{mult:<3} {q:10s} {min(times):6.2f}s", flush=True)
+                best = min(
+                    profile.run(spark, partial(qs[q], spark, sf_dir)).wall_s
+                    for _ in range(2)
+                )
+                results[q][mult] = best
+                print(f"x{mult:<3} {q:10s} {best:6.2f}s", flush=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)
         spark.stop()
@@ -499,19 +489,15 @@ def pq_ladder(mults: list[int]) -> None:
             t0 = time.time()
             modelp, cb = ivf_pq_persist_index(emb, ppq, n_centroids=16)
             bpq = time.time() - t0
-            walls = {}
-            for name, fn in (
-                ("q8", lambda: ann_join_q8_persisted(
-                    spark, p8, model8, q, emb, k=10, nprobe=4)),
-                ("pq", lambda: ann_join_pq_persisted(
-                    spark, ppq, modelp, cb, q, emb, k=10, nprobe=4)),
-            ):
-                times = []
-                for _ in range(2):
-                    t0 = time.time()
-                    fn().write.format("noop").mode("overwrite").save()
-                    times.append(time.time() - t0)
-                walls[name] = min(times)
+            walls = {
+                name: min(profile.run(spark, build).wall_s for _ in range(2))
+                for name, build in (
+                    ("q8", partial(ann_join_q8_persisted, spark, p8, model8,
+                                   q, emb, k=10, nprobe=4)),
+                    ("pq", partial(ann_join_pq_persisted, spark, ppq, modelp,
+                                   cb, q, emb, k=10, nprobe=4)),
+                )
+            }
             rows.append((mult, b8, bpq, walls["q8"], walls["pq"]))
             print(
                 f"x{mult:<3} build q8 {b8:6.2f}s pq {bpq:6.2f}s   "

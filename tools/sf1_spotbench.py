@@ -8,7 +8,8 @@ measurement that grows both corpora together.
 Protocol: stage 10x documents / embeddings / TPC-H facts with the
 scaling_ladder generators (replica texts are shingle-distinct — the
 dedup worst case, see scaling_ladder.py), codegen-warm each query at
-sf0.001, then ONE measured run per query at 10x with a noop sink.
+sf0.001, then ONE measured run per query at 10x through the
+tajo_spark/profile.py kernel (noop sink).
 Prints the markdown table SCALE.md carries plus the ratio vs the
 tracked sf0.1 bench wall (bench_results.json) — a healthy
 shuffle-bound operator lands well under 10x/ratio-of-cores; anything
@@ -26,6 +27,7 @@ import shutil
 import sys
 import tempfile
 import time
+from functools import partial
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -77,6 +79,7 @@ def main() -> None:
     import scaling_ladder as SL
 
     from __spark_entry__ import queries
+    from tajo_spark import profile as P
     from tajo_spark.session import build_spark
 
     spark = build_spark(app_name="sf1_spotbench")
@@ -104,29 +107,34 @@ def main() -> None:
         )
         from tajo_spark.queries import datapipe as DP
 
-        def run_one(q: str, sf_dir: str) -> str:
-            """Execute one measured leg; raises on failure."""
+        def build_leg(sf_dir: str) -> float:
+            """The one leg that is an index build, not a DataFrame:
+            clear the per-process memo so the timed call IS the build
+            (KMeans + codebooks + encode + partitioned persist)."""
+            DP._IVFPQ_INDEX.clear()
+            t0 = time.perf_counter()
+            DP._ivfpq_index(spark, sf_dir, n_centroids=8)
+            return time.perf_counter() - t0
+
+        def run_one(q: str, sf_dir: str) -> float:
+            """One measured leg's wall; raises on failure.
+            sim_ann_pq_probe rides the registry body: by protocol it
+            runs AFTER the build leg, so the memoized index is warm and
+            the timing is steady-state serving only."""
             if q == "sim_ann_pq_build":
-                # build-once leg: clear the per-process memo so the
-                # timed call IS the build (KMeans + codebooks + encode
-                # + partitioned persist)
-                DP._IVFPQ_INDEX.clear()
-                DP._ivfpq_index(spark, sf_dir, n_centroids=8)
-                return ""
-            # sim_ann_pq_probe rides the registry body: by protocol it
-            # runs AFTER the build leg, so the memoized index is warm
-            # and the timing is steady-state serving only
-            qs[q](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            return ""
+                return build_leg(sf_dir)
+            return P.run(spark, partial(qs[q], spark, sf_dir)).wall_s
 
         # codegen warmup at tiny SF (same protocol as bench.py)
-        for q, _ in heavy:
-            try:
-                run_one(q, "/root/testdata/sf0.001")
-            except Exception:
-                pass
+        try:
+            build_leg(SL.WARM_DIR)
+        except Exception:
+            pass
+        P.warm(spark, {
+            q: partial(qs[q], spark, SL.WARM_DIR)
+            for q, _ in heavy
+            if q != "sim_ann_pq_build"
+        })
 
         # host-speed probe AFTER warmup, same regime as the measured
         # runs (r09 VERDICT task 8: raw one-shot walls needed prose
@@ -134,22 +142,15 @@ def main() -> None:
         import bench as B
 
         probe_sec = B._host_speed_probe(spark)
-        host_factor = 1.0
-        base_factor = 1.0
         try:
-            budgets = json.load(
+            ref = json.load(
                 open(os.path.join(REPO, "perf_budgets.json"))
-            )
-            ref = budgets.get("_probe_reference_sec")
-            if ref:
-                host_factor = round(min(3.0, max(1.0, probe_sec / ref)), 3)
-                base_probe = baseline_full.get("host_probe_sec")
-                if base_probe:
-                    base_factor = round(
-                        min(3.0, max(1.0, base_probe / ref)), 3
-                    )
+            ).get("_probe_reference_sec")
         except Exception:
-            pass
+            ref = None
+        host_factor = B.host_factor(probe_sec, ref)
+        base_probe = baseline_full.get("host_probe_sec")
+        base_factor = B.host_factor(base_probe, ref) if base_probe else 1.0
 
         rows = {}
         print(
@@ -158,26 +159,26 @@ def main() -> None:
         )
         print("|---|---|---|---|")
         for q, which in heavy:
-            t0 = time.time()
+            wall = None
             status = ""
             try:
-                run_one(q, dirs[which])
+                wall = run_one(q, dirs[which])
             except Exception as exc:
                 status = f" FAIL({str(exc).splitlines()[0][:50]})"
-            wall = time.time() - t0
             base = baseline.get(q)
             # normalize each side by ITS run's host factor so the
             # ratio compares engine work, not bench-host load
             ratio_norm = (
                 (wall / host_factor) / (base / base_factor)
-                if base
+                if base and wall is not None
                 else None
             )
-            ratio = f"{ratio_norm:.1f}x" if base else "—"
+            ratio = f"{ratio_norm:.1f}x" if ratio_norm else "—"
             base_s = f"{base:.2f} s" if base else "—"
-            print(f"| `{q}` | {base_s} | {wall:.2f} s | {ratio}{status} |")
+            wall_s = f"{wall:.2f} s" if wall is not None else "—"
+            print(f"| `{q}` | {base_s} | {wall_s} | {ratio}{status} |")
             rows[q] = {
-                "wall_sec": round(wall, 3),
+                "wall_sec": round(wall, 3) if wall is not None else None,
                 "base_sec": base,
                 "ratio_norm": round(ratio_norm, 2) if ratio_norm else None,
                 "status": status.strip() or "ok",
