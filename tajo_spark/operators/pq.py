@@ -13,8 +13,10 @@ the float IVF → int8 IVF → PQ compression ladder in
 Why this is THE 100 TB ANN shape:
 
 * **coarse IVF** — KMeans centroids partition the corpus; the index is
-  parquet ``partitionBy(centroid_id)``, so an ``nprobe``-probe lists
-  only its probe directories (static pruning, plan-pinned).
+  parquet partitioned on ``centroid_id`` first (the ingestable
+  ``(centroid_id, __batch_id)`` layout of streaming/ann_ingest.py), so
+  an ``nprobe``-probe lists only its probe directories (static
+  pruning, plan-pinned).
 * **residual PQ** — each vector's residual (unit-normalized vector
   minus its centroid) is split into ``M`` subvectors, each quantized
   to one of ``KSUB`` codebook entries: ``M`` bytes per vector.  At
@@ -37,6 +39,11 @@ Why this is THE 100 TB ANN shape:
   returned scores are exact float cosine over the semi-joined
   shortlist, so recall (not correctness) is what nprobe/expand dial.
 
+The index is built, appended and served by the same pipeline as the
+int8 index (``streaming/ann_ingest.ivf_ingest_init`` with ``m``/``ksub``,
+``similarity.ann_join_persisted``); this module supplies only the
+codec, :class:`PQCodec`, and its training.
+
 Cost model at 1000 executors: index build is one KMeans fit on a
 driver-bounded sample + one map-only encode pass (Arrow-vectorized
 numpy, amortized); a batch probe reads nprobe/n_centroids of an
@@ -46,17 +53,17 @@ already-16×-smaller index, one window shuffle of skinny
 
 from __future__ import annotations
 
+from functools import cached_property
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tajo_spark.operators.similarity import (
-    SERVING_BATCH_MAX_ROWS,
+    Codec,
     _as_double,
-    _index_frame,
-    bounded_collect,
-    cosine,
+    _vec_lit,
     dot,
     l2_normalize,
 )
@@ -181,45 +188,6 @@ def pq_encode_codes(
     )
 
 
-def ivf_pq_persist_index(
-    emb: DataFrame,
-    path: str,
-    n_centroids: int = 8,
-    m: int = DEFAULT_M,
-    ksub: int = DEFAULT_KSUB,
-    seed: int = 42,
-    train_sample: int = DEFAULT_TRAIN_SAMPLE,
-):
-    """Build + persist the IVF-PQ index: coarse KMeans partition,
-    residual-PQ codes, parquet ``partitionBy(centroid_id)`` of
-    (vec_id, codes).  Returns (model, codebooks) — the only state a
-    prober needs besides the path.
-
-    Train-sample collect is bounded by ``train_sample`` rows
-    (annotated driver-side: codebook k-means needs O(ksub·100)
-    points per subspace, independent of corpus size)."""
-    from tajo_spark.operators.similarity import ivf_assign
-
-    assigned, model = ivf_assign(emb, n_centroids=n_centroids, seed=seed)
-    centers = [np.asarray(c, dtype="float64") for c in model.clusterCenters()]
-    codebooks = pq_train_residuals(
-        assigned, centers, m=m, ksub=ksub, seed=seed,
-        train_sample=train_sample,
-    )
-    (
-        pq_encode_codes(assigned, centers, codebooks)
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(path)
-    )
-    # writer-owned invalidation (see similarity.ivf_persist_index): a
-    # rebuild at a previously probed path drops the memoized listing
-    from tajo_spark import catalog
-
-    catalog.invalidate(path)
-    return model, codebooks
-
-
 def pq_train_residuals(
     assigned,
     centers,
@@ -228,10 +196,9 @@ def pq_train_residuals(
     seed: int = 42,
     train_sample: int = DEFAULT_TRAIN_SAMPLE,
 ):
-    """Residual-sample + codebook training shared by
-    :func:`ivf_pq_persist_index` and the streaming ingest bootstrap
-    (streaming/ann_ingest.pq_ingest_init) — ONE copy of the
-    deterministic sampling rule (r11 review: the ingest bootstrap had
+    """Residual-sample + codebook training for the index bootstrap
+    (streaming/ann_ingest.ivf_ingest_init) — ONE copy of the
+    deterministic sampling rule (r11 review: an ingest bootstrap had
     a verbatim duplicate with a hard-coded sample size).
 
     Sample order is md5(vec_id): deterministic AND unbiased — hash
@@ -240,8 +207,6 @@ def pq_train_residuals(
     sharded corpus); bare limit() would be partition-order-dependent.
     TakeOrdered, one-time build cost; the collect is bounded by
     ``train_sample`` rows, independent of corpus size."""
-    from tajo_spark.operators.similarity import l2_normalize
-
     sample = (
         assigned.select(
             "vec_id",
@@ -271,226 +236,41 @@ def _adc_score(codes: Column, luts: Column, coarse: Column) -> Column:
     )
 
 
-_PQ_CENTS_MEMO: dict = {}
-_CENTS_MEMO_MAX = 8  # distinct live models per session; oldest evicted
+class PQCodec(Codec):
+    """The PQ codec: residual product-quantized ``codes`` under the
+    frozen (centroids, codebooks) pair, scored by ADC — the scan reads
+    M code bytes per candidate, never a float vector."""
 
+    column = "codes"
+    expand = 8
 
-def _pq_cents_frame(spark, model, codebooks: np.ndarray):
-    """One-row (centroids, codebooks) frame for the ADC probe.
+    def __init__(self, model, codebooks: np.ndarray):
+        super().__init__(model)
+        self.codebooks = np.ascontiguousarray(codebooks, dtype="float64")
 
-    Centroids AND codebooks ride as DATA in one broadcast single-row
-    frame, not as expression-tree literals: an F.lit of the M x KSUB
-    x dsub codebook builds a CreateArray AST with thousands of leaf
-    nodes that Catalyst re-analyzes on EVERY probe — measured 5-6.5 s
-    of driver-side plan time per probe at M=16/KSUB=64 vs <1 s of
-    actual execution (the r06 bench split exposed it).  As a row the
-    codebook is just bytes in a broadcast, analysis is O(1).
+    @cached_property
+    def codebook(self) -> Column:
+        return _vec_lit(self.codebooks.ravel())
 
-    Memoized per (session, model object): the frame is pure model
-    metadata, and rebuilding it cost a py4j createDataFrame of the
-    full codebook (~16k floats) on EVERY probe call (r12).  The memo
-    holds a strong reference to the model so the id key can never be
-    recycled; a retrained model is a new object → new entry.
-    """
-    key = (spark.sparkContext.applicationId, id(model), id(codebooks))
-    hit = _PQ_CENTS_MEMO.get(key)
-    if hit is not None and hit[0] is model and hit[1] is codebooks:
-        return hit[2]
-    # drop entries from stopped sessions so superseded models don't
-    # accumulate for the life of the process (ADVICE r12; mirrors
-    # catalog.load_table's stale-app prune)
-    for k in [k for k in _PQ_CENTS_MEMO if k[0] != key[0]]:
-        del _PQ_CENTS_MEMO[k]
-    centers = model.clusterCenters()
-    m = codebooks.shape[0]
-    df = spark.createDataFrame(
-        [
-            (
-                [
-                    (i, [float(x) for x in c])
-                    for i, c in enumerate(centers)
-                ],
-                [
-                    [[float(x) for x in cent] for cent in codebooks[mi]]
-                    for mi in range(m)
-                ],
+    def encode(self, assigned: DataFrame) -> DataFrame:
+        return pq_encode_codes(assigned, self.centers, self.codebooks)
+
+    def query_columns(self) -> list[Column]:
+        # LUT[m][j] = q̂_sub(m)·codebook[m][j], JVM-side from the flat
+        # codebook literal: M × KSUB doubles per query
+        m, ksub, dsub = self.codebooks.shape
+
+        def lut(mi):
+            qsub = F.slice(F.col("__qn"), mi * dsub + 1, dsub)
+            return F.transform(
+                F.sequence(F.lit(0), F.lit(ksub - 1)),
+                lambda j: dot(
+                    qsub, F.slice(self.codebook, (mi * ksub + j) * dsub + 1, dsub)
+                ),
             )
-        ],
-        "__cents ARRAY<STRUCT<centroid_id: INT, cv: ARRAY<DOUBLE>>>, "
-        "__cb ARRAY<ARRAY<ARRAY<DOUBLE>>>",
-    )
-    _PQ_CENTS_MEMO[key] = (model, codebooks, df)
-    # same-session bound: one strong (model, codebooks, frame) entry
-    # per retrain would otherwise accumulate for the session's life
-    # (r13 review) — evict oldest-inserted first
-    while len(_PQ_CENTS_MEMO) > _CENTS_MEMO_MAX:
-        del _PQ_CENTS_MEMO[next(iter(_PQ_CENTS_MEMO))]
-    return df
 
+        return [F.transform(F.sequence(F.lit(0), F.lit(m - 1)), lut).alias("luts")]
 
-def ann_join_pq_persisted(
-    spark,
-    path: str,
-    model,
-    codebooks: np.ndarray,
-    queries: DataFrame,
-    base: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    expand: int = 8,
-    query_id_col: str = "q_id",
-    round_to: int = 4,
-    index_df: DataFrame | None = None,
-) -> DataFrame:
-    """Batch retrieval against the persisted IVF-PQ index — the
-    billion-scale serving shape (IVFADC+R):
+    def score(self) -> Column:
+        return _adc_score(F.col(self.column), F.col("luts"), F.col("qc"))
 
-    1. each query ranks the centroid metadata (broadcast literal) and
-       explodes to its ``nprobe`` probe targets, carrying the coarse
-       term q̂·c per probed centroid;
-    2. the query side computes its ADC lookup table JVM-side from the
-       literal codebook: LUT[m][j] = q̂_sub(m)·codebook[m][j]
-       (M × KSUB doubles per query — metadata-sized broadcast);
-    3. the index scan is statically pruned to the union of probed
-       centroid directories (bounded driver-side int list), equi-joins
-       the broadcast query probes on ``centroid_id``, and scores each
-       candidate with M lookups+adds — the scan reads 8-byte codes,
-       never float vectors;
-    4. per-query ``k*expand`` shortlist window → distributed exact
-       float rerank (the candidate-bounded shortlist broadcast-joins
-       the base table, which is never shuffled) → final top-k.
-
-    Output: (q_id, rank, vec_id, cos) — identical contract to
-    ``similarity.ann_join`` / ``ann_join_q8_persisted``; returned
-    ``cos`` is EXACT (the PQ stage only selects candidates).
-    """
-    m, ksub, dsub = codebooks.shape
-    cents = _pq_cents_frame(spark, model, codebooks)
-
-    # rank centers by L2 distance to the normalized query (centers live
-    # on the unit sphere → L2 order == cosine order), keep nprobe,
-    # carry the coarse dot q̂·c for the ADC additive term
-    d2 = lambda s: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("__qn"), s.cv, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    probes_arr = F.slice(
-        F.reverse(
-            F.array_sort(
-                F.transform(
-                    F.col("__cents"),
-                    lambda s: F.struct(
-                        (-F.round(d2(s), 9)).alias("negd"),
-                        (-s.centroid_id).alias("neg_id"),
-                        dot(F.col("__qn"), s.cv).alias("qc"),
-                    ),
-                )
-            )
-        ),
-        1,
-        nprobe,
-    )
-    luts_expr = F.transform(
-        F.col("__cb"),
-        lambda sub, mi: F.transform(
-            sub,
-            lambda cent: dot(
-                F.slice(F.col("__qn"), mi * dsub + 1, dsub), cent
-            ),
-        ),
-    )
-    qplan = (
-        queries.select(
-            F.col(query_id_col).alias("q_id"),
-            _as_double(F.col("embedding")).alias("qv"),
-        )
-        .withColumn("__qn", l2_normalize(F.col("qv")))
-        .join(F.broadcast(cents))
-        .select(
-            "q_id",
-            "qv",
-            luts_expr.alias("luts"),
-            F.explode(probes_arr).alias("__p"),
-        )
-        .select(
-            "q_id",
-            "qv",
-            "luts",
-            (-F.col("__p.neg_id")).cast("int").alias("centroid_id"),
-            F.col("__p.qc").alias("qc"),
-        )
-    )
-    # ONE evaluation of the query-side subtree + ONE metadata-sized
-    # driver read (r13; VERDICT r12 #1).  Previously: localCheckpoint
-    # (job 1) + centroid distinct-collect (job 2) + qside / qfull
-    # broadcast builds re-reading the checkpoint (jobs 3-4).  The
-    # collect is bounded by n_queries × nprobe rows — the serving
-    # REQUEST batch (each row carries its M×KSUB-double LUT, still
-    # metadata-sized) — and every downstream broadcast reads a small
-    # ``Scan ExistingRDD`` of the rebuilt rows instead of re-running the
-    # query-side subtree.  Doubles round-trip bit-exactly through
-    # collect / createDataFrame, so results are unchanged.
-    qrows = bounded_collect(
-        qplan, SERVING_BATCH_MAX_ROWS, "ann_join_pq_persisted query probes"
-    )
-    q = spark.createDataFrame(qrows, qplan.schema)
-    probed = sorted({int(r.centroid_id) for r in qrows})
-    qside = q.select("q_id", "centroid_id", "luts", "qc")
-    w1 = Window.partitionBy("q_id").orderBy(
-        F.desc("__adc"), F.col("vec_id").asc()
-    )
-    shortlist = (
-        (index_df if index_df is not None else _index_frame(spark, path))
-        .filter(F.col("centroid_id").isin(probed))
-        .join(F.broadcast(qside), "centroid_id")
-        .select(
-            "q_id",
-            "vec_id",
-            _adc_score(F.col("codes"), F.col("luts"), F.col("qc")).alias(
-                "__adc"
-            ),
-        )
-        .withColumn("__rn", F.row_number().over(w1))
-        .filter(F.col("__rn") <= k * expand)
-        .select("q_id", "vec_id")
-    )
-    # exact rerank: ONE broadcast hash join attaches the shortlist to
-    # the base table (r13; was base ⋉ distinct(shortlist.vec_id) then
-    # a re-join of shortlist — two evaluations of the windowed
-    # shortlist subtree and an extra distinct exchange for an
-    # identical row multiset).  The shortlist is candidate-bounded
-    # (≤ n_queries·k·expand rows), so the broadcast is metadata-sized
-    # and base is never shuffled.
-    cand = base.select(
-        "vec_id", _as_double(F.col("embedding")).alias("cv8")
-    )
-    # distinct (q_id, qv) from the already-collected rows — qv is
-    # identical across a q_id's nprobe rows by construction, so
-    # first-seen-per-q_id == Spark-side distinct; avoids an aggregate
-    # job inside the broadcast build
-    seen: dict = {}
-    for r in qrows:
-        if r.q_id not in seen:
-            seen[r.q_id] = r.qv
-    qfull = spark.createDataFrame(
-        [(qid, qv) for qid, qv in seen.items()],
-        qplan.select("q_id", "qv").schema,
-    )
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.desc("cos"), F.col("vec_id").asc()
-    )
-    return (
-        cand.join(F.broadcast(shortlist), "vec_id")
-        .join(F.broadcast(qfull), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            F.round(cosine(F.col("cv8"), F.col("qv")), 6).alias("cos"),
-        )
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id", "rank", "vec_id", F.round("cos", round_to).alias("cos")
-        )
-    )

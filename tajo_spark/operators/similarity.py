@@ -18,6 +18,7 @@ Beyond-reference capability (BASELINE.json north star):
 from __future__ import annotations
 
 import math
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -277,6 +278,21 @@ def ivf_assign(emb: DataFrame, n_centroids: int = 16, seed: int = 42,
     return assigned, model
 
 
+def nearest_centroids(centers, query_vec, nprobe: int) -> list[int]:
+    """Ids of the ``nprobe`` rows of ``centers`` (a (c, dim) array of
+    unit-sphere centroids) nearest the normalized query — on the
+    driver, where centroids are model metadata (O(c·dim), no job); on
+    the unit sphere L2 order is cosine order.  Ties keep numpy's
+    argsort order; the in-plan ranking (:func:`probe_ranking`) rounds
+    distances and breaks ties to the lowest id instead."""
+    import numpy as np
+
+    qv = np.asarray(query_vec, dtype="float64")
+    qn = qv / max(float(np.linalg.norm(qv)), 1e-12)
+    order = np.argsort([float(np.linalg.norm(c - qn)) for c in centers])
+    return [int(i) for i in order[:nprobe]]
+
+
 def ivf_topk(emb: DataFrame, query_vec_id: int, k: int = 10,
              n_centroids: int = 16, nprobe: int = 2,
              round_to: int = 4, index=None) -> DataFrame:
@@ -308,11 +324,9 @@ def ivf_topk(emb: DataFrame, query_vec_id: int, k: int = 10,
     assigned, model = index if index is not None else ivf_assign(
         emb, n_centroids=n_centroids
     )
-    qv = np.asarray(qrow.embedding, dtype="float64")
-    qn = qv / max(float(np.linalg.norm(qv)), 1e-12)
-    centers = model.clusterCenters()
-    order = np.argsort([float(np.linalg.norm(c - qn)) for c in centers])
-    probe = [int(i) for i in order[:nprobe]]
+    probe = nearest_centroids(
+        np.asarray(model.clusterCenters()), qrow.embedding, nprobe
+    )
     # query side is a literal of the already-collected query row — a
     # filter on emb here would re-scan the table once per probe
     return (
@@ -373,11 +387,9 @@ def ivf_probe_persisted(
     at the directory level before any file is opened."""
     import numpy as np
 
-    qv = np.asarray(query_vec, dtype="float64")
-    qn = qv / max(float(np.linalg.norm(qv)), 1e-12)
-    centers = model.clusterCenters()
-    order = np.argsort([float(np.linalg.norm(c - qn)) for c in centers])
-    probe = [int(i) for i in order[:nprobe]]
+    probe = nearest_centroids(
+        np.asarray(model.clusterCenters()), query_vec, nprobe
+    )
     return (
         _index_frame(spark, path)
         .filter(F.col("centroid_id").isin(probe))
@@ -1091,44 +1103,126 @@ def quantized_scores(
     )
 
 
-def ivf_persist_index_q8(
-    emb: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    seed: int = 42,
-):
-    """Materialize a QUANTIZED IVF index: (vec_id, q8) partitioned by
-    ``centroid_id`` — int8 rows are ~4x smaller than float32, so the
-    probe's pruned-partition scan moves a quarter of the bytes.  Full-
-    precision vectors stay in the base table; the probe reranks its
-    shortlist there (the IVF+refine layout).  Returns the fitted
-    KMeans model."""
-    from tajo_spark import catalog
+class Codec:
+    """The frozen state of a persisted IVF index plus its encoding —
+    what the one ingest/serve pipeline needs to know about an index
+    flavour (the storage-format plug-in behind one scan, as the
+    reference's scanners sit behind ``SeqScanExec``).
 
-    assigned, model = ivf_assign(emb, n_centroids=n_centroids, seed=seed)
-    (
-        assigned.select(
+    ``model`` is the KMeans coarse quantizer fitted at bootstrap,
+    ``centers`` its centroids as one (c, dim) float64 array.  A codec
+    declares the encoded ``column`` its :meth:`encode` writes, the
+    query-side columns its :meth:`score` reads
+    (:meth:`query_columns`) and its default shortlist ``expand``.
+
+    Plan metadata (centroids, codebooks) is an ``ARRAY<DOUBLE>``
+    literal of the flat float64 array, sliced in-plan and built once
+    per codec: ``F.lit`` of an array costs one py4j call per element
+    (0.41-0.43 s for the 4,096-double M=16/KSUB=64 codebook on a
+    4-core host), planning with the prebuilt literal 30-42 ms, and a
+    one-row ``createDataFrame`` costs a broadcast-build job per serve.
+    Nested ``F.lit`` lists would build a ``CreateArray`` of thousands
+    of nodes (seconds of analysis per probe)."""
+
+    column: str
+    expand: int
+
+    def __init__(self, model):
+        import numpy as np
+
+        self.model = model
+        self.centers = np.asarray(model.clusterCenters(), dtype="float64")
+
+    @cached_property
+    def centroids(self) -> Column:
+        return _vec_lit(self.centers.ravel())
+
+    def encode(self, assigned: DataFrame) -> DataFrame:
+        """(vec_id, embedding, centroid_id) → (vec_id, <column>,
+        centroid_id), the rows the index stores."""
+        raise NotImplementedError
+
+    def query_columns(self) -> list[Column]:
+        """Query-side columns over ``qv`` (the query as doubles) and
+        ``__qn`` (normalized), computed once per query."""
+        raise NotImplementedError
+
+    def candidates(self, idx: DataFrame) -> DataFrame:
+        """Per-index-row work hoisted out of the (query, candidate)
+        join; the index rows as stored by default."""
+        return idx
+
+    def score(self) -> Column:
+        """Candidate score over a candidate joined to its query."""
+        raise NotImplementedError
+
+
+class Q8Codec(Codec):
+    """The int8 codec: per-vector max-abs ``q8`` codes
+    (:func:`quantize_int8`), scored by int8 cosine."""
+
+    column = "q8"
+    expand = 4
+
+    def encode(self, assigned: DataFrame) -> DataFrame:
+        return assigned.select(
             "vec_id",
-            quantize_int8(F.col("embedding")).alias("q8"),
+            quantize_int8(F.col("embedding")).alias(self.column),
             "centroid_id",
         )
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(path)
-    )
-    # writer-owned invalidation (see ivf_persist_index)
-    catalog.invalidate(path)
-    return model
+
+    def query_columns(self) -> list[Column]:
+        qv8 = _as_double(quantize_int8(F.col("qv")))
+        return [qv8.alias("__qv8"), F.sqrt(dot(qv8, qv8)).alias("__qn8")]
+
+    def candidates(self, idx: DataFrame) -> DataFrame:
+        # cast + norm once per index row; the pair join folds only the
+        # dot (cosine() inline re-folds both norms per pair — measured
+        # 97.7 s vs 9.2 s at 16x corpus in the --pq ladder)
+        return idx.select(
+            "centroid_id", "vec_id", _as_double(F.col(self.column)).alias("__cv")
+        ).withColumn("__cn", F.sqrt(dot(F.col("__cv"), F.col("__cv"))))
+
+    def score(self) -> Column:
+        norms = F.col("__cn") * F.col("__qn8")
+        return F.when(norms != 0, dot(F.col("__cv"), F.col("__qv8")) / norms)
+
+
+def probe_ranking(codec: Codec, qn: Column, nprobe: int) -> Column:
+    """In-plan probe targets of the normalized query ``qn``: the
+    ``nprobe`` nearest of the codec's centroids as (negd, neg_id, qc)
+    structs, nearest first.  Squared L2 is rounded to 9 decimals and
+    ties go to the lowest centroid id (reversed ``array_sort`` over
+    negated keys; ``neg_id`` is unique, so ``qc`` never decides); the
+    coarse term ``qc`` = q̂·c rides along for the codecs that score
+    with it."""
+    n, dim = codec.centers.shape
+
+    def key(i):
+        cv = F.slice(codec.centroids, i * dim + 1, dim)
+        d2 = F.aggregate(
+            F.zip_with(qn, cv, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        return F.struct(
+            (-F.round(d2, 9)).alias("negd"),
+            (-i).alias("neg_id"),
+            dot(qn, cv).alias("qc"),
+        )
+
+    ranked = F.transform(F.sequence(F.lit(0), F.lit(n - 1)), key)
+    return F.slice(F.reverse(F.array_sort(ranked)), 1, nprobe)
 
 
 def ivf_q8_shortlist(
     spark,
     path: str,
-    model,
+    codec: Codec,
     query_vec: list[float],
     k: int = 10,
     nprobe: int = 2,
-    expand: int = 4,
+    expand: int | None = None,
     index_df: DataFrame | None = None,
 ) -> DataFrame:
     """Stage-1 candidate shortlist over the quantized index: scan only
@@ -1136,15 +1230,13 @@ def ivf_q8_shortlist(
     plan-pinned), score int8 cosine, TakeOrdered ``k*expand``."""
     import numpy as np
 
+    expand = codec.expand if expand is None else expand
+    probe = nearest_centroids(codec.centers, query_vec, nprobe)
     qv = np.asarray(query_vec, dtype="float64")
-    qn = qv / max(float(np.linalg.norm(qv)), 1e-12)
-    centers = model.clusterCenters()
-    order = np.argsort([float(np.linalg.norm(c - qn)) for c in centers])
-    probe = [int(i) for i in order[:nprobe]]
     scale = max(float(np.max(np.abs(qv))), 1e-300) / 127.0
     # HALF_UP (round half away from zero) to match quantize_int8's
     # Spark-side F.round — Python's builtin round() is HALF_EVEN, so
-    # e.g. 62.5 quantized differently here vs ann_join_q8_persisted's
+    # e.g. 62.5 quantized differently here vs ann_join_persisted's
     # batch path for the identical query (r11 review)
     qq8 = [
         float(math.floor(abs(x / scale) + 0.5)) * (1.0 if x >= 0 else -1.0)
@@ -1180,179 +1272,93 @@ def ivf_q8_shortlist(
     )
 
 
-_Q8_CENTS_MEMO: dict = {}
-_CENTS_MEMO_MAX = 8  # distinct live models per session; oldest evicted
-
-
-def _q8_cents_frame(spark, model):
-    """One-row collected-centroids frame for the persisted-q8 probe —
-    pure model metadata, memoized per (session, model object) so a
-    probe call doesn't rebuild the py4j createDataFrame + aggregate
-    plan every time (r12). Strong model reference pins the id key."""
-    key = (spark.sparkContext.applicationId, id(model))
-    hit = _Q8_CENTS_MEMO.get(key)
-    if hit is not None and hit[0] is model:
-        return hit[1]
-    # drop entries from stopped sessions so superseded models don't
-    # accumulate for the life of the process (ADVICE r12; mirrors
-    # catalog.load_table's stale-app prune)
-    for k in [k for k in _Q8_CENTS_MEMO if k[0] != key[0]]:
-        del _Q8_CENTS_MEMO[k]
-    centers = model.clusterCenters()
-    # single pre-built row, not an agg over a k-row frame: the
-    # collect_list aggregate re-ran as a tiny Spark job inside every
-    # broadcast build of the probe plan (r13); structurally the same
-    # one-row (centroid_id, cv) struct list, in the same enumerate
-    # order (downstream ranking is order-independent anyway:
-    # array_sort with a full (negd, neg_id) tiebreak)
-    df = spark.createDataFrame(
-        [([(i, [float(x) for x in c]) for i, c in enumerate(centers)],)],
-        "__cents ARRAY<STRUCT<centroid_id: INT, cv: ARRAY<DOUBLE>>>",
-    )
-    _Q8_CENTS_MEMO[key] = (model, df)
-    # same-session bound: retrained models are new objects → new keys,
-    # so a long serving session would otherwise accumulate one strong
-    # (model, frame) pair per retrain (r13 review; the app-id prune
-    # above only helps across sessions).  Evict oldest-inserted first.
-    while len(_Q8_CENTS_MEMO) > _CENTS_MEMO_MAX:
-        del _Q8_CENTS_MEMO[next(iter(_Q8_CENTS_MEMO))]
-    return df
-
-
-def ann_join_q8_persisted(
+def ann_join_persisted(
     spark,
     path: str,
-    model,
+    codec: Codec,
     queries: DataFrame,
     base: DataFrame,
     k: int = 10,
     nprobe: int = 2,
-    expand: int = 4,
+    expand: int | None = None,
     query_id_col: str = "q_id",
     round_to: int = 4,
     index_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Batch retrieval against the PERSISTED quantized IVF index — the
-    production serving shape: N query vectors probe the
-    ``partitionBy(centroid_id)`` index built by
-    :func:`ivf_persist_index_q8`, touching only the union of their
-    ``nprobe`` nearest centroid directories.
+    """Batch retrieval against a persisted IVF index of any codec —
+    the production serving shape (IVF+refine for int8, IVFADC+R for
+    PQ): N query vectors probe the ``(centroid_id, __batch_id)`` index
+    written by ``streaming.ann_ingest``, touching only the union of
+    their ``nprobe`` nearest centroid directories.
 
     Stages (the corpus-scaled work is all distributed; the only
     driver-side read is the request batch itself):
 
-    1. each query ranks the model's centroid metadata (c × dim floats,
-       shipped as one literal broadcast row) and explodes to its
-       ``nprobe`` probe targets; that request-bounded frame
-       (n_queries × nprobe rows) is evaluated ONCE and read back to
-       the driver, where it seeds the probe list and the broadcast
-       sides as local relations;
+    1. each query ranks the codec's centroid literal
+       (:func:`probe_ranking`), computes the codec's query-side
+       columns and explodes to its ``nprobe`` probe targets; that
+       request-bounded frame (n_queries × nprobe rows) is evaluated
+       ONCE and read back to the driver, where it seeds the probe list
+       and the broadcast sides as local relations.  The query-side
+       columns ride through the read: computed on the rebuilt frame
+       instead, the PQ serve at nprobe 8 took 39.5 s instead of 20.0 s
+       (``tools/recall_curves.py --mults 1``, 4 cores, one run each);
     2. the index scan is filtered to the UNION of probed centroids — a
-       driver-side list of at most ``n_centroids`` ints (metadata-
-       sized), so parquet directory pruning applies statically — and
-       equi-joins the broadcast probes on ``centroid_id``, scoring
-       int8 cosine only for (query, candidate) pairs that share a
-       probed bucket;
-    3. a window keeps ``k*expand`` candidates per query, the base
-       table broadcast-joins the candidate-bounded shortlist (base is
-       never shuffled), and the exact float rerank + final top-k
-       window run on the joined (query, candidate) rows.
+       driver-side list of at most ``n_centroids`` ints, so parquet
+       directory pruning applies statically — and equi-joins the
+       broadcast probes on ``centroid_id``, scoring with the codec's
+       expression only (query, candidate) pairs that share a probed
+       bucket;
+    3. a window keeps ``k*expand`` candidates per query (``expand``
+       defaults to the codec's), the base table broadcast-joins the
+       candidate-bounded shortlist (base is never shuffled), and the
+       exact float rerank + final top-k window run on the joined
+       (query, candidate) rows.
 
     Output: (q_id, rank, vec_id, cos) — same contract as
-    :func:`ann_join`, with recall following the nprobe/expand dials.
+    :func:`ann_join`; ``cos`` is exact, recall follows the
+    nprobe/expand dials.
     """
     from pyspark.sql import Window
 
-    cents = _q8_cents_frame(spark, model)
-
-    # rank centers by L2 distance to the NORMALIZED query — the same
-    # rule the single-query probes use (centers live on the unit
-    # sphere, so L2 order == cosine order)
-    d2 = lambda s: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("__qn"), s.cv, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    probes_arr = F.slice(
-        F.reverse(
-            F.array_sort(
-                F.transform(
-                    F.col("__cents"),
-                    lambda s: F.struct(
-                        (-F.round(d2(s), 9)).alias("negd"),
-                        (-s.centroid_id).alias("neg_id"),
-                    ),
-                )
-            )
-        ),
-        1,
-        nprobe,
-    )
+    expand = codec.expand if expand is None else expand
     qplan = (
         queries.select(
             F.col(query_id_col).alias("q_id"),
             _as_double(F.col("embedding")).alias("qv"),
         )
         .withColumn("__qn", l2_normalize(F.col("qv")))
-        .join(F.broadcast(cents))
         .select(
-            "q_id", "qv",
-            F.explode(probes_arr).alias("__p"),
+            "q_id",
+            "qv",
+            *codec.query_columns(),
+            F.explode(probe_ranking(codec, F.col("__qn"), nprobe)).alias("__p"),
         )
-        .select(
-            "q_id", "qv",
-            (-F.col("__p.neg_id")).cast("int").alias("centroid_id"),
-        )
+        .withColumn("centroid_id", (-F.col("__p.neg_id")).cast("int"))
+        .withColumn("qc", F.col("__p.qc"))
+        .drop("__p")
     )
-    # ONE evaluation of the query-side subtree + ONE metadata-sized
-    # driver read (r13; VERDICT r12 #1).  Previously: localCheckpoint
-    # (job 1) + centroid distinct-collect (job 2) + two broadcast
-    # builds re-reading the checkpoint (jobs 3-4).  The collect is
-    # bounded by n_queries × nprobe rows — the serving REQUEST batch,
-    # not the corpus — and the rebuilt local frame makes every
-    # downstream broadcast read a small ``Scan ExistingRDD`` of the
-    # rebuilt rows instead of re-running the query-side subtree.
-    # Values round-trip bit-exactly (IEEE doubles through collect /
-    # createDataFrame), and the quantization below still runs through
-    # the same Spark expressions, so results are unchanged.
+    # ONE evaluation of the query-side subtree + ONE request-sized
+    # driver read (r13; VERDICT r12 #1): bounded by n_queries × nprobe
+    # rows, and the rebuilt local frame makes every downstream
+    # broadcast read a small ``Scan ExistingRDD`` instead of re-running
+    # the query-side subtree.  Doubles round-trip bit-exactly through
+    # collect / createDataFrame, so results are unchanged.
     qrows = bounded_collect(
-        qplan, SERVING_BATCH_MAX_ROWS, "ann_join_q8_persisted query probes"
+        qplan, SERVING_BATCH_MAX_ROWS, "ann_join_persisted query probes"
     )
     q = spark.createDataFrame(qrows, qplan.schema)
     probed = sorted({int(r.centroid_id) for r in qrows})
-    # norm-hoisted quantized scoring (measured in the --pq ladder:
-    # cosine() inline re-folds BOTH norms per (candidate, query) pair —
-    # 3 array folds where 1 suffices; at 16x corpus the un-hoisted
-    # probe measured 97.7 s vs the PQ probe's 9.2 s): cast + norm run
-    # once per index row and once per query row, the pair join folds
-    # only the dot.
-    qq8 = q.select(
-        "q_id",
-        "centroid_id",
-        _as_double(quantize_int8(F.col("qv"))).alias("__qv8"),
-    ).withColumn("__qn8", F.sqrt(dot(F.col("__qv8"), F.col("__qv8"))))
     idx = (
-        (index_df if index_df is not None else _index_frame(spark, path))
-        .filter(F.col("centroid_id").isin(probed))
-        .select(
-            "centroid_id", "vec_id", _as_double(F.col("q8")).alias("__cv")
-        )
-        .withColumn("__cn", F.sqrt(dot(F.col("__cv"), F.col("__cv"))))
-    )
+        index_df if index_df is not None else _index_frame(spark, path)
+    ).filter(F.col("centroid_id").isin(probed))
     w1 = Window.partitionBy("q_id").orderBy(
-        F.desc("__q8_cos"), F.col("vec_id").asc()
+        F.desc("__score"), F.col("vec_id").asc()
     )
     shortlist = (
-        idx.join(F.broadcast(qq8), "centroid_id")
-        .select(
-            "q_id",
-            "vec_id",
-            F.when(
-                F.col("__cn") * F.col("__qn8") != 0,
-                dot(F.col("__cv"), F.col("__qv8"))
-                / (F.col("__cn") * F.col("__qn8")),
-            ).alias("__q8_cos"),
-        )
+        codec.candidates(idx)
+        .join(F.broadcast(q.drop("qv")), "centroid_id")
+        .select("q_id", "vec_id", codec.score().alias("__score"))
         .withColumn("__rn", F.row_number().over(w1))
         .filter(F.col("__rn") <= k * expand)
         .select("q_id", "vec_id")
@@ -1361,11 +1367,9 @@ def ann_join_q8_persisted(
     # the base table (r13; was base ⋉ distinct(shortlist.vec_id) then
     # a re-join of shortlist — two evaluations of the windowed
     # shortlist subtree and an extra distinct exchange for an
-    # identical row multiset: the semi-join restricted base to
-    # shortlist ids, the re-join fanned them back out per q_id, which
-    # is exactly what the inner join on vec_id produces directly).
-    # The shortlist is candidate-bounded (≤ n_queries·k·expand rows),
-    # so the broadcast is metadata-sized and base is never shuffled.
+    # identical row multiset).  The shortlist is candidate-bounded
+    # (≤ n_queries·k·expand rows), so the broadcast is metadata-sized
+    # and base is never shuffled.
     cand = base.select(
         "vec_id", _as_double(F.col("embedding")).alias("cv8")
     )
@@ -1401,12 +1405,12 @@ def ann_join_q8_persisted(
 def ivf_probe_persisted_q8(
     spark,
     path: str,
-    model,
+    codec: Codec,
     query_vec: list[float],
     emb: DataFrame,
     k: int = 10,
     nprobe: int = 2,
-    expand: int = 4,
+    expand: int | None = None,
     round_to: int = 4,
     index_df: DataFrame | None = None,
 ) -> DataFrame:
@@ -1420,7 +1424,7 @@ def ivf_probe_persisted_q8(
     skip on (pair with the key-clustered CREATE INDEX layout for
     point-lookup behavior at 100 TB)."""
     shortlist = ivf_q8_shortlist(
-        spark, path, model, query_vec, k=k, nprobe=nprobe, expand=expand,
+        spark, path, codec, query_vec, k=k, nprobe=nprobe, expand=expand,
         index_df=index_df,
     )
     ids = [int(r.vec_id) for r in shortlist.collect()]  # metadata-sized

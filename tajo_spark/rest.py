@@ -22,8 +22,10 @@ Endpoints (JSON in/out):
 
 Scale note: the server never buffers unbounded results — ``limit``
 (default 1000) caps the collected page exactly like the reference's
-result-paging (QueryResultResource cacheIdSeq pages); the heavy query
-itself runs distributed on Spark either way.
+result-paging (QueryResultResource cacheIdSeq pages), and the server
+caps ``limit`` itself at ``MAX_PAGE_ROWS``: a result past the cap
+fails with a 400 naming it instead of reaching the driver.  The heavy
+query itself runs distributed on Spark either way.
 """
 
 from __future__ import annotations
@@ -33,8 +35,11 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from tajo_spark.engine import Engine
+from tajo_spark.operators.similarity import bounded_collect
 
 DEFAULT_PAGE_LIMIT = 1000
+# Server-side page ceiling, whatever ``limit`` a client asks for.
+MAX_PAGE_ROWS = 100_000
 
 
 def _json_cell(v):
@@ -117,7 +122,11 @@ class _Handler(BaseHTTPRequestHandler):
             if df is None:  # session directive / DDL without result
                 self._reply(200, {"ok": True})
                 return
-            rows = df.limit(limit).collect()
+            rows = bounded_collect(
+                df.limit(min(limit, MAX_PAGE_ROWS + 1)),
+                MAX_PAGE_ROWS,
+                "REST result page (MAX_PAGE_ROWS)",
+            )
             self._reply(
                 200,
                 {

@@ -1,4 +1,6 @@
-"""Continuous embedding ingest into a persisted quantized IVF index.
+"""Continuous embedding ingest into a persisted quantized IVF index —
+the one build/append/stream pipeline for every index codec (int8
+``Q8Codec``, IVF-PQ ``PQCodec``).
 
 The production ANN shape at 100 TB is not one-shot index builds: new
 embeddings arrive continuously (fresh crawl shards, nightly encoder
@@ -8,13 +10,15 @@ beyond-reference capability, same as streaming/pipeline.py); the
 design here extends the incremental-dedup signature-store pattern to
 the ANN index:
 
-* the coarse quantizer is **frozen at bootstrap** (the standard
-  IVF/FAISS deployment: centroids are fitted once on a sample and new
-  vectors are only *assigned*, never re-fitted — re-fitting would
-  invalidate every existing posting list);
+* the codec — coarse quantizer and, for PQ, the codebooks — is
+  **frozen at bootstrap** (`ivf_ingest_init`; the standard IVF/FAISS
+  deployment: centroids are fitted once on a sample and new vectors
+  are only *assigned*, never re-fitted — re-fitting would invalidate
+  every existing posting list);
 * each micro-batch assigns map-only against the frozen centroids
-  (model metadata broadcast by Spark ML), int8-quantizes — both at the
-  source's parallelism — and writes through `_write_index`: a
+  (model metadata broadcast by Spark ML), encodes with the codec —
+  both at the source's parallelism — and writes through
+  `_write_index`: a
   ``rebalance`` on ``centroid_id`` (the one shuffle) then
   ``partitionBy(centroid_id, __batch_id)`` with dynamic partition
   overwrite, so each touched centroid gets one file per batch and a
@@ -42,19 +46,23 @@ from pyspark.sql.types import StructType
 
 from tajo_spark import catalog
 from tajo_spark.operators.similarity import (
+    Codec,
+    Q8Codec,
+    _as_double,
     bounded_collect,
+    dot,
     ivf_assign,
     l2_normalize,
-    quantize_int8,
+    probe_ranking,
 )
 from tajo_spark.streaming.pipeline import foreach_batch
 
 
-def assign_with_frozen_centroids(batch: DataFrame, model) -> DataFrame:
-    """Map-only assignment of new vectors against an already-fitted
-    KMeans model — the ingest path never re-fits (centroid drift would
-    orphan every existing posting).  Same normalized feature space as
-    the index build (`ivf_assign`)."""
+def assign_with_frozen_centroids(batch: DataFrame, codec: Codec) -> DataFrame:
+    """Map-only assignment of new vectors against the codec's already-
+    fitted KMeans model — the ingest path never re-fits (centroid drift
+    would orphan every existing posting).  Same normalized feature
+    space as the index build (`ivf_assign`)."""
     from pyspark.ml.functions import array_to_vector
 
     feat = batch.select(
@@ -63,7 +71,7 @@ def assign_with_frozen_centroids(batch: DataFrame, model) -> DataFrame:
         array_to_vector(l2_normalize(F.col("embedding"))).alias("features"),
     )
     return (
-        model.transform(feat)
+        codec.model.transform(feat)
         .withColumnRenamed("prediction", "centroid_id")
         .drop("features")
     )
@@ -71,12 +79,13 @@ def assign_with_frozen_centroids(batch: DataFrame, model) -> DataFrame:
 
 def ivf_append_batch(
     batch: DataFrame,
-    model,
+    codec: Codec,
     index_path: str,
     batch_id: int,
     coalesce: int | None = None,
 ) -> None:
-    """Append one ingest batch to the quantized index, idempotently:
+    """Append one ingest batch to the index, idempotently: frozen-
+    centroid assignment, the codec's encode, then `_write_index`, whose
     dynamic partition overwrite replaces exactly the
     ``(centroid_id, __batch_id)`` directories this batch produces, so
     a replay of the same ``batch_id`` rewrites rather than duplicates.
@@ -84,13 +93,13 @@ def ivf_append_batch(
     The file count per append is one per touched centroid, set by the
     ``rebalance`` in `_write_index` whatever the source's partitioning.
     ``coalesce`` only caps the rebalance's partition count, i.e. the
-    number of write tasks; the scan, assignment and quantization keep
-    the source's parallelism either way."""
-    _write_q8_batch(
-        assign_with_frozen_centroids(batch, model),
+    number of write tasks; the scan, assignment and encode keep the
+    source's parallelism either way."""
+    _write_index(
+        codec.encode(assign_with_frozen_centroids(batch, codec)),
         index_path,
         batch_id,
-        coalesce=coalesce,
+        max_partitions=coalesce,
     )
 
 
@@ -100,8 +109,8 @@ def _write_index(
     batch_id: int,
     max_partitions: int | None = None,
 ) -> StructType:
-    """The one writer of every ingestable index layout (int8 and PQ
-    appends, bootstraps and the compaction fold): tag the rows with
+    """The one writer of every index layout (appends, bootstraps and
+    the compaction fold, for every codec): tag the rows with
     ``__batch_id``, ``rebalance`` on ``centroid_id``, then
     ``partitionBy(centroid_id, __batch_id)`` with dynamic partition
     overwrite.  Returns the written schema.
@@ -111,9 +120,9 @@ def _write_index(
     file per (centroid, batch) directory — a partition past the
     advisory size is split, bounding file size at scale.  Unlike a
     ``coalesce`` it is a stage boundary: everything upstream (source
-    scan, assignment, quantization or PQ encode) runs at the source's
-    parallelism instead of in the write task.  ``max_partitions`` caps
-    the rebalance's partition count."""
+    scan, assignment, encode) runs at the source's parallelism instead
+    of in the write task.  ``max_partitions`` caps the rebalance's
+    partition count."""
     df = df.withColumn("__batch_id", F.lit(batch_id).cast("long"))
     hint = ("centroid_id",) if max_partitions is None else (
         max_partitions, "centroid_id"
@@ -132,57 +141,95 @@ def _write_index(
     return df.schema
 
 
-def _write_q8_batch(
-    assigned: DataFrame,
-    index_path: str,
-    batch_id: int,
-    coalesce: int | None = None,
-) -> None:
-    """The write half of the int8 append, taking an ALREADY-assigned
-    frame — shared by `ivf_append_batch` and `ivf_ingest_init` (which
-    reuses `ivf_assign`'s materialized assignment instead of running a
-    second full-corpus model.transform pass — r11 review)."""
-    _write_index(
-        assigned.select(
-            "vec_id",
-            quantize_int8(F.col("embedding")).alias("q8"),
-            "centroid_id",
-        ),
-        index_path,
-        batch_id,
-        max_partitions=coalesce,
-    )
-
-
 def ivf_ingest_init(
-    emb: DataFrame, index_path: str, n_centroids: int = 16, seed: int = 42
-):
-    """Bootstrap the ingestable index: fit the coarse quantizer ONCE on
-    the initial corpus and write it as batch ``-1`` in the same
-    ``(centroid_id, __batch_id)`` layout every later append uses
-    (`ivf_persist_index_q8`'s flat layout can't be mixed with batch
-    partitions in one directory tree).  Returns the frozen model."""
+    emb: DataFrame,
+    index_path: str,
+    n_centroids: int = 16,
+    seed: int = 42,
+    m: int | None = None,
+    ksub: int | None = None,
+) -> Codec:
+    """Bootstrap the index: fit the coarse quantizer ONCE on the
+    initial corpus and write it as batch ``-1`` in the
+    ``(centroid_id, __batch_id)`` layout every later append uses.
+    Returns the codec — the frozen state every later append and probe
+    shares.
+
+    Without ``m``/``ksub`` the index is int8 (:class:`Q8Codec`); with
+    both it is IVF-PQ (``operators/pq.py::PQCodec``), its ``m``
+    subspace codebooks of ``ksub`` entries trained once here on a
+    driver-bounded residual sample.  Re-fitting either layer later
+    would invalidate every persisted code, so the freeze is structural.
+
+    Whatever was at ``index_path`` is deleted first: a dynamic
+    partition overwrite would replace only the directories the new
+    corpus writes, leaving older batches and centroids — encoded
+    against another model — readable beside it."""
+    import pyarrow.fs as pafs
+
+    from tajo_spark.sources.avro_py import _fs_for
+
+    if (m is None) != (ksub is None):
+        raise ValueError("a PQ index needs both m and ksub")
+    fs, root = _fs_for(index_path)  # s3a/s3n scheme bridging
+    if fs.get_file_info(root).type != pafs.FileType.NotFound:
+        fs.delete_dir(root)
+    catalog.invalidate(index_path)
     assigned, model = ivf_assign(emb, n_centroids=n_centroids, seed=seed)
+    codec = Q8Codec(model)
+    if m is not None:
+        from tajo_spark.operators.pq import PQCodec, pq_train_residuals
+
+        codec = PQCodec(model, pq_train_residuals(
+            assigned, codec.centers, m=m, ksub=ksub, seed=seed
+        ))
     # reuse the assignment ivf_assign already materialized (its feature
     # projection is localCheckpoint'd) instead of re-running a second
     # full-corpus model.transform pass through ivf_append_batch
-    _write_q8_batch(assigned, index_path, batch_id=-1)
-    return model
+    _write_index(codec.encode(assigned), index_path, batch_id=-1)
+    return codec
+
+
+def _maintained_stream(
+    stream_df: DataFrame,
+    index_path: str,
+    checkpoint: str,
+    write,
+    compact_every: int | None,
+    max_batch_dirs: int | None,
+):
+    """foreachBatch writer running ``write(batch, batch_id)`` on every
+    non-empty micro-batch, after :func:`maybe_compact`.  Compaction
+    runs BEFORE the empty-batch return: an empty cadence batch must
+    still fire its fold (the horizon proof only needs the batch id to
+    have been invoked — r11 review: skipping let partitions accumulate
+    past the intended bound)."""
+
+    def process_batch(batch: DataFrame, batch_id: int) -> None:
+        maybe_compact(
+            batch.sparkSession, index_path, batch_id,
+            compact_every=compact_every, max_batch_dirs=max_batch_dirs,
+        )
+        if not batch.isEmpty():
+            write(batch, batch_id)
+
+    return foreach_batch(stream_df, process_batch, checkpoint)
 
 
 def ivf_ingest_stream(
     stream_df: DataFrame,
-    model,
+    codec: Codec,
     index_path: str,
     checkpoint: str,
     compact_every: int | None = None,
     max_batch_dirs: int | None = None,
 ):
     """foreachBatch writer appending each micro-batch of (vec_id,
-    embedding) rows to the index.  Restartable: the checkpoint tracks
-    source progress, and replayed batch ids overwrite their own
-    partitions.  Returns the unstarted ``DataStreamWriter`` (caller
-    `.start()`s it — same convention as `incremental_dedup_stream`).
+    embedding) rows to the index under the frozen codec.  Restartable:
+    the checkpoint tracks source progress, and replayed batch ids
+    overwrite their own partitions.  Returns the unstarted
+    ``DataStreamWriter`` (caller `.start()`s it — same convention as
+    `incremental_dedup_stream`).
 
     ``compact_every`` / ``max_batch_dirs`` arm :func:`maybe_compact` at
     the head of every micro-batch — the r10 sustained-ingest rung
@@ -191,21 +238,13 @@ def ivf_ingest_stream(
     on SLO breach" as the maintenance rule, but nothing *triggered* the
     fold; with these armed, the stream maintains itself (sawtooth
     steady state measured in SCALE.md)."""
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        # compaction BEFORE the empty-batch return: an empty cadence
-        # batch must still fire its fold (the horizon proof only needs
-        # the batch id to have been invoked — r11 review: skipping let
-        # partitions accumulate past the intended bound)
-        maybe_compact(
-            batch.sparkSession, index_path, batch_id,
-            compact_every=compact_every, max_batch_dirs=max_batch_dirs,
-        )
-        if batch.isEmpty():
-            return
-        ivf_append_batch(batch, model, index_path, batch_id)
-
-    return foreach_batch(stream_df, process_batch, checkpoint)
+    return _maintained_stream(
+        stream_df, index_path, checkpoint,
+        lambda batch, batch_id: ivf_append_batch(
+            batch, codec, index_path, batch_id
+        ),
+        compact_every, max_batch_dirs,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -220,13 +259,15 @@ def ivf_ingest_stream(
 
 def neardup_gate_batch(
     batch: DataFrame,
-    model,
+    codec: Codec,
     index_path: str,
     batch_id: int,
     tau: float = 0.92,
     nprobe: int = 2,
 ) -> DataFrame:
-    """Survivors of one micro-batch under the two-stage near-dup gate.
+    """Survivors of one micro-batch under the two-stage near-dup gate
+    of an int8 index (``codec`` a :class:`Q8Codec`; the in-batch gate
+    compares batch rows with each other, which PQ codes cannot do).
 
     Gate A (vs the index): a vector whose int8 cosine against ANY
     indexed vector in its ``nprobe`` nearest centroid partitions is
@@ -247,56 +288,37 @@ def neardup_gate_batch(
     any nprobe-bounded probe, a true near-dup hiding in an unprobed
     centroid escapes the gate — the standard IVF recall trade
     (operators/similarity.py nprobe docs), dialed by ``nprobe``.
-    """
-    from tajo_spark.operators.similarity import _as_double, dot
 
-    spark = batch.sparkSession
-    centers = model.clusterCenters()
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-        "centroid_id INT, cv ARRAY<DOUBLE>",
-    ).agg(F.collect_list(F.struct("centroid_id", "cv")).alias("__cents"))
-    d2 = lambda s: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("__qn"), s.cv, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    probes_arr = F.slice(
-        F.reverse(
-            F.array_sort(
-                F.transform(
-                    F.col("__cents"),
-                    lambda s: F.struct(
-                        (-F.round(d2(s), 9)).alias("negd"),
-                        (-s.centroid_id).alias("neg_id"),
-                    ),
-                )
-            )
-        ),
-        1,
-        nprobe,
-    )
-    q = (
-        batch.select(
-            "vec_id", _as_double(F.col("embedding")).alias("qv")
+    Per batch the plan metadata is the codec's centroid literal and the
+    index is read through the catalog memo with the schema its writer
+    declared — no centroid frame, no schema-inference job.
+    """
+    if not isinstance(codec, Q8Codec):
+        raise ValueError(
+            f"the near-dup gate scores int8 vectors; got a {type(codec).__name__}"
         )
+    spark = batch.sparkSession
+    probes = (
+        batch.select("vec_id", _as_double(F.col("embedding")).alias("qv"))
         .withColumn("__qn", l2_normalize(F.col("qv")))
-        .join(F.broadcast(cents))
-        .select("vec_id", F.explode(probes_arr).alias("__p"))
+        .select(
+            "vec_id",
+            *codec.query_columns(),
+            F.explode(probe_ranking(codec, F.col("__qn"), nprobe)).alias("__p"),
+        )
         .select(
             "vec_id",
             (-F.col("__p.neg_id")).cast("int").alias("centroid_id"),
+            "__qv8",
+            "__qn8",
         )
+        .localCheckpoint()  # reused 3x below
     )
-    q8 = batch.select(
-        "vec_id", _as_double(quantize_int8(F.col("embedding"))).alias("__qv8")
-    ).withColumn("__qn8", F.sqrt(dot(F.col("__qv8"), F.col("__qv8"))))
-    probes = q.join(q8, "vec_id").localCheckpoint()  # reused 3x below
     probed = [
         int(r.centroid_id)
         for r in bounded_collect(
             probes.select("centroid_id").distinct(),
-            len(centers),
+            len(codec.centers),
             "neardup_gate_batch probed centroids",
         )
     ]  # metadata-sized: at most the model's k
@@ -307,7 +329,7 @@ def neardup_gate_batch(
     # Gate A: probe the persisted index, excluding this batch's own
     # partitions (replay safety)
     idx = (
-        spark.read.parquet(index_path)
+        catalog.load_parquet(spark, index_path)
         .filter(
             F.col("centroid_id").isin(probed)
             & (F.col("__batch_id") != F.lit(batch_id))
@@ -361,7 +383,7 @@ def neardup_gate_batch(
 
 def gated_ingest_batch(
     batch: DataFrame,
-    model,
+    codec: Codec,
     index_path: str,
     batch_id: int,
     tau: float = 0.92,
@@ -374,7 +396,7 @@ def gated_ingest_batch(
     batch)`` partitions never exist, matching a replay that also
     gates everything)."""
     survivors = neardup_gate_batch(
-        batch, model, index_path, batch_id, tau=tau, nprobe=nprobe
+        batch, codec, index_path, batch_id, tau=tau, nprobe=nprobe
     ).localCheckpoint()
     # checkpoint before isEmpty: otherwise the gate's full plan (index
     # probe + both dup joins + anti-join) runs TWICE — once for the
@@ -385,13 +407,13 @@ def gated_ingest_batch(
     if survivors.isEmpty():
         return
     ivf_append_batch(
-        survivors, model, index_path, batch_id, coalesce=coalesce
+        survivors, codec, index_path, batch_id, coalesce=coalesce
     )
 
 
 def gated_ingest_stream(
     stream_df: DataFrame,
-    model,
+    codec: Codec,
     index_path: str,
     checkpoint: str,
     tau: float = 0.92,
@@ -410,126 +432,14 @@ def gated_ingest_stream(
     folded base — the fold changes directory layout, never the row
     set (dedup on ``vec_id``), so gate decisions and replays are
     unaffected (pinned in tests/test_ann_ingest.py)."""
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        maybe_compact(  # before the empty return — see ivf_ingest_stream
-            batch.sparkSession, index_path, batch_id,
-            compact_every=compact_every, max_batch_dirs=max_batch_dirs,
-        )
-        if batch.isEmpty():
-            return
-        gated_ingest_batch(
-            batch, model, index_path, batch_id, tau=tau, nprobe=nprobe,
+    return _maintained_stream(
+        stream_df, index_path, checkpoint,
+        lambda batch, batch_id: gated_ingest_batch(
+            batch, codec, index_path, batch_id, tau=tau, nprobe=nprobe,
             coalesce=coalesce,
-        )
-
-    return foreach_batch(stream_df, process_batch, checkpoint)
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ ingest: same frozen-quantizer contract, one level deeper — the
-# PQ codebooks are fitted once at bootstrap alongside the coarse
-# centroids and new vectors are only ENCODED (assignment + residual
-# code lookup, both map-only).  Re-fitting either layer would invalidate
-# every persisted code, so the freeze is structural, not an option.
-
-
-def pq_append_batch(
-    batch: DataFrame,
-    model,
-    codebooks,
-    index_path: str,
-    batch_id: int,
-    coalesce: int | None = None,
-) -> None:
-    """Append one micro-batch of (vec_id, embedding) rows to the
-    persisted IVF-PQ index: map-only frozen-centroid assignment, then
-    the Arrow-vectorized residual encode (operators/pq.py), written
-    ``partitionBy(centroid_id, __batch_id)`` with dynamic overwrite —
-    replayed batch ids rewrite exactly their own directories.
-    ``coalesce`` caps the write tasks exactly like `ivf_append_batch`;
-    one file per touched centroid either way."""
-    _write_pq_batch(
-        assign_with_frozen_centroids(batch, model),
-        model, codebooks, index_path, batch_id, coalesce=coalesce,
+        ),
+        compact_every, max_batch_dirs,
     )
-
-
-def _write_pq_batch(
-    assigned: DataFrame,
-    model,
-    codebooks,
-    index_path: str,
-    batch_id: int,
-    coalesce: int | None = None,
-) -> None:
-    """Encode-and-write half of the PQ append, taking an
-    already-assigned frame (shared with `pq_ingest_init`)."""
-    from tajo_spark.operators.pq import pq_encode_codes
-
-    centers = [list(c) for c in model.clusterCenters()]
-    _write_index(
-        pq_encode_codes(assigned, centers, codebooks),
-        index_path,
-        batch_id,
-        max_partitions=coalesce,
-    )
-
-
-def pq_ingest_init(
-    emb: DataFrame,
-    index_path: str,
-    n_centroids: int = 16,
-    m: int = 8,
-    ksub: int = 16,
-    seed: int = 42,
-):
-    """Bootstrap the ingestable IVF-PQ index: fit coarse centroids AND
-    PQ codebooks once on the initial corpus (driver-bounded residual
-    sample — the SHARED deterministic sampling rule,
-    operators/pq.py::pq_train_residuals), write the corpus as batch
-    ``-1``.  Returns (model, codebooks) — the frozen state every later
-    append and probe shares."""
-    import numpy as np
-
-    from tajo_spark.operators.pq import pq_train_residuals
-
-    assigned, model = ivf_assign(emb, n_centroids=n_centroids, seed=seed)
-    centers = [
-        np.asarray(c, dtype="float64") for c in model.clusterCenters()
-    ]
-    codebooks = pq_train_residuals(
-        assigned, centers, m=m, ksub=ksub, seed=seed
-    )
-    # reuse ivf_assign's materialized assignment for the bootstrap
-    # write instead of a second full-corpus model.transform pass
-    _write_pq_batch(assigned, model, codebooks, index_path, batch_id=-1)
-    return model, codebooks
-
-
-def pq_ingest_stream(
-    stream_df: DataFrame,
-    model,
-    codebooks,
-    index_path: str,
-    checkpoint: str,
-    compact_every: int | None = None,
-    max_batch_dirs: int | None = None,
-):
-    """foreachBatch writer appending micro-batches to the IVF-PQ index
-    under the frozen (centroids, codebooks) pair.  Same restart/replay
-    contract as `ivf_ingest_stream`, same auto-compaction arming."""
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        maybe_compact(  # before the empty return — see ivf_ingest_stream
-            batch.sparkSession, index_path, batch_id,
-            compact_every=compact_every, max_batch_dirs=max_batch_dirs,
-        )
-        if batch.isEmpty():
-            return
-        pq_append_batch(batch, model, codebooks, index_path, batch_id)
-
-    return foreach_batch(stream_df, process_batch, checkpoint)
 
 
 def compact_index_batches(

@@ -30,6 +30,24 @@ def persisted_rdd_ids(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
+def jobs_of(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (result, the task
+    count of every stage of every job it submitted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+    return out, [
+        [i.numTasks for i in map(st.getStageInfo, job.stageIds) if i]
+        for job in jobs
+        if job
+    ]
+
+
 @pytest.fixture()
 def clean_catalog_memos():
     """Run a test on empty catalog memos, restoring them afterwards."""

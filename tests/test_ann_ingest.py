@@ -6,12 +6,14 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
-from tajo_spark.catalog import load_table
+from tajo_spark.catalog import load_parquet, load_table
 from tajo_spark.operators import similarity as sim
 from tajo_spark.streaming import ann_ingest as AI
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_of
 
 
 def _corpus(spark):
@@ -26,7 +28,7 @@ def test_stream_ingest_equals_frozen_batch_assignment(spark, tmp_path):
     rest = emb.filter(F.col("vec_id") >= 300)
 
     index = str(tmp_path / "index")
-    model = AI.ivf_ingest_init(boot, index, n_centroids=8)
+    codec = AI.ivf_ingest_init(boot, index, n_centroids=8)
 
     # late vectors arrive as two files → two micro-batches
     src = str(tmp_path / "src")
@@ -45,7 +47,7 @@ def test_stream_ingest_equals_frozen_batch_assignment(spark, tmp_path):
         .parquet(src)
     )
     q = AI.ivf_ingest_stream(
-        stream, model, index, str(tmp_path / "ckpt")
+        stream, codec, index, str(tmp_path / "ckpt")
     ).start()
     q.processAllAvailable()
     q.stop()
@@ -58,7 +60,7 @@ def test_stream_ingest_equals_frozen_batch_assignment(spark, tmp_path):
     }
     want = {
         (r.vec_id, r.centroid_id)
-        for r in AI.assign_with_frozen_centroids(emb, model).collect()
+        for r in AI.assign_with_frozen_centroids(emb, codec).collect()
     }
     assert got == want  # every vector present once, frozen assignment
     # quantized payload matches the batch quantizer bit-for-bit
@@ -80,13 +82,13 @@ def test_replayed_batch_id_overwrites_not_duplicates(spark, tmp_path):
     boot = emb.filter(F.col("vec_id") < 100)
     late = emb.filter(F.col("vec_id").between(100, 199))
     index = str(tmp_path / "index")
-    model = AI.ivf_ingest_init(boot, index, n_centroids=4)
+    codec = AI.ivf_ingest_init(boot, index, n_centroids=4)
 
-    AI.ivf_append_batch(late, model, index, batch_id=7)
+    AI.ivf_append_batch(late, codec, index, batch_id=7)
     n1 = spark.read.parquet(index).count()
     # crash-replay of the SAME batch id: dynamic overwrite must land on
     # the same (centroid_id, __batch_id) partitions, not append
-    AI.ivf_append_batch(late, model, index, batch_id=7)
+    AI.ivf_append_batch(late, codec, index, batch_id=7)
     n2 = spark.read.parquet(index).count()
     assert n1 == n2 == 200
     assert (
@@ -98,17 +100,60 @@ def test_replayed_batch_id_overwrites_not_duplicates(spark, tmp_path):
     )
 
 
+def test_rebootstrap_replaces_the_whole_index(spark, tmp_path):
+    # a bootstrap over an existing index must not leave the old
+    # model's batches or centroid directories readable beside the new
+    # base (a dynamic overwrite alone replaces only what the new corpus
+    # writes)
+    emb = _corpus(spark)
+    index = str(tmp_path / "index")
+    codec = AI.ivf_ingest_init(
+        emb.filter(F.col("vec_id") < 300), index, n_centroids=4
+    )
+    AI.ivf_append_batch(
+        emb.filter(F.col("vec_id").between(300, 349)), codec, index,
+        batch_id=5,
+    )
+    assert sim.ivf_q8_shortlist(spark, index, codec, [1.0] * 64).count()
+    AI.ivf_ingest_init(emb.filter(F.col("vec_id") < 200), index, n_centroids=2)
+    assert sorted(
+        d for d in os.listdir(index) if d.startswith("centroid_id=")
+    ) == ["centroid_id=0", "centroid_id=1"]
+    got = spark.read.parquet(index)
+    assert got.count() == 200
+    assert {r[0] for r in got.select("__batch_id").distinct().collect()} == {-1}
+    # the probe memo was dropped too: it sees the new base only
+    assert load_parquet(spark, index).count() == 200
+
+
+def test_serve_construction_runs_one_job_per_codec(spark, tmp_path):
+    # centroids and codebooks are plan literals: building the serving
+    # frame runs only the request-sized query-probe read
+    emb = _corpus(spark)
+    q = emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("q_id"), "embedding"
+    )
+    for name, geometry in (("q8", {}), ("pq", {"m": 8, "ksub": 16})):
+        index = str(tmp_path / name)
+        codec = AI.ivf_ingest_init(emb, index, n_centroids=4, **geometry)
+        df, jobs = jobs_of(spark, f"serve_{name}", lambda: sim.ann_join_persisted(
+            spark, index, codec, q, emb, k=5, nprobe=2
+        ))
+        assert len(jobs) == 1, (name, jobs)
+        assert df.count() == 5 * q.count()
+
+
 def test_probe_prunes_and_finds_streamed_vector(spark, tmp_path):
     emb = _corpus(spark)
     boot = emb.filter(F.col("vec_id") < 300)
     late = emb.filter(F.col("vec_id") >= 300)
     index = str(tmp_path / "index")
-    model = AI.ivf_ingest_init(boot, index, n_centroids=8)
-    AI.ivf_append_batch(late, model, index, batch_id=0)
+    codec = AI.ivf_ingest_init(boot, index, n_centroids=8)
+    AI.ivf_append_batch(late, codec, index, batch_id=0)
 
     qrow = emb.filter(F.col("vec_id") == 450).first()
     shortlist = sim.ivf_q8_shortlist(
-        spark, index, model, list(qrow.embedding), k=5, nprobe=2
+        spark, index, codec, list(qrow.embedding), k=5, nprobe=2
     )
     ids = [r.vec_id for r in shortlist.collect()]
     assert 450 in ids  # a streamed vector is its own nearest neighbor
@@ -118,25 +163,7 @@ def test_probe_prunes_and_finds_streamed_vector(spark, tmp_path):
     assert "centroid_id" in pf, plan  # pruning survives the batch layout
 
 
-def _jobs_of(spark, group, fn):
-    """Run ``fn`` under a fresh job group; return (result, the task
-    count of every stage of every job it submitted)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    st = sc.statusTracker()
-    jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
-    return out, [
-        [i.numTasks for i in map(st.getStageInfo, job.stageIds) if i]
-        for job in jobs
-        if job
-    ]
-
-
-def _broadcast_join_shortlist(spark, index, model, qv, k, nprobe, expand):
+def _broadcast_join_shortlist(spark, index, codec, qv, k, nprobe, expand):
     """The shortlist as it was formulated before the query side became
     plan literals: a one-row createDataFrame broadcast-joined to a
     fresh read of the index.  Reference for bit-identity."""
@@ -147,7 +174,7 @@ def _broadcast_join_shortlist(spark, index, model, qv, k, nprobe, expand):
     qv = np.asarray(qv, dtype="float64")
     qn = qv / max(float(np.linalg.norm(qv)), 1e-12)
     order = np.argsort(
-        [float(np.linalg.norm(c - qn)) for c in model.clusterCenters()]
+        [float(np.linalg.norm(c - qn)) for c in codec.model.clusterCenters()]
     )
     probe = [int(i) for i in order[:nprobe]]
     scale = max(float(np.max(np.abs(qv))), 1e-300) / 127.0
@@ -186,16 +213,16 @@ def test_probe_right_after_append_runs_one_job(spark, tmp_path):
     # broadcast build): the whole probe is one scan job
     emb = _corpus(spark)
     index = str(tmp_path / "index")
-    model = AI.ivf_ingest_init(
+    codec = AI.ivf_ingest_init(
         emb.filter(F.col("vec_id") < 300), index, n_centroids=4
     )
     AI.ivf_append_batch(
-        emb.filter(F.col("vec_id") >= 300), model, index, batch_id=0,
+        emb.filter(F.col("vec_id") >= 300), codec, index, batch_id=0,
         coalesce=1,
     )
     qv = list(emb.filter(F.col("vec_id") == 450).first().embedding)
-    rows, jobs = _jobs_of(spark, "probe_after_append", lambda: sim.ivf_q8_shortlist(
-        spark, index, model, qv, k=5, nprobe=2
+    rows, jobs = jobs_of(spark, "probe_after_append", lambda: sim.ivf_q8_shortlist(
+        spark, index, codec, qv, k=5, nprobe=2
     ).collect())
     assert 450 in [r.vec_id for r in rows]
     assert len(jobs) == 1, jobs
@@ -211,13 +238,13 @@ def test_append_from_many_partitions_writes_one_file_per_centroid(
 
     emb = _corpus(spark)
     index = str(tmp_path / "index")
-    model = AI.ivf_ingest_init(
+    codec = AI.ivf_ingest_init(
         emb.filter(F.col("vec_id") < 200), index, n_centroids=4
     )
     late = emb.filter(F.col("vec_id") >= 200).repartition(3)
     for b, cap in ((0, 1), (1, None)):
-        _, jobs = _jobs_of(spark, f"append_{b}", lambda: AI.ivf_append_batch(
-            late, model, index, batch_id=b, coalesce=cap
+        _, jobs = jobs_of(spark, f"append_{b}", lambda: AI.ivf_append_batch(
+            late, codec, index, batch_id=b, coalesce=cap
         ))
         assert 3 in [n for stages in jobs for n in stages], jobs
         leaves = glob.glob(os.path.join(index, "centroid_id=*", f"__batch_id={b}"))
@@ -237,13 +264,13 @@ def test_literal_probe_equals_broadcast_join_before_and_after_fold(
 
     emb = _corpus(spark)
     index = str(tmp_path / "index")
-    model = AI.ivf_ingest_init(
+    codec = AI.ivf_ingest_init(
         emb.filter(F.col("vec_id") < 200), index, n_centroids=4
     )
     for b in (0, 1):
         AI.ivf_append_batch(
             emb.filter(F.col("vec_id").between(200 + 150 * b, 349 + 150 * b)),
-            model, index, batch_id=b, coalesce=1,
+            codec, index, batch_id=b, coalesce=1,
         )
     rng = np.random.default_rng(7)
     queries = [rng.standard_normal(64).tolist() for _ in range(4)]
@@ -252,13 +279,13 @@ def test_literal_probe_equals_broadcast_join_before_and_after_fold(
     def both():
         got = [
             [tuple(r) for r in sim.ivf_q8_shortlist(
-                spark, index, model, qv, k=5, nprobe=2, expand=3
+                spark, index, codec, qv, k=5, nprobe=2, expand=3
             ).collect()]
             for qv in queries
         ]
         want = [
             [tuple(r) for r in _broadcast_join_shortlist(
-                spark, index, model, qv, k=5, nprobe=2, expand=3
+                spark, index, codec, qv, k=5, nprobe=2, expand=3
             ).collect()]
             for qv in queries
         ]
@@ -285,7 +312,7 @@ def test_pq_stream_ingest_equals_frozen_batch_encode(spark, tmp_path):
     rest = emb.filter(F.col("vec_id") >= 300)
 
     index = str(tmp_path / "pq_index")
-    model, codebooks = AI.pq_ingest_init(boot, index, n_centroids=4)
+    codec = AI.ivf_ingest_init(boot, index, n_centroids=4, m=8, ksub=16)
 
     src = str(tmp_path / "pq_src")
     os.makedirs(src)
@@ -300,8 +327,8 @@ def test_pq_stream_ingest_equals_frozen_batch_encode(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = AI.pq_ingest_stream(
-        stream, model, codebooks, index, str(tmp_path / "pq_ckpt")
+    q = AI.ivf_ingest_stream(
+        stream, codec, index, str(tmp_path / "pq_ckpt")
     ).start()
     q.processAllAvailable()
     q.stop()
@@ -312,11 +339,12 @@ def test_pq_stream_ingest_equals_frozen_batch_encode(spark, tmp_path):
         .select("vec_id", "centroid_id", "codes")
         .collect()
     }
-    centers = [list(c) for c in model.clusterCenters()]
+    centers = [list(c) for c in codec.model.clusterCenters()]
     want = {
         (r.vec_id, r.centroid_id, tuple(r.codes))
         for r in pq_encode_codes(
-            AI.assign_with_frozen_centroids(emb, model), centers, codebooks
+            AI.assign_with_frozen_centroids(emb, codec), centers,
+            codec.codebooks,
         ).collect()
     }
     assert got == want
@@ -328,33 +356,46 @@ def test_pq_ingest_replay_is_idempotent(spark, tmp_path):
     boot = emb.filter(F.col("vec_id") < 300)
     late = emb.filter(F.col("vec_id") >= 300)
     index = str(tmp_path / "pq_index2")
-    model, codebooks = AI.pq_ingest_init(boot, index, n_centroids=4)
-    AI.pq_append_batch(late, model, codebooks, index, batch_id=7)
+    codec = AI.ivf_ingest_init(boot, index, n_centroids=4, m=8, ksub=16)
+    AI.ivf_append_batch(late, codec, index, batch_id=7)
     before = spark.read.parquet(index).count()
-    AI.pq_append_batch(late, model, codebooks, index, batch_id=7)  # replay
+    AI.ivf_append_batch(late, codec, index, batch_id=7)  # replay
     after = spark.read.parquet(index).count()
     assert before == after == emb.count()
+
+
+def test_neardup_gate_rejects_a_pq_codec():
+    # Gate B compares batch vectors with each other in the index's
+    # encoding, which only the int8 codec can do for unencoded rows
+    from tajo_spark.operators.pq import PQCodec
+
+    class _Model:
+        def clusterCenters(self):
+            return [np.zeros(4)]
+
+    codec = PQCodec(_Model(), np.zeros((2, 2, 2)))
+    with pytest.raises(ValueError, match="near-dup gate scores int8"):
+        AI.neardup_gate_batch(None, codec, "unused", batch_id=0)
 
 
 def test_pq_probe_prunes_across_ingest_batches(spark, tmp_path):
     # the accumulated (centroid_id, __batch_id) tree must still prune
     # on centroid_id at the top level, and batch probes over the
     # ingested index must serve correct exact-reranked results.
-    from tajo_spark.operators.pq import ann_join_pq_persisted
     from tajo_spark.operators.similarity import ann_join
 
     emb = _corpus(spark)
     boot = emb.filter(F.col("vec_id") < 300)
     late = emb.filter(F.col("vec_id") >= 300)
     index = str(tmp_path / "pq_index3")
-    model, codebooks = AI.pq_ingest_init(boot, index, n_centroids=4)
-    AI.pq_append_batch(late, model, codebooks, index, batch_id=0)
+    codec = AI.ivf_ingest_init(boot, index, n_centroids=4, m=8, ksub=16)
+    AI.ivf_append_batch(late, codec, index, batch_id=0)
 
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    df = ann_join_pq_persisted(
-        spark, index, model, codebooks, q, emb,
+    df = sim.ann_join_persisted(
+        spark, index, codec, q, emb,
         k=5, nprobe=4, expand=1000,
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -370,20 +411,17 @@ def test_compact_index_batches_folds_and_preserves_probes(spark, tmp_path):
     # three ingest batches -> one base partition per centroid after
     # compaction; row set byte-identical, probe results unchanged,
     # batch directories actually gone.
-    from tajo_spark.operators.pq import ann_join_pq_persisted
-
     emb = _corpus(spark)
     index = str(tmp_path / "pq_compact")
-    model, codebooks = AI.pq_ingest_init(
-        emb.filter(F.col("vec_id") < 200), index, n_centroids=4
+    codec = AI.ivf_ingest_init(
+        emb.filter(F.col("vec_id") < 200), index, n_centroids=4, m=8, ksub=16
     )
-    AI.pq_append_batch(
+    AI.ivf_append_batch(
         emb.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 350)),
-        model, codebooks, index, batch_id=0,
+        codec, index, batch_id=0,
     )
-    AI.pq_append_batch(
-        emb.filter(F.col("vec_id") >= 350), model, codebooks, index,
-        batch_id=1,
+    AI.ivf_append_batch(
+        emb.filter(F.col("vec_id") >= 350), codec, index, batch_id=1,
     )
     rows_before = {
         (r.vec_id, r.centroid_id, tuple(r.codes))
@@ -394,8 +432,8 @@ def test_compact_index_batches_folds_and_preserves_probes(spark, tmp_path):
     )
     probe_before = sorted(
         (r.q_id, r.rank, r.vec_id)
-        for r in ann_join_pq_persisted(
-            spark, index, model, codebooks, q, emb, k=5, nprobe=4,
+        for r in sim.ann_join_persisted(
+            spark, index, codec, q, emb, k=5, nprobe=4,
             expand=1000,
         ).collect()
     )
@@ -420,8 +458,8 @@ def test_compact_index_batches_folds_and_preserves_probes(spark, tmp_path):
     assert batch_dirs == []
     probe_after = sorted(
         (r.q_id, r.rank, r.vec_id)
-        for r in ann_join_pq_persisted(
-            spark, index, model, codebooks, q, emb, k=5, nprobe=4,
+        for r in sim.ann_join_persisted(
+            spark, index, codec, q, emb, k=5, nprobe=4,
             expand=1000,
         ).collect()
     )
@@ -434,8 +472,6 @@ def test_auto_compaction_fires_in_stream_and_bounds_dirs(spark, tmp_path):
     # The self-maintaining stream must end with a bounded directory
     # tree, the full row set, no duplicates, and probe results
     # identical to an unmaintained twin.
-    from tajo_spark.operators.pq import ann_join_pq_persisted
-
     emb = _corpus(spark)
     boot = emb.filter(F.col("vec_id") < 200)
     rest = emb.filter(F.col("vec_id") >= 200)
@@ -453,17 +489,17 @@ def test_auto_compaction_fires_in_stream_and_bounds_dirs(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        q = AI.pq_ingest_stream(stream, model, codebooks, index, ckpt, **kw).start()
+        q = AI.ivf_ingest_stream(stream, codec, index, ckpt, **kw).start()
         q.processAllAvailable()
         q.stop()
 
     idx_auto = str(tmp_path / "auto")
-    model, codebooks = AI.pq_ingest_init(boot, idx_auto, n_centroids=4)
+    codec = AI.ivf_ingest_init(boot, idx_auto, n_centroids=4, m=8, ksub=16)
     run(idx_auto, str(tmp_path / "ckpt_a"), str(tmp_path / "src_a"),
         compact_every=2)
 
     idx_raw = str(tmp_path / "raw")
-    AI.pq_append_batch(boot, model, codebooks, idx_raw, batch_id=-1)
+    AI.ivf_append_batch(boot, codec, idx_raw, batch_id=-1)
     run(idx_raw, str(tmp_path / "ckpt_r"), str(tmp_path / "src_r"))
 
     # fold fired: only batches >= the last fold horizon survive as
@@ -482,8 +518,8 @@ def test_auto_compaction_fires_in_stream_and_bounds_dirs(spark, tmp_path):
     )
     probe = lambda idx: sorted(  # noqa: E731
         (r.q_id, r.rank, r.vec_id)
-        for r in ann_join_pq_persisted(
-            spark, idx, model, codebooks, q, emb, k=5, nprobe=4,
+        for r in sim.ann_join_persisted(
+            spark, idx, codec, q, emb, k=5, nprobe=4,
             expand=1000,
         ).collect()
     )
@@ -495,13 +531,13 @@ def test_auto_compaction_dir_threshold_arm(spark, tmp_path):
     # exceeds the threshold, independent of batch-id cadence.
     emb = _corpus(spark)
     index = str(tmp_path / "thresh")
-    model = AI.ivf_ingest_init(
+    codec = AI.ivf_ingest_init(
         emb.filter(F.col("vec_id") < 200), index, n_centroids=4
     )
     for b in range(3):
         AI.ivf_append_batch(
             emb.filter(F.col("vec_id").between(200 + 100 * b, 299 + 100 * b)),
-            model, index, batch_id=b,
+            codec, index, batch_id=b,
         )
     dirs = AI.count_batch_dirs(index, exclude_base=True)
     assert dirs > 8  # 3 batches x 4 centroids, base excluded
@@ -525,16 +561,16 @@ def test_maybe_compact_never_folds_the_inflight_batch(spark, tmp_path):
     # directories and nothing is double-counted.
     emb = _corpus(spark)
     index = str(tmp_path / "horizon")
-    model = AI.ivf_ingest_init(
+    codec = AI.ivf_ingest_init(
         emb.filter(F.col("vec_id") < 300), index, n_centroids=4
     )
     b3 = emb.filter(F.col("vec_id").between(300, 399))
     b4 = emb.filter(F.col("vec_id") >= 400)
-    AI.ivf_append_batch(b3, model, index, batch_id=3)
+    AI.ivf_append_batch(b3, codec, index, batch_id=3)
     # batch 4 arrives; the cadence arm fires and folds upto batch 3
     stats = AI.maybe_compact(spark, index, 4, compact_every=4)
     assert stats is not None and stats["trigger"] == "every"
-    AI.ivf_append_batch(b4, model, index, batch_id=4)
+    AI.ivf_append_batch(b4, codec, index, batch_id=4)
     # the fold left exactly base + batch-4 partitions: batch 3 is in
     # the base, batch 4 (in-flight at fold time) kept its own dirs
     import os as _os
@@ -553,7 +589,7 @@ def test_maybe_compact_never_folds_the_inflight_batch(spark, tmp_path):
     # (same batch id, same horizon — batch 4 still never folded) then
     # the append overwrites its own partitions — still no duplicates
     AI.maybe_compact(spark, index, 4, compact_every=4)
-    AI.ivf_append_batch(b4, model, index, batch_id=4)
+    AI.ivf_append_batch(b4, codec, index, batch_id=4)
     assert spark.read.parquet(index).count() == n1
     assert (
         spark.read.parquet(index)
@@ -568,11 +604,11 @@ def test_compact_skips_non_numeric_batch_dir(spark, tmp_path):
 
     emb = _corpus(spark)
     index = str(tmp_path / "stray")
-    model = AI.ivf_ingest_init(
+    codec = AI.ivf_ingest_init(
         emb.filter(F.col("vec_id") < 300), index, n_centroids=4
     )
     AI.ivf_append_batch(
-        emb.filter(F.col("vec_id") >= 300), model, index, batch_id=0
+        emb.filter(F.col("vec_id") >= 300), codec, index, batch_id=0
     )
     cdir = next(
         d for d in _os.listdir(index) if d.startswith("centroid_id=")
@@ -590,15 +626,15 @@ def test_compact_rerun_after_simulated_crash_does_not_duplicate(spark, tmp_path)
     # the leftovers in twice.
     emb = _corpus(spark)
     index = str(tmp_path / "pq_crash")
-    model, codebooks = AI.pq_ingest_init(
-        emb.filter(F.col("vec_id") < 300), index, n_centroids=4
+    codec = AI.ivf_ingest_init(
+        emb.filter(F.col("vec_id") < 300), index, n_centroids=4, m=8, ksub=16
     )
     late = emb.filter(F.col("vec_id") >= 300)
-    AI.pq_append_batch(late, model, codebooks, index, batch_id=3)
+    AI.ivf_append_batch(late, codec, index, batch_id=3)
     AI.compact_index_batches(spark, index, upto_batch_id=3)
     # simulate the crash leftovers: the same batch's directories
     # reappear alongside the already-folded base
-    AI.pq_append_batch(late, model, codebooks, index, batch_id=3)
+    AI.ivf_append_batch(late, codec, index, batch_id=3)
     stats = AI.compact_index_batches(spark, index, upto_batch_id=3)
     assert stats["rows_after"] == emb.count()
     assert spark.read.parquet(index).count() == emb.count()

@@ -16,8 +16,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from tajo_spark.operators import pq as P
+from tajo_spark.operators import similarity as S
 from tajo_spark.operators.similarity import ann_join
 from tajo_spark.queries.datapipe import load_table
+from tajo_spark.streaming.ann_ingest import ivf_ingest_init
 from tests.conftest import SF_DIR
 
 N_CENTROIDS = 4
@@ -27,10 +29,10 @@ N_CENTROIDS = 4
 def pq_index(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("ivfpq") / "index")
     emb = load_table(spark, SF_DIR, "embeddings")
-    model, codebooks = P.ivf_pq_persist_index(
-        emb, path, n_centroids=N_CENTROIDS
+    codec = ivf_ingest_init(
+        emb, path, n_centroids=N_CENTROIDS, m=P.DEFAULT_M, ksub=P.DEFAULT_KSUB
     )
-    return path, model, codebooks, emb
+    return path, codec, emb
 
 
 def _queries(emb):
@@ -43,10 +45,10 @@ def test_pq_full_probe_degrades_to_exact(spark, pq_index):
     # nprobe = all centroids + expand >> corpus: the PQ stage selects
     # everything, so the exact rerank must reproduce ann_join verbatim
     # (ranks, ids, scores) — the index-vs-full-scan contract.
-    path, model, codebooks, emb = pq_index
+    path, codec, emb = pq_index
     q = _queries(emb)
-    full = P.ann_join_pq_persisted(
-        spark, path, model, codebooks, q, emb,
+    full = S.ann_join_persisted(
+        spark, path, codec, q, emb,
         k=5, nprobe=N_CENTROIDS, expand=1000,
     )
     exact = ann_join(q, emb, k=5)
@@ -58,8 +60,8 @@ def test_pq_full_probe_degrades_to_exact(spark, pq_index):
 def test_pq_codes_schema_and_width(spark, pq_index):
     # 8 tinyint codes per vector (32x under 64 float32s), every code a
     # valid codebook row id.
-    path, model, codebooks, emb = pq_index
-    m, ksub, dsub = codebooks.shape
+    path, codec, emb = pq_index
+    m, ksub, dsub = codec.codebooks.shape
     idx = spark.read.parquet(path)
     assert dict(idx.dtypes)["codes"] == "array<tinyint>"
     bad = idx.filter(
@@ -72,10 +74,10 @@ def test_pq_codes_schema_and_width(spark, pq_index):
 def test_pq_probe_prunes_partitions(spark, pq_index):
     # the probe scan must carry centroid_id PartitionFilters: directory
     # pruning happens at file listing, before any byte is read.
-    path, model, codebooks, emb = pq_index
+    path, codec, emb = pq_index
     q = _queries(emb)
-    df = P.ann_join_pq_persisted(
-        spark, path, model, codebooks, q, emb, k=3, nprobe=1, expand=2
+    df = S.ann_join_persisted(
+        spark, path, codec, q, emb, k=3, nprobe=1, expand=2
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"PartitionFilters: \[.*centroid_id", plan), plan
@@ -85,10 +87,11 @@ def test_pq_probe_prunes_partitions(spark, pq_index):
 def test_pq_adc_matches_numpy(spark, pq_index):
     # the JVM zip_with/element_at ADC pipeline must equal the textbook
     # numpy computation: score = q̂·c + Σₘ LUT[m][code_m].
-    path, model, codebooks, emb = pq_index
+    path, codec, emb = pq_index
+    codebooks = codec.codebooks
     m, ksub, dsub = codebooks.shape
     centers = np.asarray(
-        [list(c) for c in model.clusterCenters()], dtype="float64"
+        [list(c) for c in codec.model.clusterCenters()], dtype="float64"
     )
     qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
     qv = np.asarray(qrow.embedding, dtype="float64")
@@ -139,10 +142,11 @@ def test_pq_residual_reconstruction_beats_zero(spark, pq_index):
     # ~0.54 measured on this near-isotropic synthetic corpus (4
     # codebook bits per 8-dim subspace); real embedding manifolds
     # compress far better — the bound only asserts information flows.
-    path, model, codebooks, emb = pq_index
+    path, codec, emb = pq_index
+    codebooks = codec.codebooks
     m, ksub, dsub = codebooks.shape
     centers = np.asarray(
-        [list(c) for c in model.clusterCenters()], dtype="float64"
+        [list(c) for c in codec.model.clusterCenters()], dtype="float64"
     )
     rows = (
         spark.read.parquet(path)
@@ -166,40 +170,12 @@ def test_pq_train_rejects_int8_overflowing_ksub():
         P.pq_train(rng.normal(size=(64, 64)), m=8, ksub=256)
 
 
-def test_cents_memo_bounds_same_session_models(spark):
-    # r13 review: retrained models are new objects -> new memo keys;
-    # the memo must evict oldest entries instead of holding one strong
-    # (model, codebooks, frame) tuple per retrain for the session
-    class _StubModel:
-        def clusterCenters(self):
-            return [np.asarray([1.0, 0.0])]
-
-    saved = dict(P._PQ_CENTS_MEMO)
-    P._PQ_CENTS_MEMO.clear()
-    try:
-        cb = np.zeros((1, 2, 2))
-        kept = []
-        for _ in range(P._CENTS_MEMO_MAX + 3):
-            m = _StubModel()
-            P._pq_cents_frame(spark, m, cb)
-            kept.append(m)  # keep models alive so ids stay distinct
-        assert len(P._PQ_CENTS_MEMO) == P._CENTS_MEMO_MAX
-        # the newest model is still memoized (hit returns same frame)
-        newest_key = (
-            spark.sparkContext.applicationId, id(kept[-1]), id(cb)
-        )
-        assert newest_key in P._PQ_CENTS_MEMO
-    finally:
-        P._PQ_CENTS_MEMO.clear()
-        P._PQ_CENTS_MEMO.update(saved)
-
-
 def test_bounded_collect_raises_past_the_serving_bound(spark, pq_index, monkeypatch):
     # the query-side driver read is request-sized by contract; past the
     # bound it must fail loudly and name the call site, not pull rows
     from tajo_spark.operators.similarity import bounded_collect
 
-    path, model, codebooks, emb = pq_index
+    path, codec, emb = pq_index
     small = emb.select("vec_id").limit(5)
     assert len(bounded_collect(small, 5, "five rows")) == 5
     with pytest.raises(ValueError, match="five rows: 5 rows .* 4-row bound"):
@@ -207,10 +183,10 @@ def test_bounded_collect_raises_past_the_serving_bound(spark, pq_index, monkeypa
     # the serving path routes its read through the bound: 7 queries x
     # nprobe 2 = 14 probe rows
     q = _queries(emb).limit(7)
-    monkeypatch.setattr(P, "SERVING_BATCH_MAX_ROWS", 13)
-    with pytest.raises(ValueError, match="ann_join_pq_persisted query probes"):
-        P.ann_join_pq_persisted(spark, path, model, codebooks, q, emb, nprobe=2)
-    monkeypatch.setattr(P, "SERVING_BATCH_MAX_ROWS", 14)
-    assert P.ann_join_pq_persisted(
-        spark, path, model, codebooks, q, emb, k=1, nprobe=2
+    monkeypatch.setattr(S, "SERVING_BATCH_MAX_ROWS", 13)
+    with pytest.raises(ValueError, match="ann_join_persisted query probes"):
+        S.ann_join_persisted(spark, path, codec, q, emb, nprobe=2)
+    monkeypatch.setattr(S, "SERVING_BATCH_MAX_ROWS", 14)
+    assert S.ann_join_persisted(
+        spark, path, codec, q, emb, k=1, nprobe=2
     ).count() == 7

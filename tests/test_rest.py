@@ -119,3 +119,26 @@ def test_timestamp_cells_serialize(server, spark):
     )
     assert code == 200
     assert body["rows"][0][0].startswith("2024-01-02 03:04:05")
+
+
+def test_post_query_page_is_capped_server_side(server, spark, monkeypatch):
+    # a client limit past MAX_PAGE_ROWS cannot pull a bigger page to
+    # the driver: a result over the cap fails loudly, naming it; a
+    # small result still succeeds whatever limit was asked
+    spark.range(0, 50).selectExpr("id AS k").createOrReplaceTempView(
+        "rest_cap"
+    )
+    monkeypatch.setattr(rest, "MAX_PAGE_ROWS", 10)
+    sql = "select k from rest_cap order by k"
+    code, body = _post(f"{server}/api/queries", {"query": sql, "limit": 10_000_000})
+    assert code == 400 and "MAX_PAGE_ROWS" in body["error"], body
+    assert "10-row bound" in body["error"], body
+    for limit in (10, 7):
+        code, body = _post(f"{server}/api/queries", {"query": sql, "limit": limit})
+        assert code == 200 and body["row_count"] == limit
+        assert body["rows"] == [[i] for i in range(limit)]
+    code, body = _post(
+        f"{server}/api/queries",
+        {"query": "select k from rest_cap where k < 3", "limit": 10_000_000},
+    )
+    assert code == 200 and body["row_count"] == 3

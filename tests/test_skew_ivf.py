@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from tajo_spark.catalog import load_table
 from tajo_spark.operators import similarity as sim
 from tajo_spark.operators.skew import salted_agg, salted_join
+from tajo_spark.streaming.ann_ingest import ivf_ingest_init
 from tests.conftest import SF_DIR
 
 
@@ -344,10 +345,10 @@ def test_ivf_q8_full_probe_big_expand_equals_exact(spark, tmp_path):
     # the exact rerank must reproduce brute force exactly
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "ivfq8")
-    model = sim.ivf_persist_index_q8(emb, path, n_centroids=4)
+    codec = ivf_ingest_init(emb, path, n_centroids=4)
     qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
     got = sim.ivf_probe_persisted_q8(
-        spark, path, model, list(qrow.embedding),
+        spark, path, codec, list(qrow.embedding),
         emb.filter(F.col("vec_id") != 0),
         k=10, nprobe=4, expand=10_000,
     ).collect()
@@ -362,10 +363,10 @@ def test_ivf_q8_probe_prunes_partitions(spark, tmp_path):
     # directories: PartitionFilters on centroid_id in the index scan
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "ivfq8p")
-    model = sim.ivf_persist_index_q8(emb, path, n_centroids=8)
+    codec = ivf_ingest_init(emb, path, n_centroids=8)
     qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
     shortlist = sim.ivf_q8_shortlist(
-        spark, path, model, list(qrow.embedding), k=10, nprobe=2
+        spark, path, codec, list(qrow.embedding), k=10, nprobe=2
     )
     plan = shortlist._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
@@ -599,12 +600,12 @@ def test_ann_join_plans(spark, ann_queries):
 def test_ann_q8_persisted_full_probe_equals_exact(spark, ann_queries, tmp_path):
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "idx")
-    model = sim.ivf_persist_index_q8(emb, path, n_centroids=8)
+    codec = ivf_ingest_init(emb, path, n_centroids=8)
     # full probe + generous expand must reduce to the exact batched join
     got = {
         tuple(r)
-        for r in sim.ann_join_q8_persisted(
-            spark, path, model, ann_queries, emb, k=5, nprobe=8, expand=100
+        for r in sim.ann_join_persisted(
+            spark, path, codec, ann_queries, emb, k=5, nprobe=8, expand=100
         ).collect()
     }
     exact = {tuple(r) for r in sim.ann_join(ann_queries, emb, k=5).collect()}
@@ -615,21 +616,21 @@ def test_ann_q8_persisted_bounds_the_query_read(spark, ann_queries, tmp_path,
                                                 monkeypatch):
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "idx")
-    model = sim.ivf_persist_index_q8(emb, path, n_centroids=8)
+    codec = ivf_ingest_init(emb, path, n_centroids=8)
     # 3 queries x nprobe 2 = 6 probe rows reach the driver
     monkeypatch.setattr(sim, "SERVING_BATCH_MAX_ROWS", 5)
-    with pytest.raises(ValueError, match="ann_join_q8_persisted query probes"):
-        sim.ann_join_q8_persisted(
-            spark, path, model, ann_queries.limit(3), emb, k=5, nprobe=2
+    with pytest.raises(ValueError, match="ann_join_persisted query probes"):
+        sim.ann_join_persisted(
+            spark, path, codec, ann_queries.limit(3), emb, k=5, nprobe=2
         )
 
 
 def test_ann_q8_persisted_prunes_index_partitions(spark, ann_queries, tmp_path):
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "idx")
-    model = sim.ivf_persist_index_q8(emb, path, n_centroids=8)
-    out = sim.ann_join_q8_persisted(
-        spark, path, model, ann_queries.limit(3), emb, k=5, nprobe=2
+    codec = ivf_ingest_init(emb, path, n_centroids=8)
+    out = sim.ann_join_persisted(
+        spark, path, codec, ann_queries.limit(3), emb, k=5, nprobe=2
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
@@ -645,8 +646,8 @@ def test_ann_q8_persisted_prunes_index_partitions(spark, ann_queries, tmp_path):
     }
     got = {
         (r.q_id, r.vec_id)
-        for r in sim.ann_join_q8_persisted(
-            spark, path, model, ann_queries, emb, k=5, nprobe=2
+        for r in sim.ann_join_persisted(
+            spark, path, codec, ann_queries, emb, k=5, nprobe=2
         ).collect()
     }
     assert len(exact & got) / len(exact) >= 0.5

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from tajo_spark.catalog import load_table
 from tajo_spark.streaming import pipeline as P
-from tests.conftest import SF_DIR, persisted_rdd_ids
+from tests.conftest import SF_DIR, jobs_of, persisted_rdd_ids
 
 
 @pytest.fixture(scope="module")
@@ -925,7 +925,7 @@ def test_gated_ann_ingest_stream_equals_batch_composition(spark, tmp_path):
     boot, b0, b1 = _gate_corpus(spark)
     # stream leg: two parquet files → two micro-batches (ids 0, 1)
     s_index = str(tmp_path / "s_index")
-    model = AI.ivf_ingest_init(boot, s_index, n_centroids=8)
+    codec = AI.ivf_ingest_init(boot, s_index, n_centroids=8)
     src = str(tmp_path / "src")
     os.makedirs(src)
     b0.coalesce(1).write.mode("append").parquet(src)
@@ -936,17 +936,17 @@ def test_gated_ann_ingest_stream_equals_batch_composition(spark, tmp_path):
         .parquet(src)
     )
     q = AI.gated_ingest_stream(
-        stream, model, s_index, str(tmp_path / "ckpt")
+        stream, codec, s_index, str(tmp_path / "ckpt")
     ).start()
     q.processAllAvailable()
     q.stop()
 
     # batch twin: same batches, same ids, sequential composition
-    # (same frozen model, fresh index directory)
+    # (same frozen codec, fresh index directory)
     b_index = str(tmp_path / "b_index")
-    AI.ivf_append_batch(boot, model, b_index, batch_id=-1)
-    AI.gated_ingest_batch(b0, model, b_index, batch_id=0)
-    AI.gated_ingest_batch(b1, model, b_index, batch_id=1)
+    AI.ivf_append_batch(boot, codec, b_index, batch_id=-1)
+    AI.gated_ingest_batch(b0, codec, b_index, batch_id=0)
+    AI.gated_ingest_batch(b1, codec, b_index, batch_id=1)
 
     got, want = _index_rows(spark, s_index), _index_rows(spark, b_index)
     assert got == want  # bit-exact stream ≡ batch, q8 payload included
@@ -964,9 +964,9 @@ def test_gated_ingest_replay_is_idempotent_and_gates_same(spark, tmp_path):
 
     boot, b0, b1 = _gate_corpus(spark)
     index = str(tmp_path / "index")
-    model = AI.ivf_ingest_init(boot, index, n_centroids=8)
-    AI.gated_ingest_batch(b0, model, index, batch_id=0)
-    AI.gated_ingest_batch(b1, model, index, batch_id=1)
+    codec = AI.ivf_ingest_init(boot, index, n_centroids=8)
+    AI.gated_ingest_batch(b0, codec, index, batch_id=0)
+    AI.gated_ingest_batch(b1, codec, index, batch_id=1)
     before = _index_rows(spark, index)
 
     # crash-replay of batch 0 AFTER batch 1 landed: the gate excludes
@@ -974,12 +974,12 @@ def test_gated_ingest_replay_is_idempotent_and_gates_same(spark, tmp_path):
     # survivors contain no near-dups of batch 1 (novel gaussians), so
     # the replay recomputes the identical survivor set and overwrites
     # its own partitions byte-for-byte
-    AI.gated_ingest_batch(b0, model, index, batch_id=0)
+    AI.gated_ingest_batch(b0, codec, index, batch_id=0)
     assert _index_rows(spark, index) == before
 
     # scale pin: the gate's index scan prunes directories on BOTH
     # partition keys — probed centroids and the own-batch exclusion
-    surv = AI.neardup_gate_batch(b0, model, index, batch_id=0)
+    surv = AI.neardup_gate_batch(b0, codec, index, batch_id=0)
     surv.count()
     plan = surv._jdf.queryExecution().executedPlan().toString()
     pf = plan.split("PartitionFilters")[1].split("]")[0]
@@ -989,12 +989,12 @@ def test_gated_ingest_replay_is_idempotent_and_gates_same(spark, tmp_path):
 def test_neardup_gate_bounds_the_probed_centroid_read(spark, tmp_path,
                                                      monkeypatch):
     # the probed centroid ids are the gate's one driver read; it goes
-    # through bounded_collect with the model's k as the bound
+    # through bounded_collect with the codec's k as the bound
     from tajo_spark.streaming import ann_ingest as AI
 
     boot, b0, _ = _gate_corpus(spark)
     index = str(tmp_path / "index")
-    model = AI.ivf_ingest_init(boot, index, n_centroids=8)
+    codec = AI.ivf_ingest_init(boot, index, n_centroids=8)
     calls = []
     real = AI.bounded_collect
 
@@ -1004,11 +1004,28 @@ def test_neardup_gate_bounds_the_probed_centroid_read(spark, tmp_path,
         return rows
 
     monkeypatch.setattr(AI, "bounded_collect", spy)
-    AI.neardup_gate_batch(b0, model, index, batch_id=0).count()
+    AI.neardup_gate_batch(b0, codec, index, batch_id=0).count()
     assert [c[:2] for c in calls] == [
         (8, "neardup_gate_batch probed centroids")
     ]
     assert 1 <= calls[0][2] <= 8
+
+
+def test_gated_batch_job_count(spark, tmp_path):
+    # the gate ranks centroids against the codec's literal (no
+    # per-batch centroid frame and its broadcast job) and reads the
+    # index through the catalog memo with the writer's schema (no
+    # inference job): 19 and 20 jobs per batch before, 14 now
+    from tajo_spark.streaming import ann_ingest as AI
+
+    boot, b0, b1 = _gate_corpus(spark)
+    index = str(tmp_path / "index")
+    codec = AI.ivf_ingest_init(boot, index, n_centroids=8)
+    for b, batch in enumerate((b0, b1)):
+        _, jobs = jobs_of(spark, f"gated_{b}", lambda: AI.gated_ingest_batch(
+            batch, codec, index, batch_id=b
+        ))
+        assert len(jobs) == 14, (b, jobs)
 
 
 def test_compact_index_batches_single_file_per_centroid(spark, tmp_path):
@@ -1037,19 +1054,19 @@ def test_compact_index_batches_single_file_per_centroid(spark, tmp_path):
         )
 
     index = str(tmp_path / "index")
-    model = AI.ivf_ingest_init(df(0, 40), index, n_centroids=4)
+    codec = AI.ivf_ingest_init(df(0, 40), index, n_centroids=4)
     for b in range(12):
         # disjoint id ranges: vec_id is unique in the index by
         # construction (the dedup gate enforces it in production, and
         # compact_index_batches' fold relies on it)
         AI.ivf_append_batch(
-            df(40 + 8 * b, 40 + 8 * (b + 1)), model, index, batch_id=b
+            df(40 + 8 * b, 40 + 8 * (b + 1)), codec, index, batch_id=b
         )
     qv = [float(x) for x in base[3]]
     before = [
         (r.vec_id, round(r["__q8_cos"], 9))
         for r in ivf_q8_shortlist(
-            spark, index, model, qv, k=5, nprobe=2
+            spark, index, codec, qv, k=5, nprobe=2
         ).collect()
     ]
     files_before = len(glob.glob(index + "/centroid_id=*/__batch_id=*/*.parquet"))
@@ -1072,7 +1089,7 @@ def test_compact_index_batches_single_file_per_centroid(spark, tmp_path):
     assert files_after < files_before
 
     # probe results bit-exact across compaction, pruning intact
-    probe_df = ivf_q8_shortlist(spark, index, model, qv, k=5, nprobe=2)
+    probe_df = ivf_q8_shortlist(spark, index, codec, qv, k=5, nprobe=2)
     after = [
         (r.vec_id, round(r["__q8_cos"], 9)) for r in probe_df.collect()
     ]
@@ -1088,7 +1105,7 @@ def test_compact_index_batches_single_file_per_centroid(spark, tmp_path):
     assert [
         (r.vec_id, round(r["__q8_cos"], 9))
         for r in ivf_q8_shortlist(
-            spark, index, model, qv, k=5, nprobe=2
+            spark, index, codec, qv, k=5, nprobe=2
         ).collect()
     ] == before
 
@@ -1096,7 +1113,7 @@ def test_compact_index_batches_single_file_per_centroid(spark, tmp_path):
     # partitions alongside the base and is itself foldable
     AI.ivf_append_batch(df(0, 4).selectExpr(
         "vec_id + 1000 AS vec_id", "embedding"
-    ), model, index, batch_id=12)
+    ), codec, index, batch_id=12)
     stats3 = AI.compact_index_batches(spark, index, upto_batch_id=12)
     assert stats3["batch_dirs_removed"] >= 1  # batch 12's dirs folded
     assert stats3["rows_folded"] == stats["rows_folded"] + 4
@@ -1345,10 +1362,10 @@ def test_compact_folds_and_deletes_legacy_negative_generations(
         )
 
     index = str(tmp_path / "index")
-    model = AI.ivf_ingest_init(df(0, 50), index, n_centroids=4)
+    codec = AI.ivf_ingest_init(df(0, 50), index, n_centroids=4)
     # simulate the legacy layout: a generation dir with its own rows
-    AI.ivf_append_batch(df(100, 110), model, index, batch_id=-13)
-    AI.ivf_append_batch(df(200, 210), model, index, batch_id=0)
+    AI.ivf_append_batch(df(100, 110), codec, index, batch_id=-13)
+    AI.ivf_append_batch(df(200, 210), codec, index, batch_id=0)
 
     AI.compact_index_batches(spark, index, upto_batch_id=0)
     bdirs = {
@@ -1397,14 +1414,14 @@ def test_stream_handlers_release_their_checkpoints(spark, tmp_path):
 
     boot, b0, b1 = _gate_corpus(spark)
     index = str(tmp_path / "index")
-    model = AI.ivf_ingest_init(boot, index, n_centroids=8)
+    codec = AI.ivf_ingest_init(boot, index, n_centroids=8)
     schema = "vec_id BIGINT, embedding ARRAY<DOUBLE>"
     empty = spark.createDataFrame([], schema)
     stream = _file_stream(spark, str(tmp_path / "vecs"), [b0, b1, empty],
                           schema)
     before = persisted_rdd_ids(spark)
     q = AI.gated_ingest_stream(
-        stream, model, index, str(tmp_path / "ckpt2"), compact_every=2
+        stream, codec, index, str(tmp_path / "ckpt2"), compact_every=2
     ).start()
     q.processAllAvailable()
     q.stop()

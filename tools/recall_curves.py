@@ -48,16 +48,9 @@ def main() -> None:
 
     import scaling_ladder as SL
     from tajo_spark.catalog import load_table
-    from tajo_spark.operators.pq import (
-        ann_join_pq_persisted,
-        ivf_pq_persist_index,
-    )
-    from tajo_spark.operators.similarity import (
-        ann_join,
-        ann_join_q8_persisted,
-        ivf_persist_index_q8,
-    )
+    from tajo_spark.operators.similarity import ann_join, ann_join_persisted
     from tajo_spark.session import build_spark
+    from tajo_spark.streaming.ann_ingest import ivf_ingest_init
 
     spark = build_spark(app_name="recall_curves")
     root = tempfile.mkdtemp(prefix="tajo_spark_recall_")
@@ -77,21 +70,20 @@ def main() -> None:
             n_exact = exact.count()
             p8 = os.path.join(root, f"idx_q8_x{mult}")
             ppq = os.path.join(root, f"idx_pq_x{mult}")
-            model8 = ivf_persist_index_q8(emb, p8, n_centroids=args.centroids)
-            modelp, cb = ivf_pq_persist_index(
-                emb, ppq, n_centroids=args.centroids
-            )
+            codecs = {
+                "q8": (p8, ivf_ingest_init(emb, p8, n_centroids=args.centroids)),
+                "pq": (ppq, ivf_ingest_init(
+                    emb, ppq, n_centroids=args.centroids, m=16, ksub=64
+                )),
+            }
             for np_ in nprobes:
                 rec = {}
-                for name, fn in (
-                    ("q8", lambda: ann_join_q8_persisted(
-                        spark, p8, model8, q, emb, k=10, nprobe=np_)),
-                    ("pq", lambda: ann_join_pq_persisted(
-                        spark, ppq, modelp, cb, q, emb, k=10, nprobe=np_)),
-                ):
+                for name, (path, codec) in codecs.items():
                     t0 = time.time()
                     hits = (
-                        fn()
+                        ann_join_persisted(
+                            spark, path, codec, q, emb, k=10, nprobe=np_
+                        )
                         .select("q_id", "vec_id")
                         .join(exact, ["q_id", "vec_id"], "left_semi")
                         .count()

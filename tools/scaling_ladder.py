@@ -325,8 +325,8 @@ def ann_ladder(mults: list[int]) -> None:
     centroids measured SLOWER than exact (assignment alone equals the
     exact scoring) — kept here as the negative result: one-shot IVF
     only pays above that break-even, or when the assignment is a
-    persisted index column (ivf_persist_index*, where it amortizes to
-    zero)."""
+    persisted index column (ivf_persist_index / ivf_ingest_init, where
+    it amortizes to zero)."""
     from pyspark.sql import functions as F
 
     from tajo_spark.catalog import load_table
@@ -464,12 +464,9 @@ def pq_ladder(mults: list[int]) -> None:
     from pyspark.sql import functions as F
 
     from tajo_spark.catalog import load_table
-    from tajo_spark.operators.pq import ann_join_pq_persisted, ivf_pq_persist_index
-    from tajo_spark.operators.similarity import (
-        ann_join_q8_persisted,
-        ivf_persist_index_q8,
-    )
+    from tajo_spark.operators.similarity import ann_join_persisted
     from tajo_spark.session import build_spark
+    from tajo_spark.streaming.ann_ingest import ivf_ingest_init
 
     spark = build_spark(app_name="scaling_ladder_pq")
     root = tempfile.mkdtemp(prefix="tajo_spark_ladder_pq_")
@@ -484,18 +481,18 @@ def pq_ladder(mults: list[int]) -> None:
             p8 = os.path.join(root, f"idx_q8_x{mult}")
             ppq = os.path.join(root, f"idx_pq_x{mult}")
             t0 = time.time()
-            model8 = ivf_persist_index_q8(emb, p8, n_centroids=16)
+            codec8 = ivf_ingest_init(emb, p8, n_centroids=16)
             b8 = time.time() - t0
             t0 = time.time()
-            modelp, cb = ivf_pq_persist_index(emb, ppq, n_centroids=16)
+            codecp = ivf_ingest_init(emb, ppq, n_centroids=16, m=16, ksub=64)
             bpq = time.time() - t0
             walls = {
                 name: min(profile.run(spark, build).wall_s for _ in range(2))
                 for name, build in (
-                    ("q8", partial(ann_join_q8_persisted, spark, p8, model8,
+                    ("q8", partial(ann_join_persisted, spark, p8, codec8,
                                    q, emb, k=10, nprobe=4)),
-                    ("pq", partial(ann_join_pq_persisted, spark, ppq, modelp,
-                                   cb, q, emb, k=10, nprobe=4)),
+                    ("pq", partial(ann_join_persisted, spark, ppq, codecp,
+                                   q, emb, k=10, nprobe=4)),
                 )
             }
             rows.append((mult, b8, bpq, walls["q8"], walls["pq"]))

@@ -111,9 +111,9 @@ def main() -> None:
             """The one leg that is an index build, not a DataFrame:
             clear the per-process memo so the timed call IS the build
             (KMeans + codebooks + encode + partitioned persist)."""
-            DP._IVFPQ_INDEX.clear()
+            DP._ANN_INDEX.clear()
             t0 = time.perf_counter()
-            DP._ivfpq_index(spark, sf_dir, n_centroids=8)
+            DP._ann_index(spark, sf_dir, n_centroids=8, m=16, ksub=64)
             return time.perf_counter() - t0
 
         def run_one(q: str, sf_dir: str) -> float:
