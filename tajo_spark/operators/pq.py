@@ -150,10 +150,17 @@ def pq_encode_codes(
     codebooks: np.ndarray,
 ) -> DataFrame:
     """Distributed PQ encode: (vec_id, embedding, centroid_id) →
-    (vec_id, codes ARRAY<TINYINT>, centroid_id).  Arrow-vectorized
-    numpy per batch (index-BUILD cost, amortized; the probe path is
-    pure JVM expressions) — argmin over ksub codebook entries per
-    subspace of the normalized-vector residual."""
+    (vec_id, codes ARRAY<TINYINT>, centroid_id)."""
+    return assigned.select(
+        "vec_id", _encode_column(centers, codebooks), "centroid_id"
+    )
+
+
+def _encode_column(centers, codebooks: np.ndarray) -> Column:
+    """The ``codes`` column over (embedding, centroid_id):
+    Arrow-vectorized numpy per batch (index-BUILD cost, amortized; the
+    probe path is pure JVM expressions) — argmin over ksub codebook
+    entries per subspace of the normalized-vector residual."""
     from pyspark.sql.functions import pandas_udf
 
     cb = np.ascontiguousarray(codebooks, dtype="float64")
@@ -179,13 +186,9 @@ def pq_encode_codes(
             out[:, i] = d.argmin(axis=1)
         return pd.Series(list(out))
 
-    return assigned.select(
-        "vec_id",
-        encode(_as_double(F.col("embedding")), F.col("centroid_id")).alias(
-            "codes"
-        ),
-        "centroid_id",
-    )
+    return encode(
+        _as_double(F.col("embedding")), F.col("centroid_id")
+    ).alias("codes")
 
 
 def pq_train_residuals(
@@ -252,10 +255,12 @@ class PQCodec(Codec):
     def codebook(self) -> Column:
         return _vec_lit(self.codebooks.ravel())
 
-    def encode(self, assigned: DataFrame) -> DataFrame:
-        return pq_encode_codes(assigned, self.centers, self.codebooks)
+    @cached_property
+    def encoded(self) -> Column:
+        return _encode_column(self.centers, self.codebooks)
 
-    def query_columns(self) -> list[Column]:
+    @cached_property
+    def query_columns(self) -> tuple[Column, ...]:
         # LUT[m][j] = q̂_sub(m)·codebook[m][j], JVM-side from the flat
         # codebook literal: M × KSUB doubles per query
         m, ksub, dsub = self.codebooks.shape
@@ -269,8 +274,10 @@ class PQCodec(Codec):
                 ),
             )
 
-        return [F.transform(F.sequence(F.lit(0), F.lit(m - 1)), lut).alias("luts")]
+        return (
+            F.transform(F.sequence(F.lit(0), F.lit(m - 1)), lut).alias("luts"),
+        )
 
+    @cached_property
     def score(self) -> Column:
         return _adc_score(F.col(self.column), F.col("luts"), F.col("qc"))
-

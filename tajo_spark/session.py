@@ -62,6 +62,14 @@ def build_spark(
         # (golden corpus: TestQueryOnSelfDescTable casts inferred-typed
         # JSON fields against text columns).
         .config("spark.sql.ansi.enabled", "false")
+        # DataFrame call-site capture off: PySpark wraps every Column
+        # and DataFrame call in about four py4j round trips plus a
+        # Python stack walk to record where the call came from, for the
+        # DataFrame context of ANSI runtime errors.  With ANSI off no
+        # error carries that context (raise_error, assert_true and
+        # analysis messages read the same either way), and the capture
+        # was half of the round trips spent building a curation query.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Native TIME-of-day type (Spark 4.1): TIME literals, casts,
         # extract, parquet round-trip all work behind this flag — the
         # reference's TIME columns map natively instead of the round-1

@@ -52,8 +52,7 @@ from tajo_spark.operators.similarity import (
     bounded_collect,
     dot,
     ivf_assign,
-    l2_normalize,
-    probe_ranking,
+    probe_targets,
 )
 from tajo_spark.streaming.pipeline import foreach_batch
 
@@ -62,14 +61,9 @@ def assign_with_frozen_centroids(batch: DataFrame, codec: Codec) -> DataFrame:
     """Map-only assignment of new vectors against the codec's already-
     fitted KMeans model — the ingest path never re-fits (centroid drift
     would orphan every existing posting).  Same normalized feature
-    space as the index build (`ivf_assign`)."""
-    from pyspark.ml.functions import array_to_vector
-
-    feat = batch.select(
-        "vec_id",
-        "embedding",
-        array_to_vector(l2_normalize(F.col("embedding"))).alias("features"),
-    )
+    space as the index build (`ivf_assign`), through the codec's
+    feature column."""
+    feat = batch.select("vec_id", "embedding", codec.features)
     return (
         codec.model.transform(feat)
         .withColumnRenamed("prediction", "centroid_id")
@@ -299,19 +293,8 @@ def neardup_gate_batch(
         )
     spark = batch.sparkSession
     probes = (
-        batch.select("vec_id", _as_double(F.col("embedding")).alias("qv"))
-        .withColumn("__qn", l2_normalize(F.col("qv")))
-        .select(
-            "vec_id",
-            *codec.query_columns(),
-            F.explode(probe_ranking(codec, F.col("__qn"), nprobe)).alias("__p"),
-        )
-        .select(
-            "vec_id",
-            (-F.col("__p.neg_id")).cast("int").alias("centroid_id"),
-            "__qv8",
-            "__qn8",
-        )
+        probe_targets(codec.query_probes(batch, "vec_id", nprobe))
+        .select("vec_id", "centroid_id", "__qv8", "__qn8")
         .localCheckpoint()  # reused 3x below
     )
     probed = [
@@ -473,26 +456,24 @@ def compact_index_batches(
     the crash-rerun would bake every leftover batch's rows into the
     base twice, permanently.
     """
-    from pyspark.errors import AnalysisException
-
-    try:
-        full = spark.read.parquet(index_path)
-    except AnalysisException as exc:
-        ec = exc.getErrorClass() if hasattr(exc, "getErrorClass") else None
-        benign = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-        if not any(b in (ec or str(exc)) for b in benign):
-            # corrupt footer / permissions / throttling must surface —
-            # a blanket catch here silently disables auto-compaction
-            # forever and small-file buildup degrades probes ~5x
-            # (ADVICE r11; mirrors compact_ledger_batches)
-            raise
+    if count_batch_dirs(index_path) == 0:
         # a cadence fold can fire before anything was written: path
-        # absent (stream armed without a bootstrap) OR present but
-        # empty/schemaless (pre-created dir, zero-row bootstrap —
-        # UNABLE_TO_INFER_SCHEMA; ADVICE r12 — that arm raised and
-        # killed the stream, the exact failure the r11 guard targeted).
-        # Nothing to fold, not an error.
+        # absent (stream armed without a bootstrap) or present but
+        # holding no batch directory (pre-created dir, zero-row
+        # bootstrap — ADVICE r12).  Nothing to fold, not an error; a
+        # failing listing still raises (count_batch_dirs).
         return {"rows_folded": 0, "rows_after": 0, "batch_dirs_removed": 0}
+    # through the catalog memo with the schema the writer declared (or
+    # one read from a footer on the driver): no schema-inference job.
+    # The fold rewrites the index, so the listing is taken fresh rather
+    # than from a memoized plan.  A corrupt footer or a permissions
+    # error raises here — a blanket catch would silently disable
+    # auto-compaction forever, and small-file buildup degrades probes
+    # ~5x (ADVICE r11)
+    catalog.invalidate(
+        index_path, schema=catalog.load_parquet(spark, index_path).schema
+    )
+    full = catalog.load_parquet(spark, index_path)
     df = (
         full
         .filter(F.col("__batch_id") <= upto_batch_id)
@@ -551,7 +532,7 @@ def compact_index_batches(
     # (FAILED_READ_FILE.FILE_NOT_EXIST on the next probe) — drop it
     catalog.invalidate(index_path, schema=schema)
     after = (
-        spark.read.parquet(index_path)
+        catalog.load_parquet(spark, index_path)
         .filter(F.col("__batch_id") <= upto_batch_id)
         .count()
         if verify_counts

@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import math
 import os
+import threading
+from contextlib import contextmanager
+from types import SimpleNamespace
 
 import duckdb
 import pandas as pd
@@ -46,6 +49,28 @@ def jobs_of(spark, group, fn):
         for job in jobs
         if job
     ]
+
+
+@contextmanager
+def py4j_round_trips(spark):
+    """Count the py4j round trips this thread makes inside the block;
+    yields a namespace whose ``count`` holds the total so far.  Counts
+    are exact and repeatable for one PySpark version: building a
+    Column or a DataFrame is a fixed sequence of gateway calls."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, me = client.send_command, threading.get_ident()
+    trips = SimpleNamespace(count=0)
+
+    def counted(*args, **kwargs):
+        if threading.get_ident() == me:
+            trips.count += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield trips
+    finally:
+        client.send_command = send
 
 
 @pytest.fixture()

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from tajo_spark.catalog import load_parquet, load_table
 from tajo_spark.operators import similarity as sim
 from tajo_spark.streaming import ann_ingest as AI
-from tests.conftest import SF_DIR, jobs_of
+from tests.conftest import SF_DIR, jobs_of, py4j_round_trips
 
 
 def _corpus(spark):
@@ -141,6 +141,48 @@ def test_serve_construction_runs_one_job_per_codec(spark, tmp_path):
         ))
         assert len(jobs) == 1, (name, jobs)
         assert df.count() == 5 * q.count()
+
+
+def test_second_append_and_probe_reuse_the_codec_columns(
+    spark, tmp_path, monkeypatch
+):
+    # the columns that depend only on the frozen codec are built on
+    # first use and shared by every later append and probe, which build
+    # only their own literals
+    emb = _corpus(spark)
+    index = str(tmp_path / "index")
+    codec = AI.ivf_ingest_init(
+        emb.filter(F.col("vec_id") < 300), index, n_centroids=4
+    )
+    q = emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("q_id"), "embedding"
+    )
+    qv = list(emb.filter(F.col("vec_id") == 450).first().embedding)
+    built = []
+    for name in ("_as_double", "dot", "l2_normalize", "quantize_int8"):
+        real = getattr(sim, name)
+        monkeypatch.setattr(
+            sim, name, lambda *a, _r=real, _n=name: built.append(_n) or _r(*a)
+        )
+
+    def use(batch_id):
+        AI.ivf_append_batch(
+            emb.filter(F.col("vec_id").between(300 + 50 * batch_id,
+                                               349 + 50 * batch_id)),
+            codec, index, batch_id=batch_id, coalesce=1,
+        )
+        load_parquet(spark, index)  # the probe memo, outside the count
+        with py4j_round_trips(spark) as trips:
+            sim.ivf_q8_shortlist(spark, index, codec, qv, k=5, nprobe=2)
+        sim.ann_join_persisted(spark, index, codec, q, emb, k=5, nprobe=2)
+        return trips.count
+
+    first = use(0)
+    assert {"dot", "l2_normalize"} <= set(built)
+    built.clear()
+    second = use(1)
+    assert built == []
+    assert second < first, (first, second)
 
 
 def test_probe_prunes_and_finds_streamed_vector(spark, tmp_path):
@@ -643,6 +685,37 @@ def test_compact_rerun_after_simulated_crash_does_not_duplicate(spark, tmp_path)
         .groupBy("vec_id").count().filter(F.col("count") > 1).count()
         == 0
     )
+
+
+def test_fold_runs_three_jobs(spark, tmp_path):
+    # the auto-compaction fold reads through the catalog with the
+    # schema the writer declared: no schema-inference job beside the
+    # rebalanced write's
+    emb = _corpus(spark)
+    index = str(tmp_path / "index")
+    codec = AI.ivf_ingest_init(
+        emb.filter(F.col("vec_id") < 300), index, n_centroids=4
+    )
+    AI.ivf_append_batch(
+        emb.filter(F.col("vec_id") >= 300), codec, index, batch_id=0
+    )
+    stats, jobs = jobs_of(spark, "fold", lambda: AI.maybe_compact(
+        spark, index, batch_id=1, compact_every=1
+    ))
+    assert len(jobs) == 3, jobs
+    assert stats["batch_dirs_removed"] > 0
+    assert AI.count_batch_dirs(index, exclude_base=True) == 0
+    assert load_parquet(spark, index).count() == emb.count()
+
+
+def test_compact_raises_on_a_corrupt_footer(spark, tmp_path):
+    # only "nothing written yet" is benign: a batch directory whose
+    # file is not parquet must fail the fold, not disable it
+    part = tmp_path / "idx" / "centroid_id=0" / "__batch_id=0"
+    part.mkdir(parents=True)
+    (part / "part-0.parquet").write_bytes(b"not parquet" * 8)
+    with pytest.raises(Exception):
+        AI.compact_index_batches(spark, str(tmp_path / "idx"), upto_batch_id=0)
 
 
 def test_compact_on_empty_precreated_dir_is_benign(spark, tmp_path):

@@ -190,3 +190,22 @@ def test_bounded_collect_raises_past_the_serving_bound(spark, pq_index, monkeypa
     assert S.ann_join_persisted(
         spark, path, codec, q, emb, k=1, nprobe=2
     ).count() == 7
+
+
+def test_query_side_read_is_one_row_per_query(spark, pq_index, monkeypatch):
+    # each query crosses to the driver once, carrying its ranked probes
+    # and its LUTs, and is exploded to its probe targets there; the
+    # bound stays counted in probe rows
+    path, codec, emb = pq_index
+    q = _queries(emb).limit(7)
+    real, reads = S.bounded_collect, []
+
+    def spy(df, max_rows, what):
+        rows = real(df, max_rows, what)
+        reads.append((len(rows), max_rows))
+        return rows
+
+    monkeypatch.setattr(S, "bounded_collect", spy)
+    got = S.ann_join_persisted(spark, path, codec, q, emb, k=2, nprobe=4)
+    assert reads == [(7, S.SERVING_BATCH_MAX_ROWS // 4)]
+    assert got.count() == 14
