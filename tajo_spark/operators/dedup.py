@@ -437,8 +437,8 @@ def compact_signature_store(spark, path: str) -> dict:
     """Fold the signature store's per-batch parquet appends into one
     deduplicated generation — the maintenance pass that bounds
     ``incremental_dedup_stream``'s per-batch store scan, completing
-    the maintenance family (``compact_gate_store`` for the Bloom gate,
-    ``ann_ingest.compact_index_batches`` for the ANN index).  Every
+    the maintenance family (``streaming/batch_store.fold`` folds the
+    Bloom gate store, the ANN index and the attrition ledger).  Every
     micro-batch appends files per ``band_id`` partition, so an
     always-on stream accumulates small files linearly in batch count;
     replayed appends can also leave duplicate (doc_id, band_id, bh)

@@ -17,32 +17,31 @@ the ANN index:
   every existing posting list);
 * each micro-batch assigns map-only against the frozen centroids
   (model metadata broadcast by Spark ML), encodes with the codec —
-  both at the source's parallelism — and writes through
-  `_write_index`: a
-  ``rebalance`` on ``centroid_id`` (the one shuffle) then
+  both at the source's parallelism — and writes through the
+  ``__batch_id`` store writer (`batch_store.write`): a ``rebalance`` on
+  ``centroid_id`` (the one shuffle) then
   ``partitionBy(centroid_id, __batch_id)`` with dynamic partition
   overwrite, so each touched centroid gets one file per batch and a
   replayed batch rewrites exactly its own ``(centroid, batch)``
-  directories — crash/replay is idempotent (same contract as the
-  sharded-export and dedup-survivor streams);
+  directories — crash/replay is idempotent (same writer as the
+  sharded-export, dedup-survivor, Bloom-gate and ledger streams);
 * probes keep directory-level pruning: ``centroid_id`` stays the
   top-level partition key, so `ivf_q8_shortlist` scans only the
   ``nprobe`` probed centroid directories regardless of how many
   ingest batches have accumulated.  Small-file buildup from many
   micro-batches (one file per (centroid, batch)) is rolled up by
-  `compact_index_batches`, which folds committed batches into the base
-  generation through the same writer, one file per centroid
-  (dedup-fold on ``vec_id`` so a crash anywhere in the delete phase is
-  repaired by re-running) — the sustained-ingest rung in SCALE.md
-  measures the probe-latency decay across 100 batches and its
-  restoration by one fold.
+  `compact_index_batches`, the index's binding of `batch_store.fold`:
+  committed batches fold into the base generation through the same
+  writer, one file per centroid (dedup-fold on ``vec_id`` so a crash
+  anywhere in the delete phase is repaired by re-running) — the
+  sustained-ingest rung in SCALE.md measures the probe-latency decay
+  across 100 batches and its restoration by one fold.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from tajo_spark import catalog
 from tajo_spark.operators.similarity import (
@@ -54,7 +53,12 @@ from tajo_spark.operators.similarity import (
     ivf_assign,
     probe_targets,
 )
-from tajo_spark.streaming.pipeline import foreach_batch
+from tajo_spark.streaming import batch_store
+from tajo_spark.streaming.batch_store import cadence_fires
+from tajo_spark.streaming.pipeline import _maintained_stream
+
+# the index's partition key: one directory per centroid, probes prune on it
+_BY = ("centroid_id",)
 
 
 def assign_with_frozen_centroids(batch: DataFrame, codec: Codec) -> DataFrame:
@@ -62,10 +66,15 @@ def assign_with_frozen_centroids(batch: DataFrame, codec: Codec) -> DataFrame:
     fitted KMeans model — the ingest path never re-fits (centroid drift
     would orphan every existing posting).  Same normalized feature
     space as the index build (`ivf_assign`), through the codec's
-    feature column."""
+    feature column.
+
+    Calls the fitted JVM model directly: PySpark's
+    ``JavaTransformer._transform`` re-sends every model param over py4j
+    on each call, though they reached the JVM at the fit and never
+    change."""
     feat = batch.select("vec_id", "embedding", codec.features)
     return (
-        codec.model.transform(feat)
+        DataFrame(codec.model._java_obj.transform(feat._jdf), feat.sparkSession)
         .withColumnRenamed("prediction", "centroid_id")
         .drop("features")
     )
@@ -79,60 +88,23 @@ def ivf_append_batch(
     coalesce: int | None = None,
 ) -> None:
     """Append one ingest batch to the index, idempotently: frozen-
-    centroid assignment, the codec's encode, then `_write_index`, whose
-    dynamic partition overwrite replaces exactly the
+    centroid assignment, the codec's encode, then the store writer,
+    whose dynamic partition overwrite replaces exactly the
     ``(centroid_id, __batch_id)`` directories this batch produces, so
     a replay of the same ``batch_id`` rewrites rather than duplicates.
 
     The file count per append is one per touched centroid, set by the
-    ``rebalance`` in `_write_index` whatever the source's partitioning.
-    ``coalesce`` only caps the rebalance's partition count, i.e. the
-    number of write tasks; the scan, assignment and encode keep the
-    source's parallelism either way."""
-    _write_index(
+    writer's ``rebalance`` on ``centroid_id`` whatever the source's
+    partitioning.  ``coalesce`` only caps the rebalance's partition
+    count, i.e. the number of write tasks; the scan, assignment and
+    encode keep the source's parallelism either way."""
+    batch_store.write(
         codec.encode(assign_with_frozen_centroids(batch, codec)),
         index_path,
         batch_id,
+        by=_BY,
         max_partitions=coalesce,
     )
-
-
-def _write_index(
-    df: DataFrame,
-    index_path: str,
-    batch_id: int,
-    max_partitions: int | None = None,
-) -> StructType:
-    """The one writer of every index layout (appends, bootstraps and
-    the compaction fold, for every codec): tag the rows with
-    ``__batch_id``, ``rebalance`` on ``centroid_id``, then
-    ``partitionBy(centroid_id, __batch_id)`` with dynamic partition
-    overwrite.  Returns the written schema.
-
-    The rebalance hash-places each centroid's rows in one shuffle
-    partition and AQE coalesces the small ones, so the write leaves one
-    file per (centroid, batch) directory — a partition past the
-    advisory size is split, bounding file size at scale.  Unlike a
-    ``coalesce`` it is a stage boundary: everything upstream (source
-    scan, assignment, encode) runs at the source's parallelism instead
-    of in the write task.  ``max_partitions`` caps the rebalance's
-    partition count."""
-    df = df.withColumn("__batch_id", F.lit(batch_id).cast("long"))
-    hint = ("centroid_id",) if max_partitions is None else (
-        max_partitions, "centroid_id"
-    )
-    (
-        df.hint("rebalance", *hint)
-        .write.partitionBy("centroid_id", "__batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(index_path)
-    )
-    # the probe-side plan memo pins the file listing at first load; an
-    # append adds directories a memoized plan would never see.  The
-    # written schema lets the re-load skip schema inference.
-    catalog.invalidate(index_path, schema=df.schema)
-    return df.schema
 
 
 def ivf_ingest_init(
@@ -180,34 +152,10 @@ def ivf_ingest_init(
     # reuse the assignment ivf_assign already materialized (its feature
     # projection is localCheckpoint'd) instead of re-running a second
     # full-corpus model.transform pass through ivf_append_batch
-    _write_index(codec.encode(assigned), index_path, batch_id=-1)
+    batch_store.write(
+        codec.encode(assigned), index_path, batch_store.BASE, by=_BY
+    )
     return codec
-
-
-def _maintained_stream(
-    stream_df: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    write,
-    compact_every: int | None,
-    max_batch_dirs: int | None,
-):
-    """foreachBatch writer running ``write(batch, batch_id)`` on every
-    non-empty micro-batch, after :func:`maybe_compact`.  Compaction
-    runs BEFORE the empty-batch return: an empty cadence batch must
-    still fire its fold (the horizon proof only needs the batch id to
-    have been invoked — r11 review: skipping let partitions accumulate
-    past the intended bound)."""
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        maybe_compact(
-            batch.sparkSession, index_path, batch_id,
-            compact_every=compact_every, max_batch_dirs=max_batch_dirs,
-        )
-        if not batch.isEmpty():
-            write(batch, batch_id)
-
-    return foreach_batch(stream_df, process_batch, checkpoint)
 
 
 def ivf_ingest_stream(
@@ -233,11 +181,14 @@ def ivf_ingest_stream(
     fold; with these armed, the stream maintains itself (sawtooth
     steady state measured in SCALE.md)."""
     return _maintained_stream(
-        stream_df, index_path, checkpoint,
+        stream_df, checkpoint,
+        lambda spark, batch_id: maybe_compact(
+            spark, index_path, batch_id,
+            compact_every=compact_every, max_batch_dirs=max_batch_dirs,
+        ),
         lambda batch, batch_id: ivf_append_batch(
             batch, codec, index_path, batch_id
         ),
-        compact_every, max_batch_dirs,
     )
 
 
@@ -416,181 +367,46 @@ def gated_ingest_stream(
     set (dedup on ``vec_id``), so gate decisions and replays are
     unaffected (pinned in tests/test_ann_ingest.py)."""
     return _maintained_stream(
-        stream_df, index_path, checkpoint,
+        stream_df, checkpoint,
+        lambda spark, batch_id: maybe_compact(
+            spark, index_path, batch_id,
+            compact_every=compact_every, max_batch_dirs=max_batch_dirs,
+        ),
         lambda batch, batch_id: gated_ingest_batch(
             batch, codec, index_path, batch_id, tau=tau, nprobe=nprobe,
             coalesce=coalesce,
         ),
-        compact_every, max_batch_dirs,
     )
 
 
 def compact_index_batches(
     spark, index_path: str, upto_batch_id: int, verify_counts: bool = True
 ) -> dict:
-    """Fold committed ingest batches into the base partition — the
-    maintenance pass that keeps the ``(centroid_id, __batch_id)`` tree
-    from accumulating one directory level per micro-batch (file-count
-    growth is the streaming-sink small-files problem;
-    sources/compaction.py handles within-directory fragmentation, this
-    handles the BATCH DIMENSION).
-
-    Works on both index flavors (int8 ``q8`` and PQ ``codes`` columns
-    pass through untouched).  Rows with ``__batch_id <= upto_batch_id``
-    are rewritten as batch ``-1`` (the base) and their old batch
-    directories removed, so probes scan one directory per probed
-    centroid again.
-
-    Safety contract (same offline posture as sources/compaction.py):
-    only compact batches BELOW the stream checkpoint's committed
-    horizon — foreachBatch never replays a committed batch id, so the
-    folded rows can no longer be re-appended; a replay of the one
-    in-flight batch (id > ``upto_batch_id``) still overwrites only its
-    own directories.  Crash window: the rewrite lands the new base
-    before old batch directories are removed, so a crash mid-removal
-    leaves duplicates readable until the compaction is re-run.  Re-run
-    IS idempotent because the fold deduplicates on ``vec_id`` (unique
-    in the index by construction): a re-run that reads the
-    already-folded base PLUS leftover batch directories collapses each
-    vector back to one row before rewriting — without the dropDuplicates
-    the crash-rerun would bake every leftover batch's rows into the
-    base twice, permanently.
-    """
-    if count_batch_dirs(index_path) == 0:
-        # a cadence fold can fire before anything was written: path
-        # absent (stream armed without a bootstrap) or present but
-        # holding no batch directory (pre-created dir, zero-row
-        # bootstrap — ADVICE r12).  Nothing to fold, not an error; a
-        # failing listing still raises (count_batch_dirs).
-        return {"rows_folded": 0, "rows_after": 0, "batch_dirs_removed": 0}
-    # through the catalog memo with the schema the writer declared (or
-    # one read from a footer on the driver): no schema-inference job.
-    # The fold rewrites the index, so the listing is taken fresh rather
-    # than from a memoized plan.  A corrupt footer or a permissions
-    # error raises here — a blanket catch would silently disable
-    # auto-compaction forever, and small-file buildup degrades probes
-    # ~5x (ADVICE r11)
-    catalog.invalidate(
-        index_path, schema=catalog.load_parquet(spark, index_path).schema
+    """Fold committed ingest batches into the base partition, one file
+    per centroid — `batch_store.fold` keyed on ``vec_id`` (unique in
+    the index by construction) over the ``(centroid_id, __batch_id)``
+    layout.  Keeps the tree from accumulating one directory level per
+    micro-batch (the streaming-sink small-files problem in the BATCH
+    dimension; sources/compaction.py handles within-directory
+    fragmentation).  Both codecs' encoded columns pass through
+    untouched."""
+    return batch_store.fold(
+        spark, index_path, upto_batch_id, key=("vec_id",), by=_BY,
+        verify_counts=verify_counts,
     )
-    full = catalog.load_parquet(spark, index_path)
-    df = (
-        full
-        .filter(F.col("__batch_id") <= upto_batch_id)
-        .dropDuplicates(["vec_id"])
-        .drop("__batch_id")
-    )
-    # the two verification counts are full scans of the folded row set
-    # — useful for the maintenance CLI / tests, pure overhead inside
-    # the auto-compaction hot path (maybe_compact passes False)
-    before = df.count() if verify_counts else -1
-    # the shared writer's rebalance leaves ONE file per centroid
-    # directory (r10 sustained-ingest rung: probe latency tracks FILE
-    # count, 882→5185 ms across 100 micro-batches at near-constant
-    # rows; without it the fold inherits the read parallelism and
-    # writes files-per-centroid x tasks)
-    schema = _write_index(df, index_path, batch_id=-1)
-    # delete phase via pyarrow.fs so the same code runs against an
-    # object store (every sink here writes through Spark's
-    # scheme-dispatched writers; the maintenance pass must match —
-    # same seam as operators/fsio.py)
-    import pyarrow.fs as pafs
-
-    from tajo_spark.sources.avro_py import _fs_for
-
-    fs, root = _fs_for(index_path)  # s3a/s3n scheme bridging
-    removed = 0
-    for cinfo in fs.get_file_info(pafs.FileSelector(root)):
-        if cinfo.type != pafs.FileType.Directory or not (
-            cinfo.base_name.startswith("centroid_id=")
-        ):
-            continue
-        for binfo in fs.get_file_info(pafs.FileSelector(cinfo.path)):
-            if binfo.type != pafs.FileType.Directory or not (
-                binfo.base_name.startswith("__batch_id=")
-            ):
-                continue
-            try:
-                bid = int(binfo.base_name.split("=", 1)[1])
-            except ValueError:
-                # a non-numeric partition dir (null batch id →
-                # __HIVE_DEFAULT_PARTITION__, or a stray dir) must not
-                # abort the delete phase after some directories were
-                # already removed — skip it; its rows were never
-                # selected by the numeric fold filter anyway
-                continue
-            # delete every folded source EXCEPT the base itself —
-            # including legacy negative generation ids (r10 review: a
-            # '-1 < bid' guard left e.g. __batch_id=-13 dirs on disk
-            # forever after their rows were folded, duplicating every
-            # vector for all subsequent probes)
-            if bid != -1 and bid <= upto_batch_id:
-                fs.delete_dir(binfo.path)
-                removed += 1
-    # the fold rewrote the base and deleted batch directories: any
-    # memoized probe plan now points at vanished files
-    # (FAILED_READ_FILE.FILE_NOT_EXIST on the next probe) — drop it
-    catalog.invalidate(index_path, schema=schema)
-    after = (
-        catalog.load_parquet(spark, index_path)
-        .filter(F.col("__batch_id") <= upto_batch_id)
-        .count()
-        if verify_counts
-        else -1
-    )
-    return {
-        "rows_folded": before,
-        "rows_after": after,
-        "batch_dirs_removed": removed,
-    }
 
 
 def count_batch_dirs(index_path: str, exclude_base: bool = False) -> int:
     """Number of ``(centroid_id, __batch_id)`` leaf directories in the
     index — the quantity the sustained-ingest rung showed probe latency
-    tracks (one small parquet file per leaf under micro-batch ingest).
-    One filesystem listing, no Spark job; cheap relative to any
-    micro-batch.  Missing/empty index → 0.  ``exclude_base`` counts
-    only FOLDABLE dirs (``__batch_id != -1``) — what the
+    tracks (one small parquet file per leaf under micro-batch ingest),
+    from one listing (`batch_store.batch_dirs`).  ``exclude_base``
+    counts only FOLDABLE dirs (``__batch_id != -1``) — what the
     ``max_batch_dirs`` trigger arm compares against."""
-    import pyarrow.fs as pafs
-
-    from tajo_spark.sources.avro_py import _fs_for
-
-    fs, root = _fs_for(index_path)  # s3a/s3n scheme bridging
-    try:
-        children = fs.get_file_info(pafs.FileSelector(root))
-    except FileNotFoundError:
-        # ONLY not-found maps to "empty index": a transient listing
-        # error (throttling, permissions) must propagate, not silently
-        # disarm the max_batch_dirs trigger by reporting 0 (r11 review)
-        return 0
-    n = 0
-    for cinfo in children:
-        if cinfo.type != pafs.FileType.Directory or not (
-            cinfo.base_name.startswith("centroid_id=")
-        ):
-            continue
-        for binfo in fs.get_file_info(pafs.FileSelector(cinfo.path)):
-            if binfo.type == pafs.FileType.Directory and (
-                binfo.base_name.startswith("__batch_id=")
-            ):
-                if exclude_base and binfo.base_name == "__batch_id=-1":
-                    continue
-                n += 1
-    return n
-
-
-def cadence_fires(batch_id: int, compact_every: int | None) -> bool:
-    """The shared cadence predicate for every auto-folding stream
-    (ANN index + attrition ledger): fire at the head of batch
-    ``k * compact_every``.  Lives in ONE place so the replay-horizon
-    contract (fold strictly below the in-flight batch id — committed
-    ids never replay) has a single implementation to audit."""
-    return (
-        compact_every is not None
-        and batch_id > 0
-        and batch_id % compact_every == 0
+    return sum(
+        1
+        for d in batch_store.batch_dirs(index_path)
+        if not (exclude_base and d.batch_id == batch_store.BASE)
     )
 
 

@@ -24,7 +24,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tajo_spark import catalog
 from tajo_spark.session import released_checkpoints
+from tajo_spark.streaming import batch_store
+from tajo_spark.streaming.batch_store import cadence_fires
 
 SESSION_GAP = "30 minutes"
 DEFAULT_WATERMARK = "1 hour"
@@ -198,6 +201,24 @@ def foreach_batch(stream_df: DataFrame, process, checkpoint: str):
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
     )
+
+
+def _maintained_stream(stream_df: DataFrame, checkpoint: str, fold, write):
+    """The :func:`foreach_batch` writer of every auto-folding stream
+    (the two ANN ingest streams, the attrition ledger): each
+    micro-batch runs ``fold(spark, batch_id)``, then
+    ``write(batch, batch_id)`` when the batch is non-empty.  The fold
+    runs BEFORE the empty-batch return: an empty cadence batch must
+    still fire it (the horizon proof only needs the batch id to have
+    been invoked — skipping let partitions accumulate past the
+    intended bound)."""
+
+    def process_batch(batch: DataFrame, batch_id: int) -> None:
+        fold(batch.sparkSession, batch_id)
+        if not batch.isEmpty():
+            write(batch, batch_id)
+
+    return foreach_batch(stream_df, process_batch, checkpoint)
 
 
 # --------------------------------------------------------------------------
@@ -481,13 +502,7 @@ def incremental_dedup_stream(
             batch_df, store, return_signatures=True
         )
         survivors = survivors.localCheckpoint()
-        (
-            survivors.withColumn("__batch_id", F.lit(batch_id))
-            .write.partitionBy("__batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(survivors_path)
-        )
+        batch_store.write(survivors, survivors_path, batch_id)
         # slice the (checkpointed) batch signatures against the
         # CHECKPOINTED survivors: the append job then reuses the
         # materialized blocks instead of re-running the store probe —
@@ -518,12 +533,13 @@ def shard_export_stream(
     State between batches is a metadata-sized ledger
     (``_state``: one row per batch — base offset and the total after),
     read at batch start and appended at batch end; the data write is
-    ``partitionBy(shard_id, __batch_id)`` with DYNAMIC overwrite, so a
-    replayed micro-batch deterministically regenerates the same
-    assignment from its ledger row and overwrites its own
-    sub-partitions — exactly-once layout without rewriting earlier
-    batches' files. Within a batch the assignment is the batch
-    operator's two-phase distributed cumsum (never a global window).
+    ``batch_store.write`` keyed on ``shard_id`` (one file per
+    ``(shard, batch)`` directory), so a replayed micro-batch
+    deterministically regenerates the same assignment from its ledger
+    row and overwrites its own sub-partitions — exactly-once layout
+    without rewriting earlier batches' files. Within a batch the
+    assignment is the batch operator's two-phase distributed cumsum
+    (never a global window).
     """
     from tajo_spark.operators.export import shard_assign
 
@@ -567,12 +583,8 @@ def shard_export_stream(
             seed=seed,
             base_bytes=base,
         )
-        (
-            sharded.withColumn("__batch_id", F.lit(batch_id))
-            .write.partitionBy("shard_id", "__batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(f"{export_path}/shards")
+        batch_store.write(
+            sharded, f"{export_path}/shards", batch_id, by=("shard_id",)
         )
         if prior is None:
             after = base + (
@@ -699,9 +711,10 @@ def bloom_gate_stream(
     batch.  At the filter's design false-positive rate the maybe-subset
     is small, so the scan is the dominant growing term: run
     :func:`compact_gate_store` periodically (while the stream is
-    stopped) to fold committed partitions into a single base partition,
-    exactly as ``ann_ingest.compact_index_batches`` does for the ANN
-    index tree.
+    stopped) to fold committed partitions into a single base partition
+    through ``batch_store.fold``, the fold of the ANN index tree too.
+    The store is read through the catalog memo with the schema its
+    writer declared, so the read runs no schema-inference job.
 
     Replay safety: admitted rows and their fingerprints land in
     ``__batch_id`` partitions written with DYNAMIC overwrite, and the
@@ -744,11 +757,8 @@ def bloom_gate_stream(
         probed = _dedup.bloom_probe(
             batch_df, words, m_bits=bits
         ).localCheckpoint()
-        if any(
-            f.base_name.startswith("__batch_id=")
-            for f in _list_state_dir(fps_path)
-        ):
-            store_fps = spark.read.parquet(fps_path).filter(
+        if batch_store.batch_dirs(fps_path):
+            store_fps = catalog.load_parquet(spark, fps_path).filter(
                 F.col("__batch_id") != batch_id
             )
         else:
@@ -765,22 +775,12 @@ def bloom_gate_stream(
             .agg(F.min("doc_id").alias("doc_id"))
             .localCheckpoint()
         )
-        (
-            batch_df.join(admitted.select("doc_id"), "doc_id", "left_semi")
-            .withColumn("__batch_id", F.lit(batch_id))
-            .write.partitionBy("__batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(admitted_path)
+        batch_store.write(
+            batch_df.join(admitted.select("doc_id"), "doc_id", "left_semi"),
+            admitted_path,
+            batch_id,
         )
-        (
-            admitted.select("fp")
-            .withColumn("__batch_id", F.lit(batch_id))
-            .write.partitionBy("__batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(fps_path)
-        )
+        batch_store.write(admitted.select("fp"), fps_path, batch_id)
         new_bits = (
             admitted.select(
                 F.explode(
@@ -812,57 +812,14 @@ def bloom_gate_stream(
 
 
 def compact_gate_store(spark, fps_path: str, upto_batch_id: int) -> dict:
-    """Fold the Bloom gate's committed per-batch ``__batch_id``
-    fingerprint partitions into the base partition (``__batch_id=-1``)
-    — the maintenance pass that bounds :func:`bloom_gate_stream`'s
-    per-batch store scan, same shape as
-    ``ann_ingest.compact_index_batches`` for the ANN index tree.
-
-    Safety contract: only compact batches BELOW the stream checkpoint's
-    committed horizon (foreachBatch never replays a committed id), and
-    run while the stream is stopped.  The base id ``-1`` is never a
-    live batch id, so the gate's own-partition exclusion
-    (``__batch_id != batch_id``) never prunes the base.  Crash window:
-    the fold lands the new base before old directories are removed, so
-    a crash mid-removal leaves duplicate fp rows readable until re-run
-    — harmless for the gate (the confirm is a semi-join, duplicates
-    change no verdict) and the re-run deduplicates on ``fp`` before
-    rewriting, so nothing bakes in twice.
-    """
-    import os as _os
-
-    df = (
-        spark.read.parquet(fps_path)
-        .filter(F.col("__batch_id") <= upto_batch_id)
-        .dropDuplicates(["fp"])
-        .withColumn("__batch_id", F.lit(-1).cast("long"))
-    )
-    before = df.count()
-    (
-        df.write.partitionBy("__batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(fps_path)
-    )
-    removed = 0
-    for info in _list_state_dir(fps_path):
-        if not info.base_name.startswith("__batch_id="):
-            continue
-        try:
-            bid = int(info.base_name.split("=", 1)[1])
-        except ValueError:
-            continue  # stray/null partition dir: skip, don't abort
-        if -1 < bid <= upto_batch_id:
-            _rm_state_dir(_os.path.join(fps_path, info.base_name))
-            removed += 1
-    after = spark.read.parquet(fps_path).filter(
-        F.col("__batch_id") <= upto_batch_id
-    ).count()
-    return {
-        "rows_folded": before,
-        "rows_after": after,
-        "batch_dirs_removed": removed,
-    }
+    """Fold the Bloom gate's committed per-batch fingerprint partitions
+    into the base partition — ``batch_store.fold`` keyed on ``fp`` —
+    bounding :func:`bloom_gate_stream`'s per-batch store scan.  Run it
+    while the stream is stopped.  The base id ``-1`` is never a live
+    batch id, so the gate's own-partition exclusion never prunes the
+    base; duplicate fp rows a crashed fold leaves readable change no
+    verdict (the confirm is a semi-join)."""
+    return batch_store.fold(spark, fps_path, upto_batch_id, key=("fp",))
 
 
 def cms_ingest_stream(
@@ -1030,132 +987,68 @@ def attrition_stream(
     frame).
 
     Idempotent like every sink here: rows land under
-    ``__batch_id=<id>`` with dynamic partition overwrite, so a
+    ``__batch_id=<id>`` through ``batch_store.write``, so a
     crash-replayed batch rewrites its own partition. The ledger is
     ≤ |stages|+1 rows per batch — metadata-sized in ROWS forever, but
     its read cost tracks batch-PARTITION count (r11 rung: the
     dashboard groupBy-stage read grew 200 → 436 ms across 25 → 100
     accumulated batches, pure listing/small-file overhead — the same
     mechanism the ANN ingest rung measured at 5x). ``compact_every=N``
-    arms :func:`compact_ledger_batches` at the head of every Nth
-    batch, folding committed partitions into the ``__batch_id=-1``
-    base; ``__src_batch_id`` (a regular column stamping every row with
-    its producing batch) is what makes the fold's crash-rerun
-    idempotent. Reading grouped by stage (sum n_docs/n_tokens)
-    reproduces the batch report over everything ingested, folded or
-    not. Returns the unstarted writer.
+    arms :func:`compact_ledger_batches` (``batch_store.fold``) at the
+    head of every Nth batch, folding committed partitions into the
+    ``__batch_id=-1`` base; ``__src_batch_id`` (a regular column
+    stamping every row with its producing batch) is what makes the
+    fold's crash-rerun idempotent. Reading grouped by stage (sum
+    n_docs/n_tokens) reproduces the batch report over everything
+    ingested, folded or not. Returns the unstarted writer.
     """
     from tajo_spark.operators.attrition import first_drop_attrition
 
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        # fold BEFORE the empty-batch return (an empty cadence batch
-        # must still fire — r11 review), sharing the cadence predicate
-        # and horizon contract with ann_ingest.maybe_compact: when
-        # foreachBatch runs batch N, every id < N is committed and can
-        # never replay, so folding N-1 is always safe
-        from tajo_spark.streaming.ann_ingest import cadence_fires
-
+    def fold(spark, batch_id: int) -> None:
         if cadence_fires(batch_id, compact_every):
             compact_ledger_batches(
-                batch.sparkSession, ledger_path, batch_id - 1
+                spark, ledger_path, batch_id - 1, verify_counts=False
             )
-        if batch.isEmpty():
-            return
-        (
+
+    def write(batch: DataFrame, batch_id: int) -> None:
+        batch_store.write(
             first_drop_attrition(
                 batch, stages, id_col=id_col, token_col=token_col
             )
             .withColumn("__src_batch_id", F.lit(batch_id).cast("long"))
-            .withColumn("__batch_id", F.lit(batch_id).cast("long"))
-            .coalesce(1)
-            .write.partitionBy("__batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(ledger_path)
+            .coalesce(1),
+            ledger_path,
+            batch_id,
         )
 
-    return foreach_batch(stream_df, process_batch, checkpoint)
+    return _maintained_stream(stream_df, checkpoint, fold, write)
 
 
 def compact_ledger_batches(
-    spark, ledger_path: str, upto_batch_id: int
+    spark, ledger_path: str, upto_batch_id: int, verify_counts: bool = True
 ) -> dict:
     """Fold committed attrition-ledger batch partitions into the
-    ``__batch_id=-1`` base — the metadata-scale twin of
-    ``ann_ingest.compact_index_batches``, same safety design:
-
-    * only fold batches at/below the stream checkpoint's committed
-      horizon (foreachBatch never replays a committed id, so folded
-      rows can never be re-appended; the in-flight batch's partition
-      is never touched);
-    * rows keep their ``__src_batch_id``, and the fold deduplicates on
-      ``(stage, __src_batch_id)`` — unique in the ledger by
-      construction — so a crash anywhere in the delete phase is
-      repaired by re-running (base + leftover partitions collapse back
-      to one row per funnel entry, never double-counting a stage sum);
-    * rewrite lands the new base before old partitions are removed.
-
-    Dashboard reads (groupBy stage, sum) are unchanged by the fold;
-    only the partition/file count drops to one base file + the
-    unfolded tail.
-    """
-    # mergeSchema: a ledger written before __src_batch_id existed (or
-    # one with mixed generations) must not let a single old footer win
-    # schema inference — without it the dedup key either resolves to
-    # nothing (UNRESOLVED_COLUMN mid-stream) or reads null on every old
-    # row, collapsing all old batches to one row per stage (r11 review)
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = spark.read.option("mergeSchema", "true").parquet(ledger_path)
-    except AnalysisException as exc:
-        ec = exc.getErrorClass() if hasattr(exc, "getErrorClass") else None
-        if "PATH_NOT_FOUND" not in (ec or str(exc)):
-            # corrupt footer / permissions must surface, not silently
-            # disable compaction forever (r11 review)
-            raise
-        # a fold can fire before any batch has written (every batch so
-        # far empty): nothing to do, not an error
-        return {"rows_folded": 0, "batch_dirs_removed": 0}
-    if "__src_batch_id" not in df.columns:
-        df = df.withColumn("__src_batch_id", F.col("__batch_id"))
-    else:
-        # pre-upgrade rows read null after the merge; their partition
-        # value IS their producing batch (those ledgers predate any
-        # fold, so no -1 ambiguity exists among them)
-        df = df.withColumn(
-            "__src_batch_id",
-            F.coalesce(F.col("__src_batch_id"), F.col("__batch_id")),
-        )
-    df = (
-        df.filter(F.col("__batch_id") <= upto_batch_id)
-        .dropDuplicates(["stage", "__src_batch_id"])
-        .withColumn("__batch_id", F.lit(-1).cast("long"))
+    ``__batch_id=-1`` base — ``batch_store.fold`` keyed on
+    ``(stage, __src_batch_id)``, unique in the ledger by construction,
+    so a re-run after a crash never double-counts a stage sum.
+    Dashboard reads (groupBy stage, sum) are unchanged by the fold."""
+    return batch_store.fold(
+        spark, ledger_path, upto_batch_id, key=("stage", "__src_batch_id"),
+        verify_counts=verify_counts, read=_read_ledger,
     )
-    before = df.count()
-    (
-        df.coalesce(1)
-        .write.partitionBy("__batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(ledger_path)
-    )
-    import pyarrow.fs as pafs
 
-    from tajo_spark.sources.avro_py import _fs_for
 
-    fs, root = _fs_for(ledger_path)  # s3a/s3n scheme bridging
-    removed = 0
-    for binfo in fs.get_file_info(pafs.FileSelector(root)):
-        if binfo.type != pafs.FileType.Directory or not (
-            binfo.base_name.startswith("__batch_id=")
-        ):
-            continue
-        try:
-            bid = int(binfo.base_name.split("=", 1)[1])
-        except ValueError:
-            continue  # stray/null partition dir: skip, don't abort
-        if bid != -1 and bid <= upto_batch_id:
-            fs.delete_dir(binfo.path)
-            removed += 1
-    return {"rows_folded": before, "batch_dirs_removed": removed}
+def _read_ledger(spark, ledger_path: str) -> DataFrame:
+    """The ledger with every row's ``__src_batch_id``.  mergeSchema: a
+    ledger written before ``__src_batch_id`` existed (or one mixing
+    generations) must not let one old footer win schema inference —
+    the fold key would resolve to nothing or read null on every old
+    row, collapsing all old batches to one row per stage.  Old rows
+    take their partition value, which IS their producing batch (those
+    ledgers predate any fold, so no ``-1`` ambiguity exists among
+    them)."""
+    df = spark.read.option("mergeSchema", "true").parquet(ledger_path)
+    src = F.col("__batch_id")
+    if "__src_batch_id" in df.columns:
+        src = F.coalesce(F.col("__src_batch_id"), src)
+    return df.withColumn("__src_batch_id", src)

@@ -185,6 +185,39 @@ def test_second_append_and_probe_reuse_the_codec_columns(
     assert second < first, (first, second)
 
 
+def test_assignment_skips_the_param_transfer(spark, tmp_path):
+    # the frozen model's params reached the JVM at the fit: assigning a
+    # batch calls the JVM model directly instead of re-sending each one
+    # through JavaTransformer._transform, and assigns the same rows
+    emb = _corpus(spark)
+    codec = AI.ivf_ingest_init(
+        emb.filter(F.col("vec_id") < 300), str(tmp_path / "index"),
+        n_centroids=4,
+    )
+    batch = emb.filter(F.col("vec_id") >= 300)
+
+    def through_the_wrapper():
+        return (
+            codec.model.transform(
+                batch.select("vec_id", "embedding", codec.features)
+            )
+            .withColumnRenamed("prediction", "centroid_id")
+            .drop("features")
+        )
+
+    AI.assign_with_frozen_centroids(batch, codec)
+    with py4j_round_trips(spark) as direct:
+        got = AI.assign_with_frozen_centroids(batch, codec)
+    with py4j_round_trips(spark) as wrapped:
+        want = through_the_wrapper()
+    assert wrapped.count - direct.count >= 40, (wrapped.count, direct.count)
+    cols = ["vec_id", "centroid_id"]
+    assert sorted(got.select(cols).collect()) == sorted(
+        want.select(cols).collect()
+    )
+    assert got.schema == want.schema
+
+
 def test_probe_prunes_and_finds_streamed_vector(spark, tmp_path):
     emb = _corpus(spark)
     boot = emb.filter(F.col("vec_id") < 300)

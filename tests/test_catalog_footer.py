@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tajo_spark import catalog
-from tajo_spark.streaming import ann_ingest as AI
+from tajo_spark.streaming import batch_store
 from tests.conftest import SF_DIR
 
 
@@ -92,8 +92,8 @@ def test_footer_schema_of_a_written_index_directory(spark, tmp_path):
         (F.col("id") % 4).cast("int").alias("centroid_id"),
         F.array(F.col("id").cast("float")).alias("embedding"),
     )
-    AI._write_index(src, path, batch_id=0)
-    AI._write_index(src.filter("vec_id < 8"), path, batch_id=1)
+    batch_store.write(src, path, 0, by=("centroid_id",))
+    batch_store.write(src.filter("vec_id < 8"), path, 1, by=("centroid_id",))
     _assert_inferred(spark, path)
     assert catalog.parquet_schema(spark, path).simpleString() == (
         "struct<vec_id:bigint,embedding:array<float>,"

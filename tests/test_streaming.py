@@ -1334,7 +1334,7 @@ def test_ledger_fold_upgrades_pre_src_batch_id_partitions(spark, tmp_path):
     empty = SP.compact_ledger_batches(
         spark, str(tmp_path / "nothing"), upto_batch_id=5
     )
-    assert empty == {"rows_folded": 0, "batch_dirs_removed": 0}
+    assert empty == {"rows_folded": 0, "rows_after": 0, "batch_dirs_removed": 0}
 
 
 def test_compact_folds_and_deletes_legacy_negative_generations(

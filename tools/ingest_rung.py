@@ -14,6 +14,11 @@ rows — the flatness claim is that per-row cost doesn't degrade with
 file count until the file count dominates task scheduling, and that
 compaction removes exactly that overhead.
 
+Every fold also reports the batch directories it removed and the
+bytes under ``__batch_id=-1`` after it, from one listing
+(`batch_store.batch_dirs`): the bytes each fold rewrites, which grow
+with the base while a fold rewrites the whole index.
+
 Usage: python tools/ingest_rung.py [--batches 100]
 Prints the markdown rows SCALE.md carries.
 """
@@ -65,6 +70,7 @@ def main() -> None:
     from tajo_spark.operators.similarity import ivf_q8_shortlist
     from tajo_spark.session import build_spark
     from tajo_spark.streaming import ann_ingest as AI
+    from tajo_spark.streaming import batch_store
 
     spark = build_spark(app_name="ingest_rung")
     rng = np.random.default_rng(42)
@@ -94,6 +100,12 @@ def main() -> None:
             ]
             walls.append(time.perf_counter() - t0)
         return statistics.median(walls), res
+
+    def base_bytes():
+        return sum(
+            d.bytes for d in batch_store.batch_dirs(index)
+            if d.batch_id == batch_store.BASE
+        )
 
     def nfiles():
         return len(
@@ -139,6 +151,7 @@ def main() -> None:
                 max_batch_dirs=args.auto_max_dirs,
             )
             if st:
+                st["base_bytes"] = base_bytes()
                 folds.append(st)
                 if args.auto_max_dirs:
                     marks.add(b + 1)  # post-fold trough sample
@@ -157,6 +170,7 @@ def main() -> None:
     t0 = time.perf_counter()
     stats = AI.compact_index_batches(spark, index, upto_batch_id=args.batches - 1)
     compact_wall = time.perf_counter() - t0
+    stats["base_bytes"] = base_bytes()
     w, res_after = probe()
     rows.append(
         (f"after compact_index_batches (base fold)", w, nfiles())
@@ -171,7 +185,8 @@ def main() -> None:
         f"\ningest wall for {args.batches} batches: {ingest_wall:.1f}s; "
         f"compaction: {compact_wall:.1f}s folding "
         f"{stats['batch_dirs_removed']} batch dirs / "
-        f"{stats['rows_folded']} rows; "
+        f"{stats['rows_folded']} rows, {stats['base_bytes']} bytes in the "
+        f"base after; "
         f"probe results bit-identical across compaction: {identical}"
     )
     if folds and args.auto_max_dirs:
@@ -180,7 +195,7 @@ def main() -> None:
             f"{args.auto_max_dirs}) fired {len(folds)}x: "
             + "; ".join(
                 f"batch {s['fired_at_batch']}: {s['batch_dirs_removed']} "
-                f"dirs folded"
+                f"dirs folded, {s['base_bytes']} base bytes after"
                 for s in folds
             )
         )
@@ -198,7 +213,7 @@ def main() -> None:
             f"(every {args.auto_every} batches): "
             + "; ".join(
                 f"batch {s['fired_at_batch']}: {s['batch_dirs_removed']} "
-                f"dirs folded"
+                f"dirs folded, {s['base_bytes']} base bytes after"
                 for s in folds
             )
         )
@@ -210,6 +225,16 @@ def main() -> None:
                     for s, w, nf in rows
                 ],
                 "identical_across_compaction": identical,
+                "folds": [
+                    {k: s[k] for k in (
+                        "fired_at_batch", "batch_dirs_removed", "base_bytes"
+                    )}
+                    for s in folds
+                ],
+                "final_fold": {
+                    k: stats[k] for k in ("batch_dirs_removed", "base_bytes")
+                },
+                "probe_after": res_after,
             }
         )
     )
