@@ -33,6 +33,7 @@ from tajo_spark.operators.text import (
     normalize_for_fingerprint,
     tokens,
 )
+from tajo_spark.streaming import batch_store
 
 SHINGLE_K = 3          # words per shingle
 NUM_HASHES = 8         # minhash signature length
@@ -385,101 +386,36 @@ def _bucket_pairs(bands_long: DataFrame) -> DataFrame:
 
 
 def write_signature_store(
-    docs: DataFrame, path: str, text_col: str = "text", mode: str = "overwrite"
+    docs: DataFrame,
+    path: str,
+    text_col: str = "text",
+    batch_id: int = batch_store.BASE,
 ) -> None:
-    """Persist the corpus's banded minhash keys, partitioned by band_id.
+    """Persist the corpus's banded minhash keys as batch ``batch_id`` of
+    the ``band_id=b/__batch_id=N`` store (:func:`batch_store.write`).
 
     The continuous-ingest contract: the corpus is signed ONCE; every
     later batch probes these |docs| x NUM_BANDS rows instead of
-    re-reading corpus text. ``mode='append'`` admits each surviving
-    batch into the store — the store grows by signatures only, never
+    re-reading corpus text, and each surviving batch is admitted under
+    its own batch id — the store grows by signatures only, never
     re-signs. Partitioning by band_id lets a probe prune to the band
     directories it touches; production would additionally bucket by
     ``bh`` so the probe join is exchange-free on the store side.
     """
-    write_banded_signatures(banded_long(docs, text_col), path, mode=mode)
+    batch_store.write(
+        banded_long(docs, text_col), path, batch_id, by=("band_id",)
+    )
 
 
-def write_banded_signatures(
-    banded: DataFrame, path: str, mode: str = "append"
-) -> None:
-    """Append already-computed (doc_id, band_id, bh) rows to the store —
-    the path callers holding batch signatures (incremental_dedup_apply's
-    ``return_signatures``) use so nothing is ever signed twice."""
-    banded.write.partitionBy("band_id").mode(mode).parquet(path)
-
-
-def read_signature_store(spark, path: str) -> DataFrame:
-    # recover a compaction interrupted between its two renames (the
-    # documented crash window of compact_signature_store)
-    _recover_compaction(path)
-    return spark.read.parquet(path)
-
-
-def _recover_compaction(path: str) -> None:
-    # Recovery, like compaction itself, assumes no CONCURRENT writers —
-    # but two readers may race each other here: both observe
-    # (old exists, path missing) and the loser's rename raises.  Treat
-    # a failed rename as "someone else recovered" and re-check; only
-    # surface an error when the store is still absent afterwards.
-    import os as _os
-
-    old = path + ".old"
-    if _os.path.isdir(old) and not _os.path.isdir(path):
-        try:
-            _os.rename(old, path)
-        except OSError:
-            if not _os.path.isdir(path):
-                raise
-
-
-def compact_signature_store(spark, path: str) -> dict:
-    """Fold the signature store's per-batch parquet appends into one
-    deduplicated generation — the maintenance pass that bounds
-    ``incremental_dedup_stream``'s per-batch store scan, completing
-    the maintenance family (``streaming/batch_store.fold`` folds the
-    Bloom gate store, the ANN index and the attrition ledger).  Every
-    micro-batch appends files per ``band_id`` partition, so an
-    always-on stream accumulates small files linearly in batch count;
-    replayed appends can also leave duplicate (doc_id, band_id, bh)
-    rows — semantically harmless (bucket membership is a set) but paid
-    on every scan.
-
-    Safety contract: run while the stream is STOPPED.  The fold writes
-    a full new generation NEXT TO the store, then swaps directories
-    with two renames; the only crash window (after renaming the live
-    store away, before renaming the new generation in) is repaired by
-    ``read_signature_store``/this function on next touch, restoring
-    the old generation.  Nothing is deleted until the swap completed.
-    """
-    import os as _os
-    import shutil as _shutil
-
-    _recover_compaction(path)
-    tmp, old = path + ".compact.tmp", path + ".old"
-    _shutil.rmtree(tmp, ignore_errors=True)
-    _shutil.rmtree(old, ignore_errors=True)
-
-    def _count_files(p: str) -> int:
-        return sum(
-            1
-            for _root, _dirs, files in _os.walk(p)
-            for f in files
-            if f.endswith(".parquet")
-        )
-
-    files_before = _count_files(path)
-    df = spark.read.parquet(path).dropDuplicates(["doc_id", "band_id", "bh"])
-    df.write.partitionBy("band_id").mode("overwrite").parquet(tmp)
-    rows = spark.read.parquet(tmp).count()
-    _os.rename(path, old)
-    _os.rename(tmp, path)  # crash between these two renames: see above
-    _shutil.rmtree(old, ignore_errors=True)
-    return {
-        "rows_after": rows,
-        "files_before": files_before,
-        "files_after": _count_files(path),
-    }
+def compact_signature_store(spark, path: str, upto_batch_id: int) -> dict:
+    """Fold the signature store's committed batches into its base
+    partition — ``batch_store.fold`` keyed on (doc_id, band_id, bh) —
+    bounding ``incremental_dedup_stream``'s per-batch store scan.  Run
+    it below the stream checkpoint's committed horizon."""
+    return batch_store.fold(
+        spark, path, upto_batch_id,
+        key=("doc_id", "band_id", "bh"), by=("band_id",),
+    )
 
 
 def incremental_dedup_apply(

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tajo_spark.catalog import load_table
+from tajo_spark.catalog import load_parquet, load_table
 from tajo_spark.operators import dedup, similarity, text
 from tajo_spark.operators.sessionize import sessionize, tumbling_window_agg
 from tajo_spark.queries.registry import query
@@ -2554,7 +2554,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     store_path = base + "/store"
     dedup.write_signature_store(old, store_path)
-    store = dedup.read_signature_store(spark, store_path)
+    store = load_parquet(spark, store_path)
     return dedup.incremental_dedup_apply(new, store).select(
         "doc_id", "lang", "source"
     )

@@ -387,8 +387,7 @@ def compact_index_batches(
     the index by construction) over the ``(centroid_id, __batch_id)``
     layout.  Keeps the tree from accumulating one directory level per
     micro-batch (the streaming-sink small-files problem in the BATCH
-    dimension; sources/compaction.py handles within-directory
-    fragmentation).  Both codecs' encoded columns pass through
+    dimension).  Both codecs' encoded columns pass through
     untouched."""
     return batch_store.fold(
         spark, index_path, upto_batch_id, key=("vec_id",), by=_BY,

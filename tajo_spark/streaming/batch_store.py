@@ -1,8 +1,9 @@
 """The ``__batch_id`` store layout: one writer, one listing and one fold
 for every micro-batch sink that must survive replay — the ANN index
-(``centroid_id=…/__batch_id=N``), the Bloom gate's fingerprint store,
-the attrition ledger, the dedup survivors and the sharded export
-(``…/__batch_id=N`` one or two levels deep).
+(``centroid_id=…/__batch_id=N``), the LSH signature store
+(``band_id=…/__batch_id=N``), the Bloom gate's fingerprint store, the
+attrition ledger, the dedup survivors, the sharded export and its
+``_state`` ledger (``…/__batch_id=N`` one or two levels deep).
 
 A batch's rows land under its own ``__batch_id=N`` directories through
 a dynamic partition overwrite, so a crash-replayed batch rewrites

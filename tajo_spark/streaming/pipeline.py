@@ -474,44 +474,42 @@ def incremental_dedup_stream(
     plan is identical to the batch operator's — foreachBatch is the
     standard Structured-Streaming shape for sinks that need a
     read-modify-write the sink API can't express. Checkpointing makes
-    the whole pipeline restartable, and replay is safe end to end:
-    survivors land in a ``__batch_id`` partition written with DYNAMIC
-    partition overwrite, so a replayed micro-batch overwrites its own
-    partition instead of appending duplicates; the store append reuses
-    the batch's already-computed signatures (never re-signs), and a
-    replayed signature append only re-confirms bucket membership — it
-    cannot change any later dedup verdict.
+    the whole pipeline restartable, and replay is safe end to end: the
+    survivors and the survivors' signatures (the batch's
+    already-computed ones — never re-signed) land in ``__batch_id``
+    partitions written with DYNAMIC partition overwrite, and the probe
+    excludes the store's own ``__batch_id == batch_id`` partitions —
+    so a replayed micro-batch sees exactly the pre-batch store (its
+    half-written signatures are partition-pruned away), recomputes the
+    same verdicts and overwrites its own partitions.  The store is read
+    through the catalog memo with the schema its writer declared, so
+    the read runs no schema-inference job; fold it with
+    ``dedup.compact_signature_store``.
     """
-    import os as _os
-
     from tajo_spark.operators import dedup as _dedup
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if any(
-            f.base_name.endswith(".parquet")
-            or f.base_name.startswith("band_id=")
-            for f in _list_state_dir(store_path)
-        ):
-            store = _dedup.read_signature_store(spark, store_path)
-        else:
-            store = spark.createDataFrame(
-                [], "doc_id BIGINT, band_id INT, bh STRING"
+        if batch_store.batch_dirs(store_path):
+            store = catalog.load_parquet(spark, store_path).filter(
+                F.col("__batch_id") != batch_id
             )
+        else:
+            store = spark.createDataFrame([], "band_id INT, bh STRING")
         survivors, batch_sigs = _dedup.incremental_dedup_apply(
             batch_df, store, return_signatures=True
         )
         survivors = survivors.localCheckpoint()
         batch_store.write(survivors, survivors_path, batch_id)
         # slice the (checkpointed) batch signatures against the
-        # CHECKPOINTED survivors: the append job then reuses the
+        # CHECKPOINTED survivors: the store write then reuses the
         # materialized blocks instead of re-running the store probe —
         # which would re-read store_path in the same action that
-        # appends to it
+        # writes to it
         surv_sigs = batch_sigs.join(
             survivors.select("doc_id"), "doc_id", "left_semi"
         )
-        _dedup.write_banded_signatures(surv_sigs, store_path)
+        batch_store.write(surv_sigs, store_path, batch_id, by=("band_id",))
 
     return foreach_batch(docs_stream, process_batch, checkpoint_path)
 
@@ -530,50 +528,32 @@ def shard_export_stream(
     byte offset accumulated so far, so the last partial shard keeps
     filling across batches instead of each batch opening a fresh one.
 
-    State between batches is a metadata-sized ledger
-    (``_state``: one row per batch — base offset and the total after),
-    read at batch start and appended at batch end; the data write is
-    ``batch_store.write`` keyed on ``shard_id`` (one file per
-    ``(shard, batch)`` directory), so a replayed micro-batch
-    deterministically regenerates the same assignment from its ledger
-    row and overwrites its own sub-partitions — exactly-once layout
-    without rewriting earlier batches' files. Within a batch the
-    assignment is the batch operator's two-phase distributed cumsum
-    (never a global window).
+    State between batches is a metadata-sized ledger (``_state``: one
+    row per batch — base offset and the total after, written by
+    ``batch_store.write`` under the batch's ``__batch_id``); the data
+    write is ``batch_store.write`` keyed on ``shard_id`` (one file per
+    ``(shard, batch)`` directory).  A batch's base is the highest total
+    over the ledger rows of LOWER batch ids, so a replayed micro-batch
+    recomputes the base it first used, deterministically regenerates
+    the same assignment and overwrites its own ledger row and
+    sub-partitions — exactly-once layout without rewriting earlier
+    batches' files — and a leftover higher-id row of an abandoned run
+    never inflates it. Within a batch the assignment is the batch
+    operator's two-phase distributed cumsum (never a global window).
     """
     from tajo_spark.operators.export import shard_assign
-
-    def _ledger_exists(state_path: str) -> bool:
-        # Resolve through pyarrow.fs so hdfs:// / s3a:// export paths
-        # see their ledger too (ADVICE r03: a driver-local os.path probe
-        # silently restarted shard numbering at base=0 on remote FS).
-        import pyarrow.fs as pafs
-
-        from tajo_spark.sources.avro_py import _fs_for
-
-        fs, p = _fs_for(state_path)
-        if fs.get_file_info(p).type != pafs.FileType.Directory:
-            return False
-        return any(
-            f.is_file and f.path.endswith(".parquet")
-            for f in fs.get_file_info(pafs.FileSelector(p, recursive=False))
-        )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         state_path = f"{export_path}/_state"
         base = 0
-        prior = None
-        if _ledger_exists(state_path):
-            st = spark.read.parquet(state_path)
-            mine = st.filter(F.col("batch_id") == batch_id).collect()
-            if mine:  # replay: reuse the recorded base, rewrite in place
-                prior = mine[0]
-                base = prior.base_bytes
-            else:
-                base = st.agg(
-                    F.coalesce(F.max("total_bytes_after"), F.lit(0))
-                ).first()[0]
+        if batch_store.batch_dirs(state_path):
+            base = (
+                catalog.load_parquet(spark, state_path)
+                .filter(F.col("__batch_id") < batch_id)
+                .agg(F.coalesce(F.max("total_bytes_after"), F.lit(0)))
+                .first()[0]
+            )
         batch_df = batch_df.localCheckpoint()
         sharded = shard_assign(
             batch_df,
@@ -586,14 +566,15 @@ def shard_export_stream(
         batch_store.write(
             sharded, f"{export_path}/shards", batch_id, by=("shard_id",)
         )
-        if prior is None:
-            after = base + (
-                batch_df.agg(F.sum(bytes_col)).first()[0] or 0
-            )
+        after = base + (batch_df.agg(F.sum(bytes_col)).first()[0] or 0)
+        batch_store.write(
             spark.createDataFrame(
                 [(batch_id, base, after)],
                 "batch_id LONG, base_bytes LONG, total_bytes_after LONG",
-            ).write.mode("append").parquet(state_path)
+            ),
+            state_path,
+            batch_id,
+        )
 
     return foreach_batch(docs_stream, process_batch, checkpoint_path)
 

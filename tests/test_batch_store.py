@@ -1,7 +1,8 @@
 """The ``__batch_id`` store layout (streaming/batch_store.py): every
 store folded through ``batch_store.fold`` — the ANN index, the Bloom
-gate's fingerprint store and the attrition ledger — follows one rule
-for empty, crashed, stray and corrupt states."""
+gate's fingerprint store, the attrition ledger and the LSH signature
+store — follows one rule for empty, crashed, stray and corrupt
+states."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from tajo_spark.operators import dedup
 from tajo_spark.streaming import ann_ingest as AI
 from tajo_spark.streaming import batch_store
 from tajo_spark.streaming import pipeline as SP
@@ -36,12 +38,23 @@ def _ledger_rows(spark, b):
     )
 
 
+def _signature_rows(spark, b):
+    return spark.createDataFrame(
+        [(100 * b + i, i % 2, f"h{i}") for i in range(4)],
+        "doc_id BIGINT, band_id INT, bh STRING",
+    )
+
+
 # store -> (fold binding, partition keys above __batch_id, rows of batch b, fold key)
 STORES = {
     "index": (AI.compact_index_batches, ("centroid_id",), _index_rows, ["vec_id"]),
     "gate": (SP.compact_gate_store, (), _gate_rows, ["fp"]),
     "ledger": (
         SP.compact_ledger_batches, (), _ledger_rows, ["stage", "__src_batch_id"]
+    ),
+    "signatures": (
+        dedup.compact_signature_store, ("band_id",), _signature_rows,
+        ["doc_id", "band_id", "bh"],
     ),
 }
 
@@ -135,3 +148,101 @@ def test_gate_batch_reads_its_store_without_an_inference_job(
     process(spark.createDataFrame(waves[1], "doc_id LONG, text STRING"), 1)
     admitted = spark.read.parquet(paths[2]).select("doc_id").collect()
     assert sorted(r.doc_id for r in admitted) == [0, 1, 11]
+
+
+_BOILER = "shared boilerplate words repeated across near duplicate docs"
+_DEDUP_WAVES = [
+    [(0, _BOILER + " v1"), (1, "unique first content about engines")],
+    [(10, _BOILER + " v1"), (11, "unique second content about scans")],
+    [(20, _BOILER + " v1"), (21, "unique third content about shuffles")],
+]
+
+
+def test_dedup_and_export_batches_read_their_stores_without_an_inference_job(
+    spark, tmp_path, monkeypatch
+):
+    # the signature store and the export ledger are read through the
+    # catalog memo with the schema their writer declared.  A dedup
+    # batch with a store runs 14 jobs: its store read lost the
+    # inference job, its signature write gained the rebalance on
+    # band_id.  An export batch with a ledger runs 12 (14 through
+    # spark.read.parquet's inference and the replay probe's collect)
+    from tests.conftest import jobs_of
+
+    monkeypatch.setattr(SP, "foreach_batch", lambda _s, process, _c: process)
+    streams = {
+        "dedup": SP.incremental_dedup_stream(
+            None, *[str(tmp_path / p) for p in ("store", "out", "ckpt")]
+        ),
+        "export": SP.shard_export_stream(
+            None, str(tmp_path / "export"), str(tmp_path / "ckpt_e"),
+            shard_bytes=1024,
+        ),
+    }
+    frames = {
+        "dedup": [
+            spark.createDataFrame(w, "doc_id LONG, text STRING")
+            for w in _DEDUP_WAVES
+        ],
+        "export": [
+            spark.createDataFrame(
+                [(i, 100 + 37 * i) for i in range(20 * b, 20 * b + 20)],
+                "doc_id LONG, nb LONG",
+            )
+            for b in range(3)
+        ],
+    }
+    counts = {}
+    for name, process in streams.items():
+        counts[name] = []
+        for b, df in enumerate(frames[name]):
+            _, jobs = jobs_of(spark, f"{name}_{b}", lambda: process(df, b))
+            counts[name].append(len(jobs))
+    assert counts == {"dedup": [13, 14, 14], "export": [10, 12, 12]}, counts
+    out = spark.read.parquet(str(tmp_path / "out")).select("doc_id")
+    assert sorted(r.doc_id for r in out.collect()) == [0, 1, 11, 21]
+
+    def exported():
+        export = str(tmp_path / "export")
+        ledger = spark.read.parquet(f"{export}/_state").collect()
+        shards = spark.read.parquet(f"{export}/shards").collect()
+        return (
+            sorted((r.batch_id, r.base_bytes, r.total_bytes_after)
+                   for r in ledger),
+            sorted((r.doc_id, r.shard_id, r["__batch_id"]) for r in shards),
+        )
+
+    ledger, shards = exported()
+    assert ledger == [(0, 0, 9030), (1, 9030, 32860), (2, 32860, 71490)]
+    # a replay of batch 1 after batch 2 landed recomputes its base from
+    # the lower batch ids and rewrites its row and shards unchanged
+    streams["export"](frames["export"][1], 1)
+    assert exported() == (ledger, shards)
+
+
+def test_signature_store_replay_excludes_its_own_partial_batch(
+    spark, tmp_path, monkeypatch
+):
+    # batch 1's signature write crashed after doc 11's signatures
+    # landed; the replay probes the pre-batch store, so both unique
+    # docs survive (probing the leftover dropped doc 11)
+    monkeypatch.setattr(SP, "foreach_batch", lambda _s, process, _c: process)
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    process = SP.incremental_dedup_stream(None, store, out, None)
+    process(spark.createDataFrame(_DEDUP_WAVES[0], "doc_id LONG, text STRING"), 0)
+    batch = spark.createDataFrame(
+        [(11, "unique second content about scans"),
+         (12, "unique third content about shuffles")],
+        "doc_id LONG, text STRING",
+    )
+    leftover = dedup.banded_long(batch.filter("doc_id = 11"))
+    batch_store.write(leftover, store, 1, by=("band_id",))
+    process(batch, 1)
+    survivors = spark.read.parquet(out).filter("__batch_id = 1")
+    assert sorted(r.doc_id for r in survivors.collect()) == [11, 12]
+    # the replay overwrote its own partitions: one signature set per doc
+    sigs = spark.read.parquet(store)
+    assert sigs.count() == sigs.dropDuplicates(["doc_id", "band_id"]).count()
+    assert sorted(
+        r.doc_id for r in sigs.select("doc_id").distinct().collect()
+    ) == [0, 1, 11, 12]

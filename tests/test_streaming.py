@@ -577,17 +577,14 @@ def test_compact_gate_store_interleaved_with_replay(spark, tmp_path):
 
 
 def test_compact_signature_store_preserves_verdicts(spark, tmp_path):
-    """Signature-store compaction (the minhash twin of
-    compact_gate_store): fold per-batch appends into one deduplicated
-    generation while the stream is stopped — fewer files, identical
-    verdicts for the next wave, and the crash window between the two
-    swap renames is recoverable."""
+    """Signature-store fold (the minhash twin of compact_gate_store):
+    fold the committed per-batch partitions into the base while the
+    stream is stopped — fewer files, identical verdicts for the next
+    wave."""
+    import glob
     import os
 
-    from tajo_spark.operators.dedup import (
-        _recover_compaction,
-        compact_signature_store,
-    )
+    from tajo_spark.operators.dedup import compact_signature_store
     from tajo_spark.streaming.pipeline import incremental_dedup_stream
 
     base = "shared boilerplate words repeated across near duplicate docs"
@@ -616,8 +613,13 @@ def test_compact_signature_store_preserves_verdicts(spark, tmp_path):
     )
     assert before == [0, 1, 11, 21]
 
-    stats = compact_signature_store(spark, store)
-    assert stats["files_after"] < stats["files_before"]
+    def n_files():
+        return len(glob.glob(f"{store}/**/*.parquet", recursive=True))
+
+    files_before = n_files()
+    stats = compact_signature_store(spark, store, upto_batch_id=2)
+    assert stats["batch_dirs_removed"] > 0
+    assert n_files() < files_before
     # one signature row set per surviving doc, no duplicates
     sigs = spark.read.parquet(store)
     assert sigs.count() == sigs.dropDuplicates(
@@ -635,53 +637,6 @@ def test_compact_signature_store_preserves_verdicts(spark, tmp_path):
         r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()
     )
     assert after == [0, 1, 11, 21, 31]
-
-    # crash window: store renamed away, new generation not yet in —
-    # recovery restores the old generation
-    n_before = spark.read.parquet(store).count()
-    os.rename(store, store + ".old")
-    _recover_compaction(store)
-    assert os.path.isdir(store) and not os.path.isdir(store + ".old")
-    assert spark.read.parquet(store).count() == n_before
-
-
-def test_recover_compaction_tolerates_racing_recoverer(tmp_path, monkeypatch):
-    """Two concurrent read_signature_store calls both observe
-    (old exists, path missing); the loser's rename raises AFTER the
-    winner already restored the store — recovery must treat that as
-    success, not crash (ADVICE r06 dedup.py:290)."""
-    import os
-
-    from tajo_spark.operators.dedup import _recover_compaction
-
-    store = str(tmp_path / "store")
-    os.makedirs(store + ".old")
-    real_rename = os.rename
-
-    def racing_rename(srcp, dstp):
-        real_rename(srcp, dstp)  # the winner's effect lands first...
-        raise OSError("raced")  # ...then our own rename fails
-
-    monkeypatch.setattr(os, "rename", racing_rename)
-    _recover_compaction(store)  # must not raise
-    assert os.path.isdir(store) and not os.path.isdir(store + ".old")
-
-
-def test_recover_compaction_surfaces_real_failures(tmp_path, monkeypatch):
-    """A rename failure with the store STILL missing is a real error
-    (disk fault, permission) and must propagate."""
-    import os
-
-    from tajo_spark.operators.dedup import _recover_compaction
-
-    store = str(tmp_path / "store")
-    os.makedirs(store + ".old")
-    monkeypatch.setattr(
-        os, "rename",
-        lambda s, d: (_ for _ in ()).throw(OSError("disk error")),
-    )
-    with pytest.raises(OSError, match="disk error"):
-        _recover_compaction(store)
 
 
 def test_centroid_ingest_stream_equals_batch_bit_for_bit(spark, tmp_path):

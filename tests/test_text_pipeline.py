@@ -292,9 +292,9 @@ def test_incremental_dedup_store_append_flow(spark, tmp_path):
     """Multi-batch incremental dedup: batch2 probes the store built
     from batch1's SURVIVORS (the greedy-incremental variant); the
     store is never re-signed, only appended."""
+    from tajo_spark.catalog import load_parquet
     from tajo_spark.operators.dedup import (
         incremental_dedup_apply,
-        read_signature_store,
         write_signature_store,
     )
 
@@ -322,14 +322,14 @@ def test_incremental_dedup_store_append_flow(spark, tmp_path):
         ],
         "doc_id INT, text STRING",
     )
-    store = read_signature_store(spark, store_path)
+    store = load_parquet(spark, store_path)
     s2 = incremental_dedup_apply(b2, store)
     assert sorted(r.doc_id for r in s2.collect()) == [11]
     # admit batch-2 survivors; store now covers both batches
-    write_signature_store(s2, store_path, mode="append")
+    write_signature_store(s2, store_path, batch_id=1)
     assert sorted(
         r.doc_id
-        for r in read_signature_store(spark, store_path)
+        for r in load_parquet(spark, store_path)
         .select("doc_id")
         .distinct()
         .collect()
@@ -339,9 +339,9 @@ def test_incremental_dedup_store_append_flow(spark, tmp_path):
 def test_incremental_dedup_store_join_prunes_text(spark, tmp_path):
     """The probe plan must read the STORE's signature columns, never
     corpus text, and the store join must be an equi-join."""
+    from tajo_spark.catalog import load_parquet
     from tajo_spark.operators.dedup import (
         incremental_dedup_apply,
-        read_signature_store,
         write_signature_store,
     )
 
@@ -355,9 +355,7 @@ def test_incremental_dedup_store_join_prunes_text(spark, tmp_path):
         [(100, "document number 3 with some words")],
         "doc_id INT, text STRING",
     )
-    out = incremental_dedup_apply(
-        new, read_signature_store(spark, store_path)
-    )
+    out = incremental_dedup_apply(new, load_parquet(spark, store_path))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
