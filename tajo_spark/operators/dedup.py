@@ -164,11 +164,20 @@ def shingles_from_tokens(toks: Column, k: int = SHINGLE_K) -> Column:
     )
 
 
+def fingerprint_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, w) — the fingerprint-normalized token array per document,
+    spread across the cores (:func:`spread_by`): the one input of every
+    shingle consumer (shingle sets, MinHash postings, contamination
+    probes).  ``w`` is a materialized column, as
+    :func:`shingles_from_tokens` requires."""
+    return spread_by(docs, "doc_id").select(
+        "doc_id",
+        F.split(normalize_for_fingerprint(F.col(text_col)), " ").alias("w"),
+    )
+
+
 def shingle_sets(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = SHINGLE_K,
-    materialize: bool = True,
+    docs: DataFrame, text_col: str = "text", k: int = SHINGLE_K
 ) -> DataFrame:
     """(doc_id, s) — per-document DISTINCT k-gram shingle arrays,
     materialized once (``localCheckpoint``) so every multi-consumer
@@ -192,15 +201,14 @@ def shingle_sets(
     ``shingles_from_tokens``), which a checkpoint sidesteps entirely
     because the generator input is a plain column reference.
     """
-    tok = spread_by(docs, "doc_id").select(
-        "doc_id",
-        F.split(normalize_for_fingerprint(F.col(text_col)), " ").alias("w"),
+    return (
+        fingerprint_tokens(docs, text_col)
+        .select(
+            "doc_id",
+            F.array_distinct(shingles_from_tokens(F.col("w"), k)).alias("s"),
+        )
+        .localCheckpoint()
     )
-    sh = tok.select(
-        "doc_id",
-        F.array_distinct(shingles_from_tokens(F.col("w"), k)).alias("s"),
-    )
-    return sh.localCheckpoint() if materialize else sh
 
 
 def postings_of(sh: DataFrame) -> DataFrame:
@@ -208,18 +216,6 @@ def postings_of(sh: DataFrame) -> DataFrame:
     pure projection (arrays are already distinct per doc; NULL arrays
     drop their doc, matching the raw-explode path)."""
     return sh.select("doc_id", F.explode("s").alias("sh"))
-
-
-def shingles(text: Column, k: int = SHINGLE_K) -> Column:
-    """Array of k-word shingles over normalized text (0-based slices).
-
-    Convenience wrapper for ad-hoc use ONLY — every pipeline operator
-    in this package calls `shingles_from_tokens` over a materialized
-    token column instead, because passing the inline split through
-    this wrapper re-inlines the normalization per shingle element
-    under Catalyst's CollapseProject (the trap documented at
-    `shingles_from_tokens` and measured in `weighted_containment_pairs`)."""
-    return shingles_from_tokens(F.split(normalize_for_fingerprint(text), " "), k)
 
 
 def minhash_signatures(
@@ -258,11 +254,7 @@ def minhash_signatures(
         # once instead of twice (r12)
         sh = postings
     else:
-        tok = spread_by(docs, "doc_id").select(
-            "doc_id",
-            F.split(normalize_for_fingerprint(F.col(text_col)), " ").alias("w"),
-        )
-        sh = tok.select(
+        sh = fingerprint_tokens(docs, text_col).select(
             "doc_id", F.explode(shingles_from_tokens(F.col("w"))).alias("sh")
         )
     n_seeds = (num_hashes + 3) // 4
@@ -514,6 +506,37 @@ def simhash_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return votes.select("doc_id", fp.cast("long").alias("simhash"))
 
 
+def verify_pairs(pairs: DataFrame, sh: DataFrame) -> DataFrame:
+    """The verify stage of every two-stage near-dup pipeline: candidate
+    ``(doc_a, doc_b)`` pairs joined to both sides' :func:`shingle_sets`
+    rows, then exact set math — Jaccard and both containments
+    ``C(A in B) = |A ∩ B| / |A|`` — on |candidates| pairs only, never
+    all-pairs.  Callers select or filter the columns they need.
+
+    Output: (doc_a, doc_b, jaccard, cont_a_in_b, cont_b_in_a), 4 dp.
+    """
+    a = sh.select(F.col("doc_id").alias("a_id"), F.col("s").alias("a_s"))
+    b = sh.select(F.col("doc_id").alias("b_id"), F.col("s").alias("b_s"))
+    inter = F.size(F.array_intersect("a_s", "b_s")).cast("double")
+    return (
+        pairs.join(a, pairs.doc_a == a.a_id)
+        .join(b, pairs.doc_b == b.b_id)
+        .select(
+            "doc_a",
+            "doc_b",
+            F.round(
+                inter / F.size(F.array_union("a_s", "b_s")), 4
+            ).alias("jaccard"),
+            F.round(
+                inter / F.greatest(F.size("a_s"), F.lit(1)), 4
+            ).alias("cont_a_in_b"),
+            F.round(
+                inter / F.greatest(F.size("b_s"), F.lit(1)), 4
+            ).alias("cont_b_in_a"),
+        )
+    )
+
+
 def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact 3-gram Jaccard over the MinHash+LSH candidate pairs —
     the verify stage of the two-stage near-dup pipeline (cheap banding
@@ -528,21 +551,7 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Output: (doc_a, doc_b, jaccard)."""
     sh = shingle_sets(docs, text_col)
     pairs = minhash_candidate_pairs(docs, text_col, postings=postings_of(sh))
-    a = sh.select(F.col("doc_id").alias("a_id"), F.col("s").alias("a_s"))
-    b = sh.select(F.col("doc_id").alias("b_id"), F.col("s").alias("b_s"))
-    return (
-        pairs.join(a, pairs.doc_a == a.a_id)
-        .join(b, pairs.doc_b == b.b_id)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.size(F.array_intersect("a_s", "b_s")).cast("double")
-                / F.size(F.array_union("a_s", "b_s")),
-                4,
-            ).alias("jaccard"),
-        )
-    )
+    return verify_pairs(pairs, sh).select("doc_a", "doc_b", "jaccard")
 
 
 def containment_pairs(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -572,26 +581,7 @@ def containment_pairs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     sh = shingle_sets(docs, text_col)
     pairs = minhash_candidate_pairs(docs, text_col, postings=postings_of(sh))
-    a = sh.select(F.col("doc_id").alias("a_id"), F.col("s").alias("a_s"))
-    b = sh.select(F.col("doc_id").alias("b_id"), F.col("s").alias("b_s"))
-    inter = F.size(F.array_intersect("a_s", "b_s")).cast("double")
-    return (
-        pairs.join(a, pairs.doc_a == a.a_id)
-        .join(b, pairs.doc_b == b.b_id)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                inter / F.size(F.array_union("a_s", "b_s")), 4
-            ).alias("jaccard"),
-            F.round(
-                inter / F.greatest(F.size("a_s"), F.lit(1)), 4
-            ).alias("cont_a_in_b"),
-            F.round(
-                inter / F.greatest(F.size("b_s"), F.lit(1)), 4
-            ).alias("cont_b_in_a"),
-        )
-    )
+    return verify_pairs(pairs, sh)
 
 
 RARE_K = 4        # rare-shingle banding probes per proposer document
@@ -689,28 +679,8 @@ def containment_pairs_asym(
     """
     sh = shingle_sets(docs, text_col)
     pairs = containment_candidate_pairs(docs, text_col, k, max_df, sh=sh)
-    a = sh.select(F.col("doc_id").alias("a_id"), F.col("s").alias("a_s"))
-    b = sh.select(F.col("doc_id").alias("b_id"), F.col("s").alias("b_s"))
-    inter = F.size(F.array_intersect("a_s", "b_s")).cast("double")
-    return (
-        pairs.join(a, pairs.doc_a == a.a_id)
-        .join(b, pairs.doc_b == b.b_id)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                inter / F.size(F.array_union("a_s", "b_s")), 4
-            ).alias("jaccard"),
-            F.round(
-                inter / F.greatest(F.size("a_s"), F.lit(1)), 4
-            ).alias("cont_a_in_b"),
-            F.round(
-                inter / F.greatest(F.size("b_s"), F.lit(1)), 4
-            ).alias("cont_b_in_a"),
-        )
-        .where(
-            (F.col("cont_a_in_b") >= gate) | (F.col("cont_b_in_a") >= gate)
-        )
+    return verify_pairs(pairs, sh).where(
+        (F.col("cont_a_in_b") >= gate) | (F.col("cont_b_in_a") >= gate)
     )
 
 
@@ -781,6 +751,80 @@ def dup_span_stats(
                 4,
             ).alias("dup_span_ratio"),
         )
+    )
+
+
+def ordered_concat(sep: str, item: Column, field: str) -> Column:
+    """Aggregate: the group's ``item`` structs collected, sorted, and
+    their ``field`` values joined with ``sep``.  Structs sort field by
+    field, so the leading fields (position, timestamp, ...) fix the
+    order under any partitioning; NULL items (``F.when(keep, struct)``)
+    drop out of the collect."""
+    return F.concat_ws(
+        sep,
+        F.transform(
+            F.array_sort(F.collect_list(item)), lambda s: s[field]
+        ),
+    )
+
+
+def _rank_first(df: DataFrame, id_col: str, pos_col: str) -> DataFrame:
+    """``__rn`` per row of ``df``: 1 on the first occurrence of its
+    content hash ``__h`` — the globally smallest (id, position), so
+    the keeper is deterministic under any partitioning.  ONE window
+    shuffle on the md5 key (uniform, no skew)."""
+    from pyspark.sql import Window
+
+    return df.withColumn(
+        "__rn",
+        F.row_number().over(
+            Window.partitionBy("__h").orderBy(id_col, pos_col)
+        ),
+    )
+
+
+def _reassemble(
+    chunks: DataFrame,
+    id_col: str,
+    dropped: Column,
+    kept: Column,
+    n_dropped: str,
+    text_out: str,
+) -> DataFrame:
+    """Rebuild each document from its ``(chunk_id, chunk_text)`` rows:
+    ``(id_col, n_chunks, <n_dropped>, <text_out>)`` where ``text_out``
+    re-joins the ``kept`` chunks in chunk order and ``n_dropped``
+    counts the ``dropped`` ones.  One groupBy(id) whose payload is the
+    kept chunks only.  ``kept`` is not derived as ``~dropped``: the
+    optimizer rewrites a negated comparison into another predicate."""
+    return (
+        chunks.groupBy(id_col)
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_chunks"),
+            F.sum(dropped.cast("long")).cast("long").alias(n_dropped),
+            ordered_concat(
+                " ", F.when(kept, F.struct("chunk_id", "chunk_text")),
+                "chunk_text",
+            ).alias(text_out),
+        )
+        .select(id_col, "n_chunks", n_dropped, text_out)
+    )
+
+
+def _keep_first_chunks(chunks: DataFrame, id_col: str) -> DataFrame:
+    """Corpus-wide keep-first chunk dedup with reassembly: every chunk
+    but the first occurrence of its md5 is dropped →
+    ``(id_col, n_chunks, n_dropped, dedup_text)``."""
+    ranked = _rank_first(
+        chunks.withColumn("__h", F.md5("chunk_text")), id_col, "chunk_id"
+    )
+    return _reassemble(
+        ranked,
+        id_col,
+        dropped=F.col("__rn") > 1,
+        kept=F.col("__rn") == 1,
+        n_dropped="n_dropped",
+        text_out="dedup_text",
     )
 
 
@@ -856,13 +900,8 @@ def exact_substring_dedup(
             ).otherwise(F.expr("cast(array() as array<string>)"))
         ).alias("start", "__h"),
     )
-    from pyspark.sql import Window
-
-    rn = F.row_number().over(
-        Window.partitionBy("__h").orderBy(id_col, "start")
-    )
     removed = (
-        wins.withColumn("__rn", rn)
+        _rank_first(wins, id_col, "start")
         .filter(F.col("__rn") > 1)
         .groupBy(id_col)
         .agg(F.sort_array(F.collect_list("start")).alias("__starts"))
@@ -937,8 +976,6 @@ def paragraph_dedup(
     one groupBy(doc_id) whose payload is the kept chunks only.  Nothing
     is pairwise; cost tracks corpus token count like the MinHash pass.
     """
-    from pyspark.sql import Window
-
     from tajo_spark.operators.text import chunk_documents
 
     chunks = chunk_documents(
@@ -948,35 +985,7 @@ def paragraph_dedup(
         doc_col=text_col,
         id_col=id_col,
     )
-    w = Window.partitionBy("__h").orderBy(id_col, "chunk_id")
-    ranked = (
-        chunks.withColumn("__h", F.md5("chunk_text"))
-        .withColumn("__rn", F.row_number().over(w))
-    )
-    return (
-        ranked.groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_chunks"),
-            F.sum((F.col("__rn") > 1).cast("long"))
-            .cast("long")
-            .alias("n_dropped"),
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("__rn") == 1,
-                                F.struct("chunk_id", "chunk_text"),
-                            )
-                        )
-                    ),
-                    lambda s: s.chunk_text,
-                ),
-            ).alias("dedup_text"),
-        )
-        .select(id_col, "n_chunks", "n_dropped", "dedup_text")
-    )
+    return _keep_first_chunks(chunks, id_col)
 
 
 def boilerplate_strip(
@@ -1041,29 +1050,13 @@ def boilerplate_strip(
         .select("__src", "__h", F.lit(True).alias("__b"))
     )
     flagged = chunks.join(boiler, ["__src", "__h"], "left")
-    return (
-        flagged.groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_chunks"),
-            F.sum(F.col("__b").isNotNull().cast("long"))
-            .cast("long")
-            .alias("n_boiler"),
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("__b").isNull(),
-                                F.struct("chunk_id", "chunk_text"),
-                            )
-                        )
-                    ),
-                    lambda s: s.chunk_text,
-                ),
-            ).alias("clean_text"),
-        )
-        .select(id_col, "n_chunks", "n_boiler", "clean_text")
+    return _reassemble(
+        flagged,
+        id_col,
+        dropped=F.col("__b").isNotNull(),
+        kept=F.col("__b").isNull(),
+        n_dropped="n_boiler",
+        text_out="clean_text",
     )
 
 
@@ -1102,8 +1095,6 @@ def cdc_chunk_dedup(
     """
     from pyspark.sql import Window
 
-    from tajo_spark.operators.text import tokens
-
     toks = docs.filter(F.col(text_col).isNotNull()).select(
         id_col, F.posexplode(tokens(F.col(text_col))).alias("pos", "tok")
     )
@@ -1120,45 +1111,9 @@ def cdc_chunk_dedup(
         .cast("long"),
     ).withColumn("chunk_id", F.coalesce(F.sum("__b").over(wpos), F.lit(0)))
     chunks = flagged.groupBy(id_col, "chunk_id").agg(
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "tok"))
-                ),
-                lambda s: s.tok,
-            ),
-        ).alias("chunk_text")
+        ordered_concat(" ", F.struct("pos", "tok"), "tok").alias("chunk_text")
     )
-    wh = Window.partitionBy("__h").orderBy(id_col, "chunk_id")
-    ranked = (
-        chunks.withColumn("__h", F.md5("chunk_text"))
-        .withColumn("__rn", F.row_number().over(wh))
-    )
-    return (
-        ranked.groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_chunks"),
-            F.sum((F.col("__rn") > 1).cast("long"))
-            .cast("long")
-            .alias("n_dropped"),
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("__rn") == 1,
-                                F.struct("chunk_id", "chunk_text"),
-                            )
-                        )
-                    ),
-                    lambda s: s.chunk_text,
-                ),
-            ).alias("dedup_text"),
-        )
-        .select(id_col, "n_chunks", "n_dropped", "dedup_text")
-    )
+    return _keep_first_chunks(chunks, id_col)
 
 
 # --------------------------------------------------------------------------

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from tajo_spark.operators.dedup import ordered_concat
+
 SESSION_GAP_MS = 30 * 60 * 1000  # 30 minutes
 
 
@@ -125,16 +127,8 @@ def conversation_assembly(
         with_session.groupBy("user_id", "session_id")
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
-            F.concat_ws(
-                " -> ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct("ts", "event_id", "event_type")
-                        )
-                    ),
-                    lambda s: s.event_type,
-                ),
+            ordered_concat(
+                " -> ", F.struct("ts", "event_id", "event_type"), "event_type"
             ).alias("transcript"),
         )
         .filter(F.col("n_turns") >= min_turns)

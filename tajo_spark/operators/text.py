@@ -27,6 +27,24 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text)).cast("long")
 
 
+def bpe_piece_count(text: Column) -> Column:
+    """Pieces of the GPT-style BPE pre-tokenizer: runs of letters, runs
+    of digits, and single punctuation marks."""
+    return F.size(
+        F.regexp_extract_all(
+            text, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), F.lit(0)
+        )
+    ).cast("long")
+
+
+def alnum_word_count(text: Column) -> Column:
+    """Alphanumeric words (``[A-Za-z0-9]+`` runs) — the denominator of
+    tokenizer fertility, BPE pieces per word."""
+    return F.size(
+        F.regexp_extract_all(text, F.lit(r"[A-Za-z0-9]+"), F.lit(0))
+    ).cast("long")
+
+
 def word_ngrams(text: Column, n: int = 5) -> Column:
     """All word ``n``-grams of the text (space-joined), as an array —
     the unit of boilerplate/template detection: a phrase repeating

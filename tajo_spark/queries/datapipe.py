@@ -576,11 +576,7 @@ def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    tok = dedup.spread_by(docs, "doc_id").select(
-        "doc_id",
-        F.split(text.normalize_for_fingerprint(F.col("text")), " ").alias("w"),
-    )
-    sh = tok.select(
+    sh = dedup.fingerprint_tokens(docs).select(
         "doc_id",
         F.explode(
             F.array_distinct(dedup.shingles_from_tokens(F.col("w")))
@@ -915,9 +911,7 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = F.col("text")
     return docs.select(
         "doc_id",
-        F.size(
-            F.regexp_extract_all(t, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), F.lit(0))
-        ).cast("long").alias("bpe_tokens"),
+        text.bpe_piece_count(t).alias("bpe_tokens"),
         F.size(F.regexp_extract_all(t, F.lit(r"[A-Za-z]+"), F.lit(0)))
         .cast("long")
         .alias("word_tokens"),
@@ -5736,16 +5730,12 @@ def sim_source_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     t = F.col("text")
-    bpe = F.size(
-        F.regexp_extract_all(
-            t, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), F.lit(0)
-        )
-    ).cast("long")
-    words = F.size(
-        F.regexp_extract_all(t, F.lit(r"[A-Za-z0-9]+"), F.lit(0))
-    ).cast("long")
     return (
-        docs.select("lang", bpe.alias("b"), words.alias("w"))
+        docs.select(
+            "lang",
+            text.bpe_piece_count(t).alias("b"),
+            text.alnum_word_count(t).alias("w"),
+        )
         .groupBy("lang")
         .agg(
             F.sum("b").cast("long").alias("bpe_tokens"),
@@ -6104,14 +6094,8 @@ def pipeline_corpus_prep_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
     fert = (
         surv.select(
             "lang",
-            F.size(
-                F.regexp_extract_all(
-                    t, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), F.lit(0)
-                )
-            ).cast("long").alias("b"),
-            F.size(
-                F.regexp_extract_all(t, F.lit(r"[A-Za-z0-9]+"), F.lit(0))
-            ).cast("long").alias("wd"),
+            text.bpe_piece_count(t).alias("b"),
+            text.alnum_word_count(t).alias("wd"),
         )
         .groupBy("lang")
         .agg(

@@ -31,6 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tajo_spark.operators import fsio
 from tajo_spark.operators.similarity import bounded_collect
 
 _META = "_regions.json"
@@ -49,8 +50,7 @@ def write_table(
 
     Returns the region metadata (one dict per region).
     """
-    import pyarrow.fs as pafs
-
+    path = _qualify(path)
     ranged = (
         df.repartitionByRange(regions, F.col(key_col))
         .sortWithinPartitions(key_col)
@@ -77,18 +77,19 @@ def write_table(
         ),
         key=lambda m: m["region"],
     )
-    fs, p = pafs.FileSystem.from_uri(path)
-    with fs.open_output_stream(os.path.join(p, _META)) as out:
-        out.write(json.dumps(meta).encode())
+    fsio.write_bytes_atomic(fsio.join(path, _META), json.dumps(meta).encode())
     return meta
 
 
-def _load_meta(path: str) -> list[dict]:
-    import pyarrow.fs as pafs
+def _qualify(path: str) -> str:
+    """Anchor a scheme-less path at this process's working directory, so
+    the JVM writer (which resolves relative paths against its own
+    launch directory) and the region metadata land in one place."""
+    return path if "://" in path else os.path.abspath(path)
 
-    fs, p = pafs.FileSystem.from_uri(path)
-    with fs.open_input_stream(os.path.join(p, _META)) as f:
-        return json.loads(f.read().decode())
+
+def _load_meta(path: str) -> list[dict]:
+    return json.loads(fsio.read_bytes(fsio.join(path, _META)).decode())
 
 
 def scan(
@@ -101,6 +102,7 @@ def scan(
     """Range scan ``[start_key, stop_key)``: prune regions from the
     driver-side metadata (IndexPredication.java start/stop-row parity),
     then apply the residual key predicate (pushed into parquet)."""
+    path = _qualify(path)
     meta = _load_meta(path)
     live = [
         m["region"]

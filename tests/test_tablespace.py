@@ -101,6 +101,25 @@ def test_hbase_sim_sorted_regions_and_range_pruning(spark, tmp_path):
     assert [r.v for r in hit.collect()] == [777]
 
 
+def test_hbase_sim_relative_path_roundtrip(spark, tmp_path, monkeypatch):
+    # a scheme-less relative path resolves against the working
+    # directory for the region data AND the region metadata
+    from tajo_spark.sources import hbase_sim
+
+    monkeypatch.chdir(tmp_path)
+    df = spark.range(100).selectExpr(
+        "lpad(CAST(id AS STRING), 4, '0') AS row_key", "id AS v"
+    )
+    meta = hbase_sim.write_table(df, "rel/kv", regions=4)
+    assert len(meta) == 4
+    assert (tmp_path / "rel" / "kv" / "_regions.json").is_file()
+    assert list((tmp_path / "rel" / "kv").glob("__region=*"))
+    out = hbase_sim.scan(spark, "rel/kv", start_key="0010", stop_key="0020")
+    assert sorted(r.row_key for r in out.collect()) == [
+        f"{i:04d}" for i in range(10, 20)
+    ]
+
+
 def test_hbase_sim_bounds_the_region_bounds_read(spark, tmp_path,
                                                 monkeypatch):
     # the region bounds are write_table's one driver read; it goes

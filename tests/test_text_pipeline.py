@@ -793,6 +793,34 @@ def test_boilerplate_strip_whole_doc_can_vanish(spark):
     assert out[1].clean_text == ""
 
 
+@pytest.mark.parametrize(
+    "op, kwargs",
+    [
+        ("paragraph_dedup", {"chunk_tokens": 3}),
+        ("cdc_chunk_dedup", {}),
+        ("boilerplate_strip", {"chunk_tokens": 3, "min_docs": 2}),
+        ("exact_substring_dedup", {"window_tokens": 3}),
+    ],
+)
+def test_reassembly_family_excludes_null_text_docs(spark, op, kwargs):
+    """The reassembly family's NULL-text contract: a document with no
+    text has nothing to reassemble and is absent from the output (a
+    caller rebuilding a corpus carries such rows around the operator)."""
+    from tajo_spark.operators import dedup
+
+    docs = spark.createDataFrame(
+        [
+            (0, "a b c d e f", "s"),
+            (1, None, "s"),
+            (2, "a b c g h i", "s"),
+            (3, None, "s"),
+        ],
+        "doc_id LONG, text STRING, source STRING",
+    )
+    out = getattr(dedup, op)(docs, **kwargs)
+    assert sorted(r.doc_id for r in out.collect()) == [0, 2]
+
+
 def test_char_entropy_hand_computed(spark):
     from tajo_spark.operators.text import char_entropy
 
