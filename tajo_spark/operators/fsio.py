@@ -31,7 +31,7 @@ import os
 import posixpath
 
 
-def _resolve(path: str):
+def resolve(path: str):
     """path → (pyarrow FileSystem, fs-internal path).
 
     Scheme-less paths use the POSIX local backend; URIs dispatch via
@@ -54,7 +54,7 @@ def _resolve(path: str):
 def is_local(path: str) -> bool:
     from pyarrow import fs as pafs
 
-    fsys, _ = _resolve(path)
+    fsys, _ = resolve(path)
     return isinstance(fsys, pafs.LocalFileSystem)
 
 
@@ -66,7 +66,7 @@ def join(path: str, *names: str) -> str:
 
 
 def makedirs(path: str) -> None:
-    fsys, p = _resolve(path)
+    fsys, p = resolve(path)
     fsys.create_dir(p, recursive=True)
 
 
@@ -74,7 +74,7 @@ def listdir(path: str) -> list[str]:
     """Base names of regular files directly under ``path``."""
     from pyarrow import fs as pafs
 
-    fsys, p = _resolve(path)
+    fsys, p = resolve(path)
     infos = fsys.get_file_info(pafs.FileSelector(p, recursive=False))
     return sorted(
         posixpath.basename(i.path)
@@ -84,7 +84,7 @@ def listdir(path: str) -> list[str]:
 
 
 def read_bytes(path: str) -> bytes:
-    fsys, p = _resolve(path)
+    fsys, p = resolve(path)
     with fsys.open_input_stream(p) as fh:
         return fh.read()
 
@@ -99,7 +99,7 @@ def write_bytes_atomic(path: str, blob: bytes) -> None:
 
     import uuid
 
-    fsys, p = _resolve(path)
+    fsys, p = resolve(path)
     if isinstance(fsys, pafs.LocalFileSystem):
         # uuid in the temp name, not just pid (r11 review): two
         # speculative attempts on DIFFERENT hosts of a shared mount
@@ -123,8 +123,18 @@ def write_bytes_atomic(path: str, blob: bytes) -> None:
 
 def delete_file(path: str) -> None:
     """Remove one file; missing path is a no-op (cleanup semantics)."""
-    fsys, p = _resolve(path)
+    fsys, p = resolve(path)
     try:
         fsys.delete_file(p)
     except (FileNotFoundError, OSError):
+        pass
+
+
+def delete_dir(path: str) -> None:
+    """Remove one directory tree; missing path is a no-op (cleanup
+    semantics)."""
+    fsys, p = resolve(path)
+    try:
+        fsys.delete_dir(p)
+    except OSError:
         pass

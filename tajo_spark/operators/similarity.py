@@ -1,18 +1,26 @@
 """Similarity search over embedding columns (array<float>).
 
-Beyond-reference capability (BASELINE.json north star):
+Every operator scores through one set of kernels, all JVM-side
+higher-order functions (no Python worker):
 
-* ``cosine_topk`` — brute-force exact top-k: broadcast the query
-  vector, per-row dot product with built-in higher-order functions
-  (zip_with + aggregate — JVM-side, no Python), TakeOrderedAndProject
-  for the k. At 100 TB this is a single scan with no shuffle: the
-  broadcast side is one row and the top-k is partial per partition then
-  merged on the driver (Spark's TakeOrdered).
-* ``lsh_bucket_topk`` — the scale path: sign-LSH bucketing on a fixed
-  set of coordinates partitions the corpus into 2^b buckets; candidate
-  generation only scans the query's bucket (b=4 → 16× less data per
-  probe; real deployments use learned IVF centroids, same plan shape).
-  Bucket ids are deterministic expressions so the oracle reproduces them.
+* :func:`dot`, :func:`norm` and :func:`sq_l2`, the vector folds;
+* :func:`pair_cos`, the cosine from norms computed once per row;
+* :func:`cos6`, the ranking score;
+* :func:`top_k` and :func:`rank_per_query`, the single-query and
+  per-query orders;
+* the anchor stages: an anchor set (seeds, coarse seeds, centroids,
+  query batches) collapses to one broadcast row of id-sorted
+  ``(id, vector, norm)`` structs (:func:`_anchor_row`), and each row
+  scores every anchor (:func:`_anchor_scores`).
+
+The scoring rule, which a SQL oracle replays exactly: cosine rounded
+to 6 decimals, a zero norm scores −2 (it loses to every real
+similarity), ties go to the lowest id.
+
+The operator families are exact top-k (``cosine_topk``: one scan, a
+broadcast one-row query, TakeOrdered), sign-LSH buckets, IVF over
+KMeans centroids, SemDeDup over deterministic seeds, batched ANN joins
+and the persisted int8/PQ index (:class:`Codec`).
 """
 
 from __future__ import annotations
@@ -20,7 +28,7 @@ from __future__ import annotations
 import math
 from functools import cached_property
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 LSH_DIMS = (0, 1, 2, 3)  # coordinates whose signs form the bucket id
@@ -127,14 +135,124 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
+def norm(v: Column) -> Column:
+    """L2 norm of a vector of doubles."""
+    return F.sqrt(dot(v, v))
+
+
+def sq_l2(a: Column, b: Column) -> Column:
+    """Squared L2 distance as a zip_with+aggregate fold."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def pair_cos(a: Column, an: Column, b: Column, bn: Column) -> Column:
+    """Cosine of ``a`` and ``b`` given their norms ``an`` and ``bn``.
+
+    NULL when either norm is zero — matching SQL division semantics
+    (DuckDB 0.0/0.0 → NULL); an unguarded 0/0 would produce NaN on
+    Spark, which sorts ABOVE every real similarity in desc order and
+    corrupts top-k results.  Callers that score one vector against
+    many compute each norm once per row, outside the pair, so a pair
+    costs one dot fold instead of three."""
+    return F.when(an * bn != 0, dot(a, b) / (an * bn))
+
+
+def cos6(a: Column, an: Column, b: Column, bn: Column) -> Column:
+    """The ranking score: :func:`pair_cos` rounded to 6 decimals, −2
+    for a zero norm."""
+    return F.coalesce(F.round(pair_cos(a, an, b, bn), 6), F.lit(-2.0))
+
+
 def cosine(a: Column, b: Column) -> Column:
-    """NULL when either vector has zero norm — matching SQL division
-    semantics (DuckDB 0.0/0.0 → NULL); an unguarded 0/0 would produce
-    NaN on Spark, which sorts ABOVE every real similarity in desc
-    order and corrupts top-k results."""
+    """:func:`pair_cos` of two vectors, each cast to doubles."""
     a, b = _as_double(a), _as_double(b)
-    denom = F.sqrt(dot(a, a)) * F.sqrt(dot(b, b))
-    return F.when(denom != 0, dot(a, b) / denom)
+    return pair_cos(a, norm(a), b, norm(b))
+
+
+def top_k(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """The ``k`` rows of highest ``score``, ties to the lowest
+    ``vec_id``."""
+    return scored.orderBy(F.desc(score), "vec_id").limit(k)
+
+
+def rank_per_query(score: str, id_col: str = "vec_id") -> Column:
+    """Rank within each ``q_id``: ``score`` descending, ties to the
+    lowest ``id_col``."""
+    w = Window.partitionBy("q_id").orderBy(F.desc(score), F.col(id_col).asc())
+    return F.row_number().over(w)
+
+
+def _keep_top_k(
+    scored: DataFrame, rank: Column, k: int, id_col: str, round_to: int
+) -> DataFrame:
+    """(q_id, rank, ``id_col``, cos): the ``k`` best of each query by
+    ``rank``, ``cos`` rounded to ``round_to``."""
+    return (
+        scored.withColumn("rank", rank)
+        .filter(F.col("rank") <= k)
+        .select("q_id", "rank", id_col, F.round("cos", round_to).alias("cos"))
+    )
+
+
+# An anchor set (seeds, coarse seeds, centroids, queries) is a frame of
+# (id, vector as doubles, norm) rows; each triple names those columns,
+# which are also the fields of its anchor structs.
+_SEED = ("seed_id", "sv", "sn")
+_COARSE = ("coarse_id", "cv", "cn")
+_CENTROID = ("centroid_id", "cv", "cn")
+_QUERY = ("q_id", "qv", "qn")
+
+
+def _anchors(df: DataFrame, id_col: str, fields: tuple[str, str, str]) -> DataFrame:
+    """``df``'s ``id_col`` and ``embedding`` as anchor rows named
+    ``fields``."""
+    aid, av, an = fields
+    return df.select(
+        F.col(id_col).alias(aid), _as_double(F.col("embedding")).alias(av)
+    ).withColumn(an, norm(F.col(av)))
+
+
+def _anchor_list(fields: tuple[str, ...]) -> Column:
+    """Aggregate: the anchor rows as structs sorted by id."""
+    return F.sort_array(F.collect_list(F.struct(*fields)))
+
+
+def _anchor_row(
+    anchors: DataFrame, name: str, empty_msg: str | None = None
+) -> DataFrame:
+    """One row whose column ``name`` is the :func:`_anchor_list` of
+    ``anchors`` — the broadcast side of every anchor scan.  With
+    ``empty_msg`` an empty set raises inside the job
+    (:func:`_nonempty_or_raise`)."""
+    row = anchors.agg(_anchor_list(anchors.columns).alias(name))
+    if empty_msg is None:
+        return row
+    return row.select(_nonempty_or_raise(name, empty_msg).alias(name))
+
+
+def _anchor_scores(
+    anchors: str, fields: tuple[str, str, str], vec: Column, vnorm: Column
+) -> Column:
+    """A ``(cos, neg_id)`` struct per anchor of the array column
+    ``anchors`` for the vector ``vec`` of norm ``vnorm``: ``array_max``
+    takes the nearest anchor, a reversed ``array_sort`` ranks them."""
+    aid, av, an = fields
+    return F.transform(
+        F.col(anchors),
+        lambda a: F.struct(
+            cos6(vec, vnorm, a[av], a[an]).alias("cos"),
+            (-a[aid]).alias("neg_id"),
+        ),
+    )
+
+
+def _nearest_id(scores: Column) -> Column:
+    """The id of the nearest anchor of :func:`_anchor_scores`."""
+    return (-F.array_max(scores).neg_id).cast("long")
 
 
 def sign_bucket(vec: Column, dims: tuple[int, ...] = LSH_DIMS) -> Column:
@@ -161,7 +279,7 @@ def cosine_topk(
             F.round(cosine(F.col("embedding"), F.col("qv")), round_to).alias("cos_sim"),
         )
     )
-    return scored.orderBy(F.desc("cos_sim"), "vec_id").limit(k)
+    return top_k(scored, "cos_sim", k)
 
 
 def lsh_bucket_topk(
@@ -184,7 +302,7 @@ def lsh_bucket_topk(
             F.round(cosine(F.col("embedding"), F.col("qv")), round_to).alias("cos_sim"),
         )
     )
-    return scored.orderBy(F.desc("cos_sim"), "vec_id").limit(k)
+    return top_k(scored, "cos_sim", k)
 
 
 def pairwise_similar(
@@ -201,7 +319,7 @@ def pairwise_similar(
         "vec_id",
         _as_double(F.col("embedding")).alias("embedding"),
         sign_bucket(F.col("embedding")).alias("bucket"),
-    ).withColumn("__n", F.sqrt(dot(F.col("embedding"), F.col("embedding"))))
+    ).withColumn("__n", norm(F.col("embedding")))
     # materialize before the self-join: exchanges are not reused across
     # join branches, so without this the scan + cast/bucket/norm
     # pipeline runs TWICE (the same lesson semantic_dedup pins below;
@@ -209,10 +327,8 @@ def pairwise_similar(
     with_bucket = with_bucket.localCheckpoint()
     a = with_bucket.alias("a")
     b = with_bucket.alias("b")
-    denom = F.col("a.__n") * F.col("b.__n")
-    pair_cos = F.when(
-        denom != 0,
-        dot(F.col("a.embedding"), F.col("b.embedding")) / denom,
+    cos = pair_cos(
+        F.col("a.embedding"), F.col("a.__n"), F.col("b.embedding"), F.col("b.__n")
     )
     return (
         a.join(
@@ -223,7 +339,7 @@ def pairwise_similar(
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            F.round(pair_cos, round_to).alias("cos_sim"),
+            F.round(cos, round_to).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
     )
@@ -247,8 +363,8 @@ def l2_normalize(vec: Column) -> Column:
     (array_repeat materializes its argument), then divides element-wise
     — same doubles bit-for-bit, O(d)."""
     v = _as_double(vec)
-    norm = F.greatest(F.sqrt(dot(v, v)), F.lit(1e-12))
-    return F.zip_with(v, F.array_repeat(norm, F.size(v)), lambda x, n: x / n)
+    n = F.greatest(norm(v), F.lit(1e-12))
+    return F.zip_with(v, F.array_repeat(n, F.size(v)), lambda x, n: x / n)
 
 
 def _assignment_features() -> Column:
@@ -344,20 +460,19 @@ def ivf_topk(emb: DataFrame, query_vec_id: int, k: int = 10,
     )
     # query side is a literal of the already-collected query row — a
     # filter on emb here would re-scan the table once per probe
-    return (
+    return top_k(
         assigned.filter(
             F.col("centroid_id").isin(probe)
             & (F.col("vec_id") != query_vec_id)
-        )
-        .select(
+        ).select(
             "vec_id",
             "centroid_id",
             F.round(
                 cosine(F.col("embedding"), _vec_lit(qrow.embedding)), round_to
             ).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(k)
+        ),
+        "cos_sim",
+        k,
     )
 
 
@@ -405,7 +520,7 @@ def ivf_probe_persisted(
     probe = nearest_centroids(
         np.asarray(model.clusterCenters()), query_vec, nprobe
     )
-    return (
+    return top_k(
         _index_frame(spark, path)
         .filter(F.col("centroid_id").isin(probe))
         .select(
@@ -414,15 +529,26 @@ def ivf_probe_persisted(
             F.round(
                 cosine(F.col("embedding"), _vec_lit(query_vec)), round_to
             ).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(k)
+        ),
+        "cos_sim",
+        k,
     )
 
 
 # --------------------------------------------------------------------------
 # SemDeDup — semantic dedup on embedding clusters
 # --------------------------------------------------------------------------
+
+
+def _assign_nearest(df: DataFrame, scores: Column, id_col: str) -> DataFrame:
+    """(``id_col``, embedding, cluster_id, seed_cos): each row of ``df``
+    with its nearest seed of :func:`_anchor_scores` ``scores``."""
+    return df.withColumn("__best", F.array_max(scores)).select(
+        id_col,
+        "embedding",
+        (-F.col("__best.neg_id")).cast("long").alias("cluster_id"),
+        F.round(F.col("__best.cos"), 4).alias("seed_cos"),
+    )
 
 
 def seeded_cluster_assign(
@@ -456,64 +582,23 @@ def seeded_cluster_assign(
     corpus (r12: the pre-job was a whole extra Spark job per call and
     the r11 bench's only real mover).
     """
-    seeds_row = (
-        emb.filter(F.col(id_col) < n_seeds)
-        .select(
-            F.col(id_col).alias("seed_id"),
-            _as_double(F.col("embedding")).alias("sv"),
-        )
-        .withColumn("sn", F.sqrt(dot(F.col("sv"), F.col("sv"))))
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("seed_id", "sv", "sn"))
-            ).alias("__seeds")
-        )
-        .select(
-            _nonempty_or_raise(
-                "__seeds",
-                f"no vectors with {id_col} < n_seeds={n_seeds}: the "
-                "deterministic seed rule requires ids dense from 0 - "
-                "renumber upstream (row_number) or pass a smaller corpus",
-            ).alias("__seeds")
-        )
+    seeds_row = _anchor_row(
+        _anchors(emb.filter(F.col(id_col) < n_seeds), id_col, _SEED),
+        "__seeds",
+        f"no vectors with {id_col} < n_seeds={n_seeds}: the "
+        "deterministic seed rule requires ids dense from 0 - "
+        "renumber upstream (row_number) or pass a smaller corpus",
     )
     v = _as_double(F.col("embedding"))
-    # one cosine per seed (transform), then array_max over
-    # (rounded-cos, -seed_id) structs: struct ordering gives max cosine
-    # with ties to the lowest seed_id — the fold alternative evaluates
-    # each seed's cosine twice (condition + selection) per step, which
-    # doubled the hot interpreted-HOF loop. Norms are computed ONCE per
-    # row (__vn) and per seed (in the broadcast struct) instead of
-    # per (row, seed) inside cosine() — same sqrt(dot)*sqrt(dot) values,
-    # FP-identical scores, 3 array folds per seed down to 1 (measured
-    # ~3x on the assignment scan). Zero-norm cosines (NULL) coalesce to
-    # -2 so they lose to every real similarity.
-    scores = F.transform(
-        F.col("__seeds"),
-        lambda s: F.struct(
-            F.coalesce(
-                F.round(
-                    F.when(
-                        F.col("__vn") * s.sn != 0,
-                        dot(v, s.sv) / (F.col("__vn") * s.sn),
-                    ),
-                    6,
-                ),
-                F.lit(-2.0),
-            ).alias("cos"),
-            (-s.seed_id).alias("neg_id"),
-        ),
-    )
-    return (
-        emb.withColumn("__vn", F.sqrt(dot(v, v)))
-        .join(F.broadcast(seeds_row))
-        .withColumn("__best", F.array_max(scores))
-        .select(
-            id_col,
-            "embedding",
-            (-F.col("__best.neg_id")).cast("long").alias("cluster_id"),
-            F.round(F.col("__best.cos"), 4).alias("seed_cos"),
-        )
+    # one cosine per seed (transform), then array_max over the
+    # (cos, -seed_id) structs — the fold alternative evaluates each
+    # seed's cosine twice (condition + selection) per step, which
+    # doubled the hot interpreted-HOF loop; norms hoisted per row and
+    # per seed (measured ~3x on the assignment scan)
+    return _assign_nearest(
+        emb.withColumn("__vn", norm(v)).join(F.broadcast(seeds_row)),
+        _anchor_scores("__seeds", _SEED, v, F.col("__vn")),
+        id_col,
     )
 
 
@@ -576,56 +661,22 @@ def seeded_cluster_assign_two_level(
     ``cosine`` (same sqrt(dot)*sqrt(dot) denominator values).
     """
     c = n_coarse if n_coarse is not None else math.isqrt(max(n_seeds - 1, 0)) + 1
-    seeds = emb.filter(F.col(id_col) < n_seeds).select(
-        F.col(id_col).alias("seed_id"),
-        _as_double(F.col("embedding")).alias("sv"),
-    ).withColumn("sn", F.sqrt(dot(F.col("sv"), F.col("sv"))))
-    coarse_row = (
-        seeds.filter(F.col("seed_id") < c)
-        .select(
+    seeds = _anchors(emb.filter(F.col(id_col) < n_seeds), id_col, _SEED)
+    coarse_row = _anchor_row(
+        seeds.filter(F.col("seed_id") < c).select(
             F.col("seed_id").alias("coarse_id"),
             F.col("sv").alias("cv"),
             F.col("sn").alias("cn"),
-        )
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("coarse_id", "cv", "cn"))
-            ).alias("__coarse")
-        )
-        # dense-id precondition, loud (r11 review: empty coarse seeds
-        # would inner-join to an EMPTY assignment with no error) —
-        # folded into this one-row aggregate instead of a separate
-        # isEmpty pre-job on the corpus (r12)
-        .select(
-            _nonempty_or_raise(
-                "__coarse",
-                f"no vectors with {id_col} < n_coarse={c}: deterministic "
-                "seeds require ids dense from 0",
-            ).alias("__coarse")
-        )
+        ),
+        "__coarse",
+        # dense-id precondition, loud: empty coarse seeds would
+        # inner-join to an EMPTY assignment with no error
+        f"no vectors with {id_col} < n_coarse={c}: deterministic "
+        "seeds require ids dense from 0",
     )
 
     def _best_coarse(vec: Column, vnorm: Column) -> Column:
-        # argmax over the broadcast coarse array: (round-6 cos, -id)
-        # structs, array_max → max cosine, ties to lowest coarse_id;
-        # zero-norm cosines (NULL) coalesce to -2 so they always lose
-        scores = F.transform(
-            F.col("__coarse"),
-            lambda s: F.struct(
-                F.coalesce(
-                    F.round(
-                        F.when(
-                            vnorm * s.cn != 0,
-                            dot(vec, s.cv) / (vnorm * s.cn),
-                        ),
-                        6,
-                    ),
-                    F.lit(-2.0),
-                ).alias("cos"),
-                (-s.coarse_id).alias("neg_id"),
-            ),
-        )
-        return (-F.array_max(scores).neg_id).cast("long")
+        return _nearest_id(_anchor_scores("__coarse", _COARSE, vec, vnorm))
 
     # seed -> coarse group (k-row metadata-sized job); a coarse seed is
     # ALWAYS its own group's member — without the forced self row a
@@ -640,16 +691,12 @@ def seeded_cluster_assign_two_level(
             ),
         )
         .groupBy("coarse_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("seed_id", "sv", "sn"))
-            ).alias("__grp")
-        )
+        .agg(_anchor_list(_SEED).alias("__grp"))
     )
 
     v = _as_double(F.col("embedding"))
     pts = (
-        emb.withColumn("__vn", F.sqrt(dot(v, v)))
+        emb.withColumn("__vn", norm(v))
         .join(F.broadcast(coarse_row))
         .withColumn("coarse_id", _best_coarse(v, F.col("__vn")))
         .drop("__coarse")
@@ -659,31 +706,10 @@ def seeded_cluster_assign_two_level(
         if n_seeds <= BROADCAST_MAX_SEED_VECTORS
         else seed_groups.hint("shuffle_hash")
     )
-    fine_scores = F.transform(
-        F.col("__grp"),
-        lambda s: F.struct(
-            F.coalesce(
-                F.round(
-                    F.when(
-                        F.col("__vn") * s.sn != 0,
-                        dot(v, s.sv) / (F.col("__vn") * s.sn),
-                    ),
-                    6,
-                ),
-                F.lit(-2.0),
-            ).alias("cos"),
-            (-s.seed_id).alias("neg_id"),
-        ),
-    )
-    return (
-        pts.join(grp, "coarse_id")
-        .withColumn("__best", F.array_max(fine_scores))
-        .select(
-            id_col,
-            "embedding",
-            (-F.col("__best.neg_id")).cast("long").alias("cluster_id"),
-            F.round(F.col("__best.cos"), 4).alias("seed_cos"),
-        )
+    return _assign_nearest(
+        pts.join(grp, "coarse_id"),
+        _anchor_scores("__grp", _SEED, v, F.col("__vn")),
+        id_col,
     )
 
 
@@ -741,9 +767,7 @@ def semantic_dedup(
     # references, nothing per-row).
     withn = (
         assigned.withColumn("embedding", v)
-        .withColumn(
-            "__norm", F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-        )
+        .withColumn("__norm", norm(F.col("embedding")))
         .localCheckpoint()
     )
     if n_seeds <= BROADCAST_MAX_CLUSTERS:
@@ -753,10 +777,11 @@ def semantic_dedup(
     else:
         a = withn.alias("a")
         b = withn.alias("b").hint("shuffle_hash")
-    denom = F.col("a.__norm") * F.col("b.__norm")
-    pair_cos = F.when(
-        denom != 0,
-        dot(F.col("a.embedding"), F.col("b.embedding")) / denom,
+    cos = pair_cos(
+        F.col("a.embedding"),
+        F.col("a.__norm"),
+        F.col("b.embedding"),
+        F.col("b.__norm"),
     )
     removed = (
         a.join(
@@ -764,7 +789,7 @@ def semantic_dedup(
             (F.col("a.cluster_id") == F.col("b.cluster_id"))
             & (F.col(f"a.{id_col}") > F.col(f"b.{id_col}")),
         )
-        .filter(F.round(pair_cos, 4) >= threshold)
+        .filter(F.round(cos, 4) >= threshold)
         .select(F.col(f"a.{id_col}").alias(id_col))
         .distinct()
         .withColumn("__rm", F.lit(True))
@@ -812,52 +837,28 @@ def ann_join(
     Ranking is deterministic: round-6 cosine desc, corpus id asc.
     Output: (query_id, rank, vec_id-named id, cos).
     """
-    qrow = (
-        queries.select(
-            F.col(query_id_col).alias("q_id"),
-            _as_double(F.col("embedding")).alias("qv"),
-        )
-        .withColumn("qn", F.sqrt(dot(F.col("qv"), F.col("qv"))))
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("q_id", "qv", "qn"))
-            ).alias("__qs")
-        )
-    )
+    qrow = _anchor_row(_anchors(queries, query_id_col, _QUERY), "__qs")
     v = _as_double(F.col("embedding"))
     scored = F.transform(
         F.col("__qs"),
         lambda q: F.struct(
             q.q_id.alias("q_id"),
-            F.coalesce(
-                F.round(
-                    F.when(
-                        F.col("__vn") * q.qn != 0,
-                        dot(v, q.qv) / (F.col("__vn") * q.qn),
-                    ),
-                    6,
-                ),
-                F.lit(-2.0),
-            ).alias("cos"),
+            cos6(v, F.col("__vn"), q.qv, q.qn).alias("cos"),
         ),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("cos"), F.col(id_col).asc()
-    )
-    return (
-        corpus.withColumn("__vn", F.sqrt(dot(v, v)))
+    return _keep_top_k(
+        corpus.withColumn("__vn", norm(v))
         .join(F.broadcast(qrow))
         .select(id_col, F.explode(scored).alias("__s"))
         .select(
             F.col("__s.q_id").alias("q_id"),
             id_col,
             F.col("__s.cos").alias("cos"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", id_col, F.round("cos", round_to).alias("cos"))
+        ),
+        rank_per_query("cos", id_col),
+        k,
+        id_col,
+        round_to,
     )
 
 
@@ -903,68 +904,34 @@ def ann_join_ivf(
     centroid aggregate (r12: the r11 isEmpty pre-job was a whole extra
     corpus job and this query's 1.38x bench mover).
     """
-    cents_row = (
-        corpus.filter(F.col(id_col) < n_centroids)
-        .select(
-            F.col(id_col).alias("centroid_id"),
-            _as_double(F.col("embedding")).alias("cv"),
-        )
-        .withColumn("cn", F.sqrt(dot(F.col("cv"), F.col("cv"))))
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("centroid_id", "cv", "cn"))
-            ).alias("__cents")
-        )
-        .select(
-            _nonempty_or_raise(
-                "__cents",
-                f"no vectors with {id_col} < n_centroids={n_centroids}: "
-                "deterministic centroids require ids dense from 0",
-            ).alias("__cents")
-        )
+    cents_row = _anchor_row(
+        _anchors(corpus.filter(F.col(id_col) < n_centroids), id_col, _CENTROID),
+        "__cents",
+        f"no vectors with {id_col} < n_centroids={n_centroids}: "
+        "deterministic centroids require ids dense from 0",
     )
-
-    def _cent_scores(vec: Column, vnorm: Column) -> Column:
-        return F.transform(
-            F.col("__cents"),
-            lambda s: F.struct(
-                F.coalesce(
-                    F.round(
-                        F.when(
-                            vnorm * s.cn != 0,
-                            dot(vec, s.cv) / (vnorm * s.cn),
-                        ),
-                        6,
-                    ),
-                    F.lit(-2.0),
-                ).alias("cos"),
-                (-s.centroid_id).alias("neg_id"),
-            ),
-        )
-
     v = _as_double(F.col("embedding"))
     corp = (
-        corpus.withColumn("__vn", F.sqrt(dot(v, v)))
+        corpus.withColumn("__vn", norm(v))
         .join(F.broadcast(cents_row))
         .withColumn(
             "centroid_id",
-            (-F.array_max(_cent_scores(v, F.col("__vn"))).neg_id).cast(
-                "long"
-            ),
+            _nearest_id(_anchor_scores("__cents", _CENTROID, v, F.col("__vn"))),
         )
         .drop("__cents")
     )
-    # query -> nprobe nearest centroids: sort the scored structs desc
-    # ((cos, -id) structs sort ties to the LOWEST centroid first when
-    # reversed), slice nprobe, explode
+    # query -> nprobe nearest centroids: the reversed sort of the
+    # (cos, -id) structs, sliced to nprobe and exploded
     qv = _as_double(F.col("embedding"))
     probes = F.slice(
-        F.reverse(F.array_sort(_cent_scores(qv, F.col("__qn")))),
+        F.reverse(
+            F.array_sort(_anchor_scores("__cents", _CENTROID, qv, F.col("__qn")))
+        ),
         1,
         nprobe,
     )
     q = (
-        queries.withColumn("__qn", F.sqrt(dot(qv, qv)))
+        queries.withColumn("__qn", norm(qv))
         .join(F.broadcast(cents_row))
         .select(
             F.col(query_id_col).alias("q_id"),
@@ -980,28 +947,13 @@ def ann_join_ivf(
     qside = (
         F.broadcast(q) if broadcast_queries else q.hint("shuffle_hash")
     )
-    pair_cos = F.coalesce(
-        F.round(
-            F.when(
-                F.col("__vn") * F.col("qn") != 0,
-                dot(F.col("embedding"), F.col("qv"))
-                / (F.col("__vn") * F.col("qn")),
-            ),
-            6,
-        ),
-        F.lit(-2.0),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("cos"), F.col(id_col).asc()
-    )
-    return (
-        corp.join(qside, "centroid_id")
-        .select("q_id", id_col, pair_cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", id_col, F.round("cos", round_to).alias("cos"))
+    cos = cos6(F.col("embedding"), F.col("__vn"), F.col("qv"), F.col("qn"))
+    return _keep_top_k(
+        corp.join(qside, "centroid_id").select("q_id", id_col, cos.alias("cos")),
+        rank_per_query("cos", id_col),
+        k,
+        id_col,
+        round_to,
     )
 
 
@@ -1032,25 +984,15 @@ def semantic_contamination(
         benchmark.select(
             _as_double(F.col("embedding")).alias("bv"),
         )
-        .withColumn("bn", F.sqrt(dot(F.col("bv"), F.col("bv"))))
+        .withColumn("bn", norm(F.col("bv")))
         .agg(F.collect_list(F.struct("bv", "bn")).alias("__bench"))
     )
     v = _as_double(F.col("embedding"))
     scores = F.transform(
-        F.col("__bench"),
-        lambda b: F.coalesce(
-            F.round(
-                F.when(
-                    F.col("__vn") * b.bn != 0,
-                    dot(v, b.bv) / (F.col("__vn") * b.bn),
-                ),
-                6,
-            ),
-            F.lit(-2.0),
-        ),
+        F.col("__bench"), lambda b: cos6(v, F.col("__vn"), b.bv, b.bn)
     )
     return (
-        corpus.withColumn("__vn", F.sqrt(dot(v, v)))
+        corpus.withColumn("__vn", norm(v))
         .join(F.broadcast(brow))
         .withColumn("__mx", F.array_max(scores))
         .select(
@@ -1194,13 +1136,8 @@ class Codec:
 
         def key(i):
             cv = F.slice(self.centroids, i * dim + 1, dim)
-            d2 = F.aggregate(
-                F.zip_with(qn, cv, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
             return F.struct(
-                (-F.round(d2, 9)).alias("negd"),
+                (-F.round(sq_l2(qn, cv), 9)).alias("negd"),
                 (-i).alias("neg_id"),
                 dot(qn, cv).alias("qc"),
             )
@@ -1253,17 +1190,11 @@ class Codec:
         :func:`ann_join_persisted`: the shortlist rank by ``__score``,
         the base vectors as doubles, their exact cosine to the query
         and the final rank by it."""
-        from pyspark.sql import Window
-
-        def rank_by(c):
-            w = Window.partitionBy("q_id").orderBy(F.desc(c), F.col("vec_id").asc())
-            return F.row_number().over(w)
-
         return (
-            rank_by("__score"),
+            rank_per_query("__score"),
             _as_double(F.col("embedding")).alias("cv8"),
             F.round(cosine(F.col("cv8"), F.col("qv")), 6).alias("cos"),
-            rank_by("cos"),
+            rank_per_query("cos"),
         )
 
 
@@ -1281,14 +1212,13 @@ class Q8Codec(Codec):
     @cached_property
     def query_columns(self) -> tuple[Column, ...]:
         qv8 = _as_double(quantize_int8(F.col("qv")))
-        return qv8.alias("__qv8"), F.sqrt(dot(qv8, qv8)).alias("__qn8")
+        return qv8.alias("__qv8"), norm(qv8).alias("__qn8")
 
     @cached_property
     def _candidate(self) -> tuple[Column, Column]:
-        cv = F.col("__cv")
         return (
             _as_double(F.col(self.column)).alias("__cv"),
-            F.sqrt(dot(cv, cv)),
+            norm(F.col("__cv")),
         )
 
     def candidates(self, idx: DataFrame) -> DataFrame:
@@ -1300,8 +1230,9 @@ class Q8Codec(Codec):
 
     @cached_property
     def score(self) -> Column:
-        norms = F.col("__cn") * F.col("__qn8")
-        return F.when(norms != 0, dot(F.col("__cv"), F.col("__qv8")) / norms)
+        return pair_cos(
+            F.col("__cv"), F.col("__cn"), F.col("__qv8"), F.col("__qn8")
+        )
 
 
 def probe_targets(probes: DataFrame) -> DataFrame:
@@ -1357,7 +1288,7 @@ def ivf_q8_shortlist(
     idx = (
         index_df if index_df is not None else _index_frame(spark, path)
     ).filter(F.col("centroid_id").isin(probe))
-    return (
+    return top_k(
         codec.candidates(idx)
         .select(
             "vec_id",
@@ -1366,9 +1297,9 @@ def ivf_q8_shortlist(
             _vec_lit(qq8).alias("__qv8"),
             F.lit(float(acc) ** 0.5).alias("__qn8"),
         )
-        .select("vec_id", codec.score.alias("__q8_cos"))
-        .orderBy(F.desc("__q8_cos"), "vec_id")
-        .limit(k * expand)
+        .select("vec_id", codec.score.alias("__q8_cos")),
+        "__q8_cos",
+        k * expand,
     )
 
 
@@ -1465,14 +1396,15 @@ def ann_join_persisted(
         [(r.q_id, r.qv) for r in qrows],
         StructType([qplan.schema["q_id"], qplan.schema["qv"]]),
     )
-    return (
+    return _keep_top_k(
         base.select("vec_id", base_vector)
         .join(F.broadcast(shortlist), "vec_id")
         .join(F.broadcast(qfull), "q_id")
-        .select("q_id", "vec_id", exact_cos)
-        .withColumn("rank", rank)
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", F.round("cos", round_to).alias("cos"))
+        .select("q_id", "vec_id", exact_cos),
+        rank,
+        k,
+        "vec_id",
+        round_to,
     )
 
 
@@ -1502,16 +1434,15 @@ def ivf_probe_persisted_q8(
         index_df=index_df,
     )
     ids = [int(r.vec_id) for r in shortlist.collect()]  # metadata-sized
-    return (
-        emb.filter(F.col("vec_id").isin(ids))
-        .select(
+    return top_k(
+        emb.filter(F.col("vec_id").isin(ids)).select(
             "vec_id",
             F.round(
                 cosine(F.col("embedding"), _vec_lit(query_vec)), round_to
             ).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(k)
+        ),
+        "cos_sim",
+        k,
     )
 
 
@@ -1543,20 +1474,18 @@ def hybrid_rrf_topk(
     rank windows over those tiny frames (single-partition by
     construction — depth rows, not corpus rows), then TakeOrdered.
     """
-    from pyspark.sql import Window as W
-
     from tajo_spark.operators.text import bm25_topk
 
     lex = bm25_topk(docs, query_terms, k=depth).select(
         "doc_id",
         F.row_number()
-        .over(W.orderBy(F.desc("bm25"), "doc_id"))
+        .over(Window.orderBy(F.desc("bm25"), "doc_id"))
         .alias("lex_rank"),
     )
     dense = cosine_topk(emb, query_vec_id, k=depth).select(
         F.col("vec_id").alias("doc_id"),
         F.row_number()
-        .over(W.orderBy(F.desc("cos_sim"), "vec_id"))
+        .over(Window.orderBy(F.desc("cos_sim"), "vec_id"))
         .alias("dense_rank"),
     )
     fused = (
@@ -1628,7 +1557,6 @@ def kmeans_lloyd(
         F.col(id_col),
         _as_double(F.col(vec_col)).alias("v"),
     ).localCheckpoint()
-    from pyspark.sql import Window as W
 
     # TakeOrdered(k) first, then number the k survivors — the window
     # runs on k rows, never on the corpus
@@ -1636,7 +1564,7 @@ def kmeans_lloyd(
         e.orderBy(id_col)
         .limit(k)
         .select(
-            F.row_number().over(W.orderBy(id_col)).cast("int").alias("cid"),
+            F.row_number().over(Window.orderBy(id_col)).cast("int").alias("cid"),
             F.col("v").alias("c"),
         )
     )
@@ -1662,15 +1590,7 @@ def kmeans_lloyd(
                 F.transform(
                     "__cents",
                     lambda s: F.struct(
-                        F.aggregate(
-                            F.zip_with(
-                                F.col("v"),
-                                s["c"],
-                                lambda a, b: (a - b) * (a - b),
-                            ),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        ).alias("sq_dist"),
+                        sq_l2(F.col("v"), s["c"]).alias("sq_dist"),
                         s["cid"].alias("cid"),
                     ),
                 )
@@ -1778,7 +1698,7 @@ def centroid_cosines_from_sums(s: DataFrame) -> DataFrame:
             "label_b",
             # zero-norm guard (r11 review): an all-zero component-sum
             # label would make this 0/0 → NaN on Spark doubles where
-            # the oracle yields NULL — the exact hazard cosine()'s
+            # the oracle yields NULL — the exact hazard pair_cos()'s
             # docstring pins; NULL is the contract
             F.round(
                 F.when(

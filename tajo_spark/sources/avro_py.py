@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tajo_spark.operators import fsio
+
 MAGIC = b"Obj\x01"
 SYNC_SIZE = 16
 _DEFAULT_BLOCK_ROWS = 4096
@@ -646,18 +648,6 @@ def _write_blocks(out, rows, schema, codec, sync, block_rows) -> None:
 # ---------------------------------------------------------------------------
 
 
-def _fs_for(path: str):
-    # route through fsio._resolve so Hadoop's s3a://ₛ3n:// spellings
-    # (the ones Spark's JVM writers in the same handlers REQUIRE) map
-    # to pyarrow's s3 backend instead of raising ArrowInvalid — a
-    # ValueError the FileNotFoundError/OSError probes upstream never
-    # catch, so on S3 the state probe would kill the stream (ADVICE
-    # r11 medium)
-    from tajo_spark.operators.fsio import _resolve
-
-    return _resolve(path)
-
-
 def _expand_glob(fs, p: str) -> list[tuple[str, int]]:
     """Driver-side glob expansion (pyarrow.fs has no native glob):
     list the deepest non-glob parent recursively and match SEGMENT-wise
@@ -713,7 +703,7 @@ def _peek_schema(path: str):
     """Driver-side header read of ONE file to resolve the schema —
     SelfDescSchemaBuildPhase parity (the reference infers Avro schemas
     from file metadata at plan time)."""
-    fs, p = _fs_for(path)
+    fs, p = fsio.resolve(path)
     info = fs.get_file_info(p)
     import pyarrow.fs as pafs
 
@@ -829,7 +819,7 @@ def _list_avro_files(path: str) -> list[tuple[str, int]]:
     listing only, no data reads."""
     import pyarrow.fs as pafs
 
-    fs, p = _fs_for(path)
+    fs, p = fsio.resolve(path)
     info = fs.get_file_info(p)
     if info.type == pafs.FileType.Directory:
         return sorted(
@@ -915,7 +905,7 @@ def read_avro(
         raise ValueError(
             f"split_bytes must be positive, got {split_bytes}"
         )  # r11 review: <= 0 looped the planner forever
-    fs, _p = _fs_for(path)
+    fs, _p = fsio.resolve(path)
     if files is None:
         files = _list_avro_files(path)
     splits = []
@@ -1060,7 +1050,7 @@ def write_avro(
     import pyarrow.fs as pafs
 
     avro_schema = spark_to_avro_schema(df.schema)
-    fs, dirpath = _fs_for(path)
+    fs, dirpath = fsio.resolve(path)
     info = fs.get_file_info(dirpath)
     if info.type == pafs.FileType.Directory:
         fs.delete_dir_contents(dirpath)

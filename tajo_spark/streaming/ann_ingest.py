@@ -44,13 +44,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tajo_spark import catalog
+from tajo_spark.operators import fsio
 from tajo_spark.operators.similarity import (
     Codec,
     Q8Codec,
-    _as_double,
     bounded_collect,
-    dot,
     ivf_assign,
+    pair_cos,
     probe_targets,
 )
 from tajo_spark.streaming import batch_store
@@ -133,11 +133,9 @@ def ivf_ingest_init(
     against another model — readable beside it."""
     import pyarrow.fs as pafs
 
-    from tajo_spark.sources.avro_py import _fs_for
-
     if (m is None) != (ksub is None):
         raise ValueError("a PQ index needs both m and ksub")
-    fs, root = _fs_for(index_path)  # s3a/s3n scheme bridging
+    fs, root = fsio.resolve(index_path)
     if fs.get_file_info(root).type != pafs.FileType.NotFound:
         fs.delete_dir(root)
     catalog.invalidate(index_path)
@@ -256,23 +254,18 @@ def neardup_gate_batch(
             "neardup_gate_batch probed centroids",
         )
     ]  # metadata-sized: at most the model's k
-    cos8 = lambda cv, cn, qv, qn: F.when(  # noqa: E731
-        cn * qn != 0, dot(cv, qv) / (cn * qn)
-    ).otherwise(F.lit(0.0))
+
+    def cos8(cv, cn, qv, qn):
+        return pair_cos(cv, cn, qv, qn).otherwise(F.lit(0.0))
 
     # Gate A: probe the persisted index, excluding this batch's own
     # partitions (replay safety)
-    idx = (
-        catalog.load_parquet(spark, index_path)
-        .filter(
+    idx = codec.candidates(
+        catalog.load_parquet(spark, index_path).filter(
             F.col("centroid_id").isin(probed)
             & (F.col("__batch_id") != F.lit(batch_id))
         )
-        .select(
-            "centroid_id", _as_double(F.col("q8")).alias("__cv")
-        )
-        .withColumn("__cn", F.sqrt(dot(F.col("__cv"), F.col("__cv"))))
-    )
+    ).drop("vec_id")
     dup_vs_index = (
         idx.join(F.broadcast(probes), "centroid_id")
         .filter(

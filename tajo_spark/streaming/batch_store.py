@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from tajo_spark import catalog
+from tajo_spark.operators import fsio
 
 BASE = -1  # the folded base partition; never a live batch id
 
@@ -83,9 +84,7 @@ def batch_dirs(path: str) -> list[BatchDir]:
     readers fast."""
     import pyarrow.fs as pafs
 
-    from tajo_spark.sources.avro_py import _fs_for
-
-    fs, root = _fs_for(path)  # s3a/s3n scheme bridging
+    fs, root = fsio.resolve(path)
     try:
         infos = fs.get_file_info(pafs.FileSelector(root, recursive=True))
     except FileNotFoundError:
@@ -163,9 +162,7 @@ def fold(
     )
     before = df.count() if verify_counts else -1
     schema = write(df, path, BASE, by=by)
-    from tajo_spark.sources.avro_py import _fs_for
-
-    fs, _ = _fs_for(path)
+    fs, _ = fsio.resolve(path)
     removed = 0
     for d in batch_dirs(path):
         if d.batch_id != BASE and d.batch_id <= upto_batch_id:

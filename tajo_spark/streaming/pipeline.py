@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tajo_spark import catalog
+from tajo_spark.operators import fsio
 from tajo_spark.session import released_checkpoints
 from tajo_spark.streaming import batch_store
 from tajo_spark.streaming.batch_store import cadence_fires
@@ -579,43 +580,6 @@ def shard_export_stream(
     return foreach_batch(docs_stream, process_batch, checkpoint_path)
 
 
-def _list_state_dir(path: str):
-    """Children of a state directory through pyarrow.fs — the seam
-    that makes every probe below work on hdfs://, s3a://, etc., not
-    just the local FS (r11 review: driver-local os.listdir silently
-    reported 'no state' on object stores, which resets sketches,
-    re-admits duplicates through a fresh Bloom filter, and re-dedups
-    against an empty store with no error — the exact ADVICE-r03 bug
-    class already fixed for the shard-export ledger). Missing path →
-    []."""
-    import pyarrow.fs as pafs
-
-    from tajo_spark.sources.avro_py import _fs_for
-
-    fs, p = _fs_for(path)
-    try:
-        return [
-            f
-            for f in fs.get_file_info(pafs.FileSelector(p))
-            if f.type != pafs.FileType.NotFound
-        ]
-    except (FileNotFoundError, OSError):
-        return []
-
-
-def _rm_state_dir(path: str) -> None:
-    """Remove one state subdirectory through pyarrow.fs (the
-    ``shutil.rmtree(..., ignore_errors=True)`` twin that also works on
-    object stores). Missing path is a no-op."""
-    from tajo_spark.sources.avro_py import _fs_for
-
-    fs, p = _fs_for(path)
-    try:
-        fs.delete_dir(p)
-    except (FileNotFoundError, OSError):
-        pass
-
-
 def _versioned_commit(merged: DataFrame, path: str, batch_id: int,
                       keep_prev: bool = True) -> None:
     """The shared versioned-commit tail: write ``v=batch_id``, then
@@ -636,7 +600,7 @@ def _versioned_commit(merged: DataFrame, path: str, batch_id: int,
     floor = batch_id - 1 if keep_prev else batch_id
     for v in _committed_versions(path):
         if v < floor or v > batch_id:
-            _rm_state_dir(_os.path.join(path, f"v={v}"))
+            fsio.delete_dir(_os.path.join(path, f"v={v}"))
 
 
 def _committed_versions(path: str, below: int | None = None) -> list[int]:
@@ -650,11 +614,15 @@ def _committed_versions(path: str, below: int | None = None) -> list[int]:
 
     import pyarrow.fs as pafs
 
-    from tajo_spark.sources.avro_py import _fs_for
-
-    fs, _p = _fs_for(path)
+    # through pyarrow.fs, not os.listdir: a driver-local listing reports
+    # "no state" on an object store, which silently resets the state
+    fs, p = fsio.resolve(path)
+    try:
+        infos = fs.get_file_info(pafs.FileSelector(p))
+    except OSError:  # missing or unreadable: no committed version
+        return []
     out = []
-    for d in _list_state_dir(path):
+    for d in infos:
         if d.type != pafs.FileType.Directory:
             continue
         m = _re.fullmatch(r"v=(\d+)", d.base_name)
@@ -803,6 +771,32 @@ def compact_gate_store(spark, fps_path: str, upto_batch_id: int) -> dict:
     return batch_store.fold(spark, fps_path, upto_batch_id, key=("fp",))
 
 
+def _merged_state_stream(
+    stream_df: DataFrame, path: str, checkpoint: str, build, merge
+):
+    """The :func:`foreach_batch` writer of the cell-additive state
+    streams (CMS, histogram, centroid sums): each micro-batch builds
+    its own state with ``build(batch)``, merges it with
+    ``merge(old, new)`` into the latest version committed STRICTLY
+    below the batch id, and commits ``v=batch_id``
+    (:func:`_versioned_commit`).  Cell addition is not idempotent, so a
+    replayed batch must re-merge from the version it originally merged
+    from — never from its own half-committed version, which would
+    count the batch twice."""
+
+    def process_batch(batch: DataFrame, batch_id: int) -> None:
+        state = build(batch)
+        prior = _committed_versions(path, below=batch_id)
+        if prior:
+            old = batch.sparkSession.read.parquet(
+                os.path.join(path, f"v={prior[-1]}")
+            ).localCheckpoint()
+            state = merge(old, state)
+        _versioned_commit(state, path, batch_id)
+
+    return foreach_batch(stream_df, process_batch, checkpoint)
+
+
 def cms_ingest_stream(
     docs_stream: DataFrame,
     sketch_path: str,
@@ -819,39 +813,22 @@ def cms_ingest_stream(
 
     Durability follows the Bloom gate's versioned-commit pattern
     (``sketch_path/v=N`` + ``_SUCCESS``, read-latest, prune-old): the
-    previous sketch stays intact until the new version commits.
-    NOTE one semantic difference from the Bloom gate: bit_or is
-    idempotent, cell ADDITION is not — so replay safety here comes
-    entirely from the version directory being named by batch_id (a
-    replayed batch re-reads the version it wrote FROM, i.e. v<batch_id
-    is gone only after success, and re-writes its own v=batch_id
-    deterministically).  A replayed batch must therefore merge from the
-    latest version STRICTLY OLDER than itself, which the read below
-    enforces — merging from its own half-committed version would
-    double-count the batch.
+    previous sketch stays intact until the new version commits.  Unlike
+    the gate's idempotent bit_or, cell addition is replay-safe only
+    through :func:`_merged_state_stream`'s merge-from-below rule.
     """
-    import os as _os
-
     from tajo_spark.operators import sketch as _sketch
     from tajo_spark.operators import text as _text
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def build(batch_df: DataFrame) -> DataFrame:
         terms = batch_df.filter(F.col(text_col).isNotNull()).select(
             F.explode(_text.tokens(F.col(text_col))).alias("term")
         ).filter(F.col("term") != "")
-        batch_sketch = _sketch.cms_build(terms)
-        prior = _committed_versions(sketch_path, below=batch_id)
-        if prior:
-            old = spark.read.parquet(
-                _os.path.join(sketch_path, f"v={prior[-1]}")
-            ).localCheckpoint()
-            merged = _sketch.cms_merge(old, batch_sketch)
-        else:
-            merged = batch_sketch
-        _versioned_commit(merged, sketch_path, batch_id)
+        return _sketch.cms_build(terms)
 
-    return foreach_batch(docs_stream, process_batch, checkpoint_path)
+    return _merged_state_stream(
+        docs_stream, sketch_path, checkpoint_path, build, _sketch.cms_merge
+    )
 
 
 def hist_ingest_stream(
@@ -871,33 +848,19 @@ def hist_ingest_stream(
     ingest: frequency).  Quantile queries probe the persisted cells
     (hist_quantiles) without touching any raw data.
 
-    Durability is the CMS pattern verbatim (versioned ``v=N`` commits,
-    read latest STRICTLY OLDER than the current batch, prune stale and
-    orphaned-higher versions after success): cell addition is not
-    idempotent, so replay safety comes from a replayed batch merging
-    from the version it originally merged from and deterministically
-    rewriting its own v=batch_id.
+    Durability and replay safety: :func:`_merged_state_stream`.
     """
-    import os as _os
-
     from tajo_spark.operators import sketch as _sketch
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_hist = _sketch.hist_build(
+    return _merged_state_stream(
+        docs_stream,
+        hist_path,
+        checkpoint_path,
+        lambda batch_df: _sketch.hist_build(
             batch_df, value_col, lo=lo, hi=hi, bins=bins
-        )
-        prior = _committed_versions(hist_path, below=batch_id)
-        if prior:
-            old = spark.read.parquet(
-                _os.path.join(hist_path, f"v={prior[-1]}")
-            ).localCheckpoint()
-            merged = _sketch.hist_merge(old, batch_hist)
-        else:
-            merged = batch_hist
-        _versioned_commit(merged, hist_path, batch_id)
-
-    return foreach_batch(docs_stream, process_batch, checkpoint_path)
+        ),
+        _sketch.hist_merge,
+    )
 
 
 def centroid_ingest_stream(
@@ -919,35 +882,21 @@ def centroid_ingest_stream(
     state equals one batch build over the union BIT FOR BIT (the
     strongest stream≡batch pin in the family).
 
-    Durability is the CMS/histogram pattern verbatim: versioned
-    ``v=N`` commits, merge from the latest version STRICTLY OLDER
-    than the current batch, prune stale and orphaned-higher versions
-    after success — replay-safe despite the non-idempotent addition.
+    Durability and replay safety: :func:`_merged_state_stream`.
     """
-    import os as _os
-
     from tajo_spark.operators.similarity import centroid_component_sums
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_sums = centroid_component_sums(
-            batch_df, label_col, vec_col
-        )
-        prior = _committed_versions(sums_path, below=batch_id)
-        if prior:
-            old = spark.read.parquet(
-                _os.path.join(sums_path, f"v={prior[-1]}")
-            ).localCheckpoint()
-            merged = (
-                old.unionByName(batch_sums)
-                .groupBy("label", "pos")
-                .agg(F.sum("sv").cast("long").alias("sv"))
-            )
-        else:
-            merged = batch_sums
-        _versioned_commit(merged, sums_path, batch_id)
-
-    return foreach_batch(emb_stream, process_batch, checkpoint_path)
+    return _merged_state_stream(
+        emb_stream,
+        sums_path,
+        checkpoint_path,
+        lambda batch_df: centroid_component_sums(batch_df, label_col, vec_col),
+        lambda old, new: (
+            old.unionByName(new)
+            .groupBy("label", "pos")
+            .agg(F.sum("sv").cast("long").alias("sv"))
+        ),
+    )
 
 
 def attrition_stream(

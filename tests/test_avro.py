@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tajo_spark.catalog import load_table
+from tajo_spark.operators import fsio
 from tajo_spark.sources import avro_py
 from tests.conftest import SF_DIR
 
@@ -281,7 +282,7 @@ def test_glob_path_reads_under_auto_default(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         avro_py.read_avro(spark, path + "/nope-*.avro")
     # expansion is metadata-only and sized (split planning needs sizes)
-    fs, p = avro_py._fs_for(path + "/*.avro")
+    fs, p = fsio.resolve(path + "/*.avro")
     files = avro_py._expand_glob(fs, p)
     assert files and all(sz > 0 for _f, sz in files)
     # glob semantics: '*' never crosses '/' — a decoy one level down
@@ -291,9 +292,9 @@ def test_glob_path_reads_under_auto_default(spark, tmp_path):
     sub = path + "/deeper"
     os.makedirs(sub, exist_ok=True)
     shutil.copy(glob_mod.glob(path + "/*.avro")[0], sub + "/decoy.avro")
-    deeper = {f for f, _ in avro_py._expand_glob(*avro_py._fs_for(path + "/*.avro"))}
+    deeper = {f for f, _ in avro_py._expand_glob(*fsio.resolve(path + "/*.avro"))}
     assert not any("deeper" in f for f in deeper)
-    assert avro_py._expand_glob(*avro_py._fs_for(path + "/*/decoy.avro"))
+    assert avro_py._expand_glob(*fsio.resolve(path + "/*/decoy.avro"))
     # ADVICE r10: a glob in the first path segment has no non-glob
     # parent — must return [] rather than fall back to listing the
     # filesystem root (object-store bucket listing / huge local walk)

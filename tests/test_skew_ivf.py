@@ -754,3 +754,53 @@ def test_dense_id_precondition_raises_in_plan(spark):
     rows = sim.seeded_cluster_assign(ok, n_seeds=2).collect()
     assert len(rows) == 3
     assert all(r.cluster_id is not None for r in rows)
+
+
+# anchors 0 and 1 are the same vector, row 3 is all zeros
+_TIE_ROWS = [
+    (0, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0]),
+    (3, [0.0, 0.0]), (4, [0.9, 0.1]),
+]
+
+
+def _ivf_probed_rows(emb):
+    # the query ties between centroids 0 and 1 and probes only one, so
+    # the rows it retrieves are the members of the centroid it chose
+    q = emb.filter("vec_id = 0").select(F.col("vec_id").alias("q_id"), "embedding")
+    return {
+        r.vec_id: 0
+        for r in sim.ann_join_ivf(q, emb, k=5, n_centroids=3, nprobe=1).collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "assign",
+    [
+        lambda emb: {
+            r.vec_id: r.cluster_id
+            for r in sim.seeded_cluster_assign(emb, n_seeds=3).collect()
+        },
+        lambda emb: {
+            r.vec_id: r.cluster_id
+            for r in sim.seeded_cluster_assign_two_level(emb, n_seeds=3).collect()
+        },
+        _ivf_probed_rows,
+    ],
+    ids=["flat", "two_level", "ann_join_ivf"],
+)
+def test_anchor_ties_and_zero_norm_go_to_lowest_anchor(spark, assign):
+    """The scoring rule every anchor assignment shares: an exact tie
+    between anchors goes to the lower id, and a zero-norm row (every
+    cosine −2) lands on anchor 0 instead of raising or going NULL."""
+    emb = spark.createDataFrame(_TIE_ROWS, "vec_id LONG, embedding ARRAY<DOUBLE>")
+    got = assign(emb)
+    assert {i: got.get(i) for i in (0, 1, 3, 4)} == {0: 0, 1: 0, 3: 0, 4: 0}
+
+
+def test_ann_join_ranks_equal_cosines_by_lower_id(spark):
+    emb = spark.createDataFrame(_TIE_ROWS, "vec_id LONG, embedding ARRAY<DOUBLE>")
+    q = spark.createDataFrame([(7, [2.0, 0.0])], "q_id LONG, embedding ARRAY<DOUBLE>")
+    got = [(r.rank, r.vec_id, r.cos) for r in sim.ann_join(q, emb, k=5).collect()]
+    assert sorted(got) == [
+        (1, 0, 1.0), (2, 1, 1.0), (3, 4, 0.9939), (4, 2, 0.0), (5, 3, -2.0)
+    ]
