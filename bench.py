@@ -338,9 +338,14 @@ def main() -> None:
     # "parsed": null — the tail started mid-dict).  Budget breaches are
     # counted against perf_budgets.json (the machine-readable mirror of
     # PERF_BUDGET.md's tracked rows).
+    # The same record also goes to bench_results_c{cores}.json, so a
+    # run at one core count keeps the record of a run at another;
+    # tools/sf1_spotbench.py reads bench_results.json.
     here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "bench_results.json"), "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
+    cores = spark.sparkContext.defaultParallelism
+    for name in ("bench_results.json", f"bench_results_c{cores}.json"):
+        with open(os.path.join(here, name), "w") as f:
+            json.dump(full, f, indent=1, sort_keys=True)
     breaches = []
     host_factor = 1.0
     factor_suspect = False

@@ -16,9 +16,13 @@ materialized at registration time.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
+from types import SimpleNamespace
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -62,9 +66,27 @@ _PATH_MEMO: dict[tuple[str, str], DataFrame] = {}
 _PATH_SCHEMA: dict[str, StructType] = {}
 
 
+@functools.lru_cache(maxsize=1)
+def _jvm_classes(gateway) -> SimpleNamespace:
+    """The JVM classes :func:`parquet_schema` calls, resolved once per
+    gateway: py4j resolves a dotted class name with one round trip per
+    name segment."""
+    jvm = gateway.jvm
+    sources = jvm.org.apache.spark.sql.execution.datasources
+    return SimpleNamespace(
+        Path=jvm.org.apache.hadoop.fs.Path,
+        Collections=jvm.java.util.Collections,
+        seqs=jvm.scala.jdk.javaapi.CollectionConverters,
+        parquet=getattr(getattr(sources.parquet, "ParquetFileFormat$"),
+                        "MODULE$"),
+        partitioning=sources.PartitioningUtils,
+    )
+
+
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """The schema ``spark.read.parquet(path)`` infers, read from one
-    footer on the driver — no Spark job.
+    footer on the driver — no Spark job, and a fixed number of JVM
+    calls whatever the file count.
 
     Spark's non-merging inference (``ParquetUtils.inferSchema``) runs a
     one-task job that reads a single footer: the file itself for a file
@@ -76,51 +98,51 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     Spark row-metadata key).  A directory's files and partition columns
     come from Spark's own file index, built under an empty schema so it
     lists and discovers partitions but infers nothing; partition
-    columns are merged in as ``HadoopFsRelation`` does.  A footer that
+    columns are merged in as ``HadoopFsRelation`` does.  The footer is
+    picked on the JVM side: a root-level ``_common_metadata``, then a
+    root-level ``_metadata``, then the least path of the listing.
+    Spark's writers put summary files only at the root; one nested
+    below a partition directory is not looked for.  A footer that
     cannot be read raises, as the inference job does."""
-    jvm, jss = spark._jvm, spark._jsparkSession
-    conf = jss.sessionState().newHadoopConf()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    status = root.getFileSystem(conf).getFileStatus(root)
-    seqs = jvm.scala.jdk.javaapi.CollectionConverters
-    if status.isDirectory():
+    jvm, jss = _jvm_classes(spark.sparkContext._gateway), spark._jsparkSession
+    state = jss.sessionState()
+    conf = state.newHadoopConf()
+    root = jvm.Path(path)
+    fs = root.getFileSystem(conf)
+    touch = fs.getFileStatus(root)
+    relation = None
+    if touch.isDirectory():
         relation = (
             spark.read.schema(StructType()).parquet(path)
             ._jdf.logicalPlan().relation()
         )
-        files = sorted(
-            seqs.asJava(relation.location().allFiles()),
-            key=lambda f: f.getPath().toString(),
-        )
-        named = {n: [f for f in files if f.getPath().getName() == n]
-                 for n in ("_common_metadata", "_metadata")}
-        touch = (
-            named["_common_metadata"] or named["_metadata"]
-            or [f for f in files if f.getPath().getName() not in named]
-        )
-        if not touch:
-            raise FileNotFoundError(f"no parquet files under {path}")
-        partitions = relation.partitionSchema()
-    else:
-        touch = [status]
-        partitions = jvm.org.apache.spark.sql.types.StructType()
-    parquet = getattr(
-        getattr(
-            jvm.org.apache.spark.sql.execution.datasources.parquet,
-            "ParquetFileFormat$",
-        ),
-        "MODULE$",
+        touch = _summary_file(jvm, fs, root)
+        if touch is None:
+            files = relation.location().allFiles()
+            if files.isEmpty():
+                raise FileNotFoundError(f"no parquet files under {path}")
+            touch = jvm.Collections.min(jvm.seqs.asJava(files))
+    footers = jvm.parquet.readParquetFootersInParallel(
+        conf, jvm.seqs.asScala(jvm.Collections.singletonList(touch)).toSeq(),
+        False,
     )
-    footers = parquet.readParquetFootersInParallel(
-        conf, seqs.asScala(touch[:1]).toSeq(), False
-    )
-    data_schema = parquet.readSchema(footers, jss).get().asNullable()
-    full = jvm.org.apache.spark.sql.execution.datasources.PartitioningUtils \
-        .mergeDataAndPartitionSchema(
-            data_schema, partitions,
-            jss.sessionState().conf().caseSensitiveAnalysis(),
+    schema = jvm.parquet.readSchema(footers, jss).get().asNullable()
+    if relation is not None:
+        schema = jvm.partitioning.mergeDataAndPartitionSchema(
+            schema, relation.partitionSchema(),
+            state.conf().caseSensitiveAnalysis(),
         )._1()
-    return StructType.fromJson(json.loads(full.json()))
+    return StructType.fromJson(json.loads(schema.json()))
+
+
+def _summary_file(jvm: SimpleNamespace, fs, root):
+    """The status of ``root``'s summary file, ``_common_metadata`` first,
+    or None."""
+    for name in ("_common_metadata", "_metadata"):
+        summary = jvm.Path(root, name)
+        if fs.exists(summary):
+            return fs.getFileStatus(summary)
+    return None
 
 
 def _load(spark: SparkSession, path: str, events: bool = False) -> DataFrame:
@@ -130,8 +152,10 @@ def _load(spark: SparkSession, path: str, events: bool = False) -> DataFrame:
     memo = _PATH_MEMO.get(key)
     if memo is not None:
         return memo
-    for k in [k for k in _PATH_MEMO if k[0] != app]:
-        del _PATH_MEMO[k]  # frames of stopped sessions are invalid
+    # frames of stopped sessions are invalid.  A snapshot and pop, as
+    # register_tables' workers run this concurrently with inserts
+    for k in [k for k in list(_PATH_MEMO) if k[0] != app]:
+        _PATH_MEMO.pop(k, None)
     schema = _PATH_SCHEMA.get(rp)
     if schema is None:
         schema = parquet_schema(spark, path)
@@ -207,13 +231,22 @@ def invalidate(path: str, schema: StructType | None = None) -> None:
 def register_tables(
     spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:
-    """Register each parquet table as a temp view; return the frames."""
-    out: dict[str, DataFrame] = {}
-    for name in tables:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
+    """Register each parquet table as a temp view; return the frames.
+
+    Binding a table is a fixed number of driver calls to the JVM, which
+    wait on round trips, so the tables bind concurrently, one worker
+    each.  The workers inherit the caller's job group and tags, so any
+    job they submit is the caller's.  A single table binds inline."""
+    names = [n for n in tables
+             if os.path.exists(os.path.join(sf_dir, f"{n}.parquet"))]
+
+    def bind(name: str) -> DataFrame:
         df = load_table(spark, sf_dir, name)
         df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
+        return df
+
+    if len(names) <= 1:
+        return {n: bind(n) for n in names}
+    with ThreadPoolExecutor(len(names)) as pool:
+        frames = pool.map(inheritable_thread_target(spark)(bind), names)
+        return dict(zip(names, frames))

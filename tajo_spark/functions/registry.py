@@ -176,7 +176,9 @@ def pg_format_to_java(fmt: str) -> str:
 
 
 def register_all(spark: SparkSession) -> list[str]:
-    """Register every parity function on the session (idempotent).
+    """Register every parity function on the session (idempotent), in
+    one SQL-script statement that defines them in ``SQL_FUNCTIONS``
+    order, so a body may call a function defined above it.
 
     ``to_char(ts, fmt)`` and ``div(a, b)`` need no registration: Spark 4
     ships both natively (to_char takes Java datetime patterns — the
@@ -185,11 +187,23 @@ def register_all(spark: SparkSession) -> list[str]:
     aggregate twins are registered by the mixed-UDAF fallback itself,
     on the first statement that needs them (agg_fallback.register_twins).
     """
-    names = []
-    for name, (sig, ret, body) in SQL_FUNCTIONS.items():
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({sig}) "
-            f"RETURNS {ret} RETURN {body}"
-        )
-        names.append(name)
-    return names
+    definitions = [
+        f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({sig}) "
+        f"RETURNS {ret} RETURN {body};"
+        for name, (sig, ret, body) in SQL_FUNCTIONS.items()
+    ]
+    try:
+        spark.sql("BEGIN\n" + "\n".join(definitions) + "\nEND")
+    except Exception:
+        # the script's error does not say which definition failed; the
+        # definitions are idempotent, so re-issue them one by one to
+        # name it
+        for name, definition in zip(SQL_FUNCTIONS, definitions):
+            try:
+                spark.sql(definition.rstrip(";"))
+            except Exception as exc:
+                raise RuntimeError(
+                    f"SQL function {name} does not register: {exc}"
+                ) from exc
+        raise
+    return list(SQL_FUNCTIONS)

@@ -43,6 +43,27 @@ NUM_BANDS = 4          # LSH bands (2 hashes per band)
 _SPREAD_PROBE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
+def _input_file_count(df: DataFrame) -> int:
+    """The number of files ``df`` reads, 0 for a non-file source, in two
+    py4j round trips at any file count (the array and its length).
+    ``df.inputFiles()`` would cost one round trip per file: it copies
+    the array into a Python list.  The count is cached per DataFrame
+    object: the memoized load_table frames are probed by every
+    shingle/minhash consumer in a 100+-query bench process."""
+    cached = _SPREAD_PROBE.get(df)
+    if cached is not None:
+        return cached
+    try:
+        n_inputs = len(df._jdf.inputFiles())
+    except Exception:
+        n_inputs = 0
+    try:
+        _SPREAD_PROBE[df] = n_inputs
+    except TypeError:
+        pass  # un-weakref-able frame: skip caching
+    return n_inputs
+
+
 def spread_by(df: DataFrame, *keys: str) -> DataFrame:
     """Hash-repartition on ``keys`` iff the input has fewer partitions
     than the cluster has cores.
@@ -54,29 +75,14 @@ def spread_by(df: DataFrame, *keys: str) -> DataFrame:
     same keys, the exchange *replaces* the aggregate's shuffle instead of
     adding one (Spark reuses the hash partitioning).
     """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     # probe input width via the file listing (milliseconds). For
     # non-file sources (in-memory frames) repartition unconditionally:
     # converting the frame to an RDD just to count partitions costs
     # ~1s of plan translation per call — far more than the exchange it
     # might save on a frame small enough to be in memory, and at real
-    # scale every input is file-backed anyway.  The probe result is
-    # cached per DataFrame object (r12: inputFiles() is a ~40 ms py4j
-    # round trip, and the memoized load_table frames are probed by
-    # every shingle/minhash consumer in a 100+-query bench process).
-    cached = _SPREAD_PROBE.get(df)
-    if cached is not None:
-        n_inputs = cached
-    else:
-        try:
-            n_inputs = len(df.inputFiles())
-        except Exception:
-            n_inputs = 0
-        try:
-            _SPREAD_PROBE[df] = n_inputs
-        except TypeError:
-            pass  # un-weakref-able frame: skip caching
+    # scale every input is file-backed anyway.
+    n_inputs = _input_file_count(df)
     if n_inputs == 0 or n_inputs < target:
         return df.repartition(target, *[F.col(k) for k in keys])
     return df

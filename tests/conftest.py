@@ -13,11 +13,13 @@ from types import SimpleNamespace
 import duckdb
 import pandas as pd
 import pytest
+from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
 
 from tajo_spark.catalog import TABLES
 from tajo_spark.session import build_spark
 
 SF_DIR = os.environ.get("TAJO_SPARK_TEST_SF", "/root/testdata/sf0.001")
+_RELEASE = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
 
 
 @pytest.fixture(scope="session")
@@ -52,19 +54,24 @@ def jobs_of(spark, group, fn):
 
 
 @contextmanager
-def py4j_round_trips(spark):
-    """Count the py4j round trips this thread makes inside the block;
-    yields a namespace whose ``count`` holds the total so far.  Counts
-    are exact and repeatable for one PySpark version: building a
-    Column or a DataFrame is a fixed sequence of gateway calls."""
+def py4j_round_trips(spark, all_threads=False):
+    """Count the py4j round trips this thread makes inside the block,
+    or with ``all_threads`` those of every thread; yields a namespace
+    whose ``count`` holds the total so far.  Counts are exact and
+    repeatable for one PySpark version: building a Column or a
+    DataFrame is a fixed sequence of gateway calls.  Releases of JVM
+    objects Python freed are not counted: py4j sends them from its own
+    thread whenever the garbage collector runs."""
     client = spark.sparkContext._gateway._gateway_client
     send, me = client.send_command, threading.get_ident()
-    trips = SimpleNamespace(count=0)
+    trips, lock = SimpleNamespace(count=0), threading.Lock()
 
-    def counted(*args, **kwargs):
-        if threading.get_ident() == me:
-            trips.count += 1
-        return send(*args, **kwargs)
+    def counted(command, *args, **kwargs):
+        if (all_threads or threading.get_ident() == me) \
+                and not command.startswith(_RELEASE):
+            with lock:
+                trips.count += 1
+        return send(command, *args, **kwargs)
 
     client.send_command = counted
     try:

@@ -1,18 +1,20 @@
 """Job-free catalog bootstrap: table and index schemas come from one
 parquet footer read on the driver (catalog.parquet_schema), equal to
 what Spark's schema-inference job returns, and registering the tables
-submits no Spark job."""
+submits no Spark job.  Both cost a fixed number of py4j round trips:
+per table, whatever its file count."""
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from tajo_spark import catalog
 from tajo_spark.streaming import batch_store
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, py4j_round_trips
 
 
 pytestmark = pytest.mark.usefixtures("clean_catalog_memos")
@@ -57,6 +59,107 @@ def test_register_tables_submits_no_job(spark):
     assert spark.table("nation").count() == spark.read.parquet(
         os.path.join(SF_DIR, "nation.parquet")
     ).count()
+
+
+def test_register_tables_counts_jobs_of_its_workers(spark, monkeypatch):
+    # negative control for the test above: the tables bind on worker
+    # threads, and a job one of them submits is still the caller's, so
+    # a zero there is not a job submitted out of sight
+    monkeypatch.setattr(
+        catalog, "parquet_schema",
+        lambda spark, path: spark.read.parquet(path).schema,
+    )
+    frames, jobs = _job_count(
+        spark, "catalog_register_inferred",
+        lambda: catalog.register_tables(spark, SF_DIR),
+    )
+    assert sorted(frames) == sorted(catalog.TABLES)
+    assert jobs > 0
+
+
+def _write_files(d, n):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d.mkdir()
+    for i in range(n):
+        pq.write_table(pa.table({"a": pa.array([i], pa.int64())}),
+                       str(d / f"part-{i:05d}.parquet"))
+    return str(d)
+
+
+def test_footer_schema_round_trips_do_not_grow_with_file_count(
+    spark, tmp_path
+):
+    one, many = _write_files(tmp_path / "one", 1), \
+        _write_files(tmp_path / "many", 400)
+    catalog.parquet_schema(spark, one)  # JVM classes resolved once
+    trips = []
+    for path in (one, many):
+        with py4j_round_trips(spark) as t:
+            catalog.parquet_schema(spark, path)
+        trips.append(t.count)
+        _assert_inferred(spark, path)
+    assert trips[0] == trips[1]
+
+
+@pytest.fixture()
+def table_copies(spark, tmp_path):
+    """Ten tables that are copies of nation: (sf dir, table names)."""
+    names = tuple(f"rt_copy_{i}" for i in range(10))
+    for name in names:
+        shutil.copy(os.path.join(SF_DIR, "nation.parquet"),
+                    tmp_path / f"{name}.parquet")
+    yield str(tmp_path), names
+    for name in names:
+        spark.catalog.dropTempView(name)
+
+
+def test_register_tables_round_trips_are_constant_per_table(
+    spark, table_copies
+):
+    # one table binds inline, several on workers, and each table costs
+    # the same round trips however many bind
+    sf_dir, names = table_copies
+
+    def trips(n):
+        catalog.invalidate(sf_dir)
+        with py4j_round_trips(spark, all_threads=True) as t:
+            assert len(catalog.register_tables(spark, sf_dir, names[:n])) == n
+        return t.count
+
+    trips(2)  # JVM classes resolved once
+    one, two, six, ten = trips(1), trips(2), trips(6), trips(10)
+    per_worker = (ten - six) // 4
+    assert ten - six == six - two == 4 * per_worker
+    # a worker pays the inline cost plus six: two to take on the
+    # caller's job group, four to make the session active on its thread
+    assert per_worker == one + 6
+
+
+def test_register_tables_workers_share_the_memo_safely(spark, table_copies):
+    # every worker prunes the frames of a stopped session and inserts
+    # its own into the one plan memo; with a tiny switch interval an
+    # unsafe interleaving raises or loses an entry
+    import sys
+
+    sf_dir, names = table_copies
+    app = spark.sparkContext.applicationId
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(5):
+            catalog.invalidate(sf_dir)
+            for i in range(500):
+                catalog._PATH_MEMO[("stopped-app", f"/stale/{i}")] = None
+            frames = catalog.register_tables(spark, sf_dir, names)
+            assert sorted(frames) == sorted(names)
+            assert sorted(catalog._PATH_MEMO) == sorted(
+                (app, os.path.realpath(os.path.join(sf_dir, f"{n}.parquet")))
+                for n in names
+            )
+    finally:
+        sys.setswitchinterval(interval)
 
 
 def test_footer_schema_honours_nanos_as_long(spark, tmp_path):
@@ -124,6 +227,22 @@ def test_footer_schema_prefers_a_summary_file(spark, tmp_path):
                       str(d / "_common_metadata"))
     _assert_inferred(spark, str(d))
     assert catalog.parquet_schema(spark, str(d)).fieldNames() == ["a", "b"]
+
+
+def test_footer_schema_reads_the_least_path_by_string_order(
+    spark, tmp_path
+):
+    # with no summary file Spark reads the first data file by path
+    # string: k=10 sorts before k=2, so its wider footer decides
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "least"
+    for k, cols in (("2", {"a": [1]}), ("10", {"a": [2], "b": ["x"]})):
+        (d / f"k={k}").mkdir(parents=True)
+        pq.write_table(pa.table(cols), str(d / f"k={k}" / "part-0.parquet"))
+    _assert_inferred(spark, str(d))
+    assert catalog.parquet_schema(spark, str(d)).fieldNames() == ["a", "b", "k"]
 
 
 def test_unreadable_footer_raises(spark, tmp_path):

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 
 from tajo_spark.engine import Engine
+from tajo_spark.functions import registry
 
 
 @pytest.fixture(scope="module")
@@ -181,6 +182,42 @@ def test_geoip_stub_surface(eng):
         "inet_ntoa(16909060)",
     ]:
         assert _run(eng, expr) is not None, expr
+
+
+def test_register_all_defines_every_function_in_one_statement(
+    spark, monkeypatch
+):
+    for name in registry.SQL_FUNCTIONS:
+        spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
+    statements = []
+    sql = spark.sql
+    monkeypatch.setattr(
+        spark, "sql", lambda q, *a, **k: statements.append(q) or sql(q, *a, **k)
+    )
+    assert registry.register_all(spark) == list(registry.SQL_FUNCTIONS)
+    assert len(statements) == 1
+    monkeypatch.undo()
+    for name in registry.SQL_FUNCTIONS:
+        assert spark.catalog.functionExists(name), name
+    # geoip_in_country calls geoip_country_code, defined above it
+    row = spark.sql(
+        "SELECT strposb('héllo', 'l') AS bpos, "
+        "geoip_in_country('1.2.3.4', 'ZZ') AS in_cc, "
+        "inet_ntoa(inet_aton('10.1.2.3')) AS ip, "
+        """json_extract_path_text('{"k": {"j": 7}}', 'k', 'j') AS js"""
+    ).first()
+    assert (row.bpos, row.in_cc, row.ip, row.js) == (4, True, "10.1.2.3", "7")
+
+
+@pytest.mark.parametrize("body", ["no_such_function(x)", "lower(hex(x)"])
+def test_a_failing_definition_names_its_function(spark, monkeypatch, body):
+    # an unknown function (analysis error) or a syntax error in one body
+    monkeypatch.setitem(registry.SQL_FUNCTIONS, "to_hex",
+                        ("x BIGINT", "STRING", body))
+    with pytest.raises(RuntimeError, match="SQL function to_hex "):
+        registry.register_all(spark)
+    monkeypatch.undo()
+    registry.register_all(spark)
 
 
 def test_geoip_prefix_table_broadcast_join(spark):

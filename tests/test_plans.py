@@ -21,7 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tajo_spark.catalog import load_table
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, py4j_round_trips
 
 
 from tajo_spark.plans.inspect import formatted_plan as plan_of
@@ -103,6 +103,29 @@ def test_minhash_computes_signatures_once(spark):
     # bucket-group formulation: exactly one scan of documents, one
     # signature pipeline — a self-join would show two parquet scans
     assert final.count("Scan parquet") == 1
+
+
+def test_spread_by_file_probe_round_trips_do_not_grow_with_files(
+    spark, tmp_path
+):
+    # spread_by counts a frame's input files to decide on a repartition:
+    # the array and its length, however many files
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tajo_spark.operators.dedup import _input_file_count
+
+    trips = []
+    for n in (1, 50):
+        d = tmp_path / f"files_{n}"
+        d.mkdir()
+        for i in range(n):
+            pq.write_table(pa.table({"k": [i]}), str(d / f"part-{i:03d}.parquet"))
+        df = spark.read.parquet(str(d))
+        with py4j_round_trips(spark) as t:
+            assert _input_file_count(df) == n
+        trips.append(t.count)
+    assert trips == [2, 2]
 
 
 def test_cosine_topk_has_no_shuffle_join(spark):
